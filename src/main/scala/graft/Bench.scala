@@ -1,27 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // the status listener retains jobs/stages/executions even with the
-      // UI off; at 269 entries × 2 passes the defaults (1000 each) hold
-      // tens of thousands of task wrappers on the old-gen heap — cap them
-      // so late queries aren't measured under early queries' GC debt
-      .config("spark.ui.retainedJobs", "50")
-      .config("spark.ui.retainedStages", "50")
-      .config("spark.ui.retainedTasks", "500")
-      .config("spark.sql.ui.retainedExecutions", "20")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the production session (GraftSession), so the bench times the
+    // config the gateway serves from
+    val spark = graft.core.GraftSession.build(s"local[$cpus]", "graft-bench", cpus.toInt)
     // Drift canary (r12 verdict task 4): the box runs monotonically
     // slower with uptime (198.8→220.0 s across five same-jar r12 runs,
     // SCALE.md), poisoning round-over-round absolute comparisons. A
@@ -48,28 +33,8 @@ object Bench {
     val only: Set[String] = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet).getOrElse(Set.empty)
     def pass(): Map[String, Double] =
-      SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (name, _) => only.isEmpty || only(name) }
-        .map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        // r15 measurement hygiene (§1, ASV-style steady state): the
-        // iterative graph entries spiked 2-3× IN-CATALOG while flat in
-        // isolation (g4 2.4→6.3 s mid-run vs 1.5 s solo) — broadcast/
-        // RDD refs from earlier entries are only reclaimed after a
-        // driver GC, so late entries ran under early entries' debt. A
-        // periodic-GC timer (2min) was A/B'd first and REJECTED: it
-        // normalizes the graph family but lands its pauses INSIDE
-        // whichever entry is running (mm5 1.9→3.6/4.6 s across two
-        // runs). An explicit GC BETWEEN queries pays the same cost in
-        // untimed gaps instead, so no entry is measured under another's
-        // garbage or under the collector itself. The timed action and
-        // per-query methodology are unchanged.
-        System.gc()
-        name -> dt
-      }.toMap
+      timeEntries(spark, sfDir, SparkEntry.queries.toSeq.sortBy(_._1)
+        .filter { case (name, _) => only.isEmpty || only(name) })
     val p1 = pass()
     val p2 = pass()
     val results = p1.map { case (k, v) => k -> math.min(v, p2(k)) }
@@ -91,8 +56,8 @@ object Bench {
     // Zero-data twin floor measured IN-RUN under this session's confs
     // (r12 verdict task 4): the 40-twin streaming subtotal is also
     // reported as a ratio over (floor × n_twins) — the achievable
-    // lower bound at this engine's fixed per-twin costs (TwinFloorBench
-    // measured 0.84–0.95 s warm in r12; SCALE.md). A subtotal drifting
+    // lower bound at this engine's fixed per-twin costs (a dedicated-JVM
+    // floor measured 0.84–0.95 s warm in r12; SCALE.md). A subtotal drifting
     // with the box while its floor-ratio holds ~constant is drift, not
     // regression.
     val twinNames = StreamingQueries.all.keySet
@@ -187,6 +152,35 @@ object Bench {
     graft.core.Scratch.sweep()
   }
 
+  /** One timed pass over `entries`: seconds per entry, or -1.0 for an
+    * entry that throws, so a failure is never summed into a total
+    * (every consumer of these maps keeps only values > 0).
+    */
+  private[graft] def timeEntries(
+      spark: SparkSession,
+      sfDir: String,
+      entries: Seq[(String, (SparkSession, String) => DataFrame)]): Map[String, Double] =
+    entries.map { case (name, fn) =>
+      val t0 = System.nanoTime()
+      val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
+      val dt = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+      spark.catalog.clearCache()
+      // r15 measurement hygiene (§1, ASV-style steady state): the
+      // iterative graph entries spiked 2-3× IN-CATALOG while flat in
+      // isolation (g4 2.4→6.3 s mid-run vs 1.5 s solo) — broadcast/
+      // RDD refs from earlier entries are only reclaimed after a
+      // driver GC, so late entries ran under early entries' debt. A
+      // periodic-GC timer (2min) was A/B'd first and REJECTED: it
+      // normalizes the graph family but lands its pauses INSIDE
+      // whichever entry is running (mm5 1.9→3.6/4.6 s across two
+      // runs). An explicit GC BETWEEN queries pays the same cost in
+      // untimed gaps instead, so no entry is measured under another's
+      // garbage or under the collector itself. The timed action and
+      // per-query methodology are unchanged.
+      System.gc()
+      name -> dt
+    }.toMap
+
   /** Fixed synthetic drift canary: 10M-row range → keyed sum → top-100,
     * pure compute (no I/O, no shuffle files beyond one exchange, no
     * dependence on catalog size or sfDir). Identical work every round,
@@ -206,8 +200,9 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
-  /** One zero-data streaming twin — the TwinFloorBench rep shape
-    * (100-row/2-batch last-by-key, memory sink, gate checkpoint dir) —
+  /** One zero-data streaming twin (100-row/2-batch last-by-key, memory
+    * sink, gate checkpoint dir; the dedicated-JVM floor it stands in for
+    * is in SCALE.md "The streaming-subtotal floor, proven") —
     * run under THIS session's confs so the measured floor is the one
     * the in-run streaming subtotal actually paid per twin. */
   private def twinFloorRep(spark: SparkSession): Double = {
@@ -220,19 +215,23 @@ object Bench {
       new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
         Array[Any](i.toLong % 10, i.toLong), schema): Row
     }
-    // match runStream's gate confs (r15: pollingDelay 1 ms) so the
-    // floor measures the same per-twin fixed cost the twins actually
-    // pay — a floor at Spark's 10 ms default would overstate the ratio
+    // match runStream's gate confs (r15: pollingDelay 1 ms; the
+    // in-memory state store, not the session's RocksDB) so the floor
+    // measures the same per-twin fixed cost the twins actually pay — a
+    // floor at Spark's 10 ms default would overstate the ratio
     val pollKey = "spark.sql.streaming.pollingDelay"
     val prevPoll = spark.conf.getOption(pollKey)
+    val provKey = "spark.sql.streaming.stateStore.providerClass"
+    val prevProv = spark.conf.get(provKey)
     val name = s"bench_twin_floor_${System.nanoTime()}"
     val t0 = System.nanoTime()
     // conf mutation INSIDE the try (advisor r15): a throw during
     // MemoryStream/query construction must not leak the gate polling
     // conf into the session
     try {
-      spark.conf.set(pollKey,
-        sys.env.getOrElse("GRAFT_GATE_POLLING_MS", "1") + "ms")
+      spark.conf.set(pollKey, s"${StreamingQueries.GatePollingMs}ms")
+      spark.conf.set(provKey,
+        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
       val stream = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Row](
         Encoders.row(schema), sqlCtx)
       val out = graft.streaming.StreamingState.lastByKeyStream(
@@ -250,6 +249,7 @@ object Bench {
         case Some(v) => spark.conf.set(pollKey, v)
         case None    => spark.conf.unset(pollKey)
       }
+      spark.conf.set(provKey, prevProv)
     }
     val n = spark.table(name).count()
     require(n == 20, s"floor twin saw $n update rows")
@@ -314,14 +314,13 @@ object Bench {
     * shape) through the distributed streaming state store in 10
     * micro-batches; seconds to fully accumulate last-per-key.
     *
-    * `statePartitions` defaults to 8 — sized to key cardinality: the
-    * conf is frozen into the checkpoint at the first batch, and every
-    * extra partition costs a state-store commit per micro-batch (at 32
-    * the 10-batch run pays 320 commits for 100 keys; A/B'd by
-    * [[graft.tools.InsertBenchAB]], which calls this same harness).
+    * 8 state partitions — sized to key cardinality: the conf is frozen
+    * into the checkpoint at the first batch, and every extra partition
+    * costs a state-store commit per micro-batch (at 32 the 10-batch run
+    * pays 320 commits for 100 keys; a one-JVM A/B of this harness at
+    * 32/8/4 partitions put 8 ~25% under 32, recorded in commit cf03997).
     */
-  private[graft] def stateInsertBench(
-      spark: SparkSession, statePartitions: Int = 8): Double = {
+  private def stateInsertBench(spark: SparkSession): Double = {
     import org.apache.spark.sql.{Encoders, Row}
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(
@@ -335,7 +334,7 @@ object Bench {
     val stream = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Row](
       Encoders.row(schema), sqlCtx)
     val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
     val out = graft.streaming.StreamingState.lastByKeyStream(stream.toDF(), Seq("k"), "_seq")
     val q = out.writeStream.format("memory")
       .queryName(s"bench_state_insert_${System.nanoTime()}")

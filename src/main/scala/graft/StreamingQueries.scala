@@ -101,9 +101,15 @@ object StreamingQueries {
     * d1s first-arrival dedup, a9s windowed agg, a11s session merge +
     * watermark flush, st7s incremental profile merge) stay at 3 so a
     * merge bug that only shows past the second boundary still has
-    * gate coverage. `GRAFT_GATE_TICKS` overrides everything for A/Bs.
+    * gate coverage.
     */
   private[graft] val GateTicks = 2
+
+  /** Gate state partitions; the measurement is at [[runStream]]. */
+  private val GatePartitions = 4
+
+  /** Gate trigger polling delay in ms; the A/B is at [[runStream]]. */
+  private[graft] val GatePollingMs = 1
 
   private def collectFeed(df: DataFrame, orderCol: String): Array[Row] = {
     val plan = df.queryExecution.analyzed.canonicalized
@@ -139,25 +145,11 @@ object StreamingQueries {
       ticks: Int,
       flush: Seq[Row] = Nil,
       pollingMs: Option[Int] = None)(op: Seq[DataFrame] => DataFrame): (DataFrame, String) = {
-    // tick-count override for overhead A/Bs (results are tick-count
-    // independent by the streaming-parity contract — every entry's
-    // final state equals its batch twin regardless of how the feed is
-    // sliced; cross-batch carry needs >= 2 ticks)
-    val nTicks = math.max(2,
-      sys.env.get("GRAFT_GATE_TICKS").map(_.toInt).getOrElse(ticks))
+    // cross-batch carry needs >= 2 ticks
+    val nTicks = math.max(2, ticks)
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val profile = sys.env.contains("GRAFT_GATE_PROFILE")
-    def probe[T](label: String)(f: => T): T =
-      if (!profile) f
-      else {
-        val t0 = System.nanoTime()
-        val r = f
-        Console.err.println(
-          f"[gate-profile] $label%-12s ${(System.nanoTime() - t0) / 1e9}%.3f s")
-        r
-      }
     val feeds = sources.map { case (df, orderCol) =>
-      val rows: Array[Row] = probe("feed")(collectFeed(df, orderCol))
+      val rows: Array[Row] = collectFeed(df, orderCol)
       val stream = MemoryStream[Row](Encoders.row(df.schema), sqlCtx)
       (stream, rows)
     }
@@ -185,8 +177,7 @@ object StreamingQueries {
     // (32-partition canary).
     val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions",
-      gatePartitionsOverride.map(_.toString)
-        .getOrElse(sys.env.getOrElse("GRAFT_GATE_PARTITIONS", "4")))
+      gatePartitionsOverride.getOrElse(GatePartitions).toString)
     // gate state is a few KB: the per-partition RocksDB instance
     // spin-up + per-commit snapshot upload that makes RocksDB right at
     // 100 TB key cardinality is pure fixed cost here, so gate runs use
@@ -221,12 +212,10 @@ object StreamingQueries {
     // tick pays scheduler naps; at 43 twins × 3-6 cycles the naps are
     // seconds of pure idle. 1 ms keeps the handshake tight at gate
     // feed sizes (A/B below); production streams with real triggers
-    // keep Spark's default (env knob for A/Bs).
+    // keep Spark's default.
     val pollKey = "spark.sql.streaming.pollingDelay"
     val prevPoll = spark.conf.getOption(pollKey)
-    spark.conf.set(pollKey, pollingMs
-      .map(_.toString)
-      .getOrElse(sys.env.getOrElse("GRAFT_GATE_POLLING_MS", "1")) + "ms")
+    spark.conf.set(pollKey, s"${pollingMs.getOrElse(GatePollingMs)}ms")
     // Measurement runs dump q.recentProgress at end-of-run; Spark keeps
     // only the last numRecentProgressUpdates (default 100) progress
     // entries, so a StreamScale entry exceeding ~100 micro-batches
@@ -249,14 +238,12 @@ object StreamingQueries {
     // under ~100k rows. Semantics-identical either way (Catalyst
     // guarantees eval==codegen; every graft native expression
     // implements nullSafeEval). Production streams keep codegen.
-    // GRAFT_GATE_CODEGEN=on restores it for A/Bs.
     val wsKey = "spark.sql.codegen.wholeStage"
     val prevWs = spark.conf.get(wsKey)
-    val gateCodegen = sys.env.get("GRAFT_GATE_CODEGEN").contains("on")
-    if (!gateCodegen) spark.conf.set(wsKey, "false")
+    spark.conf.set(wsKey, "false")
     try {
-      val q = probe("start")(out.writeStream.format("memory").queryName(name)
-        .outputMode(mode).option("checkpointLocation", ckpt).start())
+      val q = out.writeStream.format("memory").queryName(name)
+        .outputMode(mode).option("checkpointLocation", ckpt).start()
       // watchdog: processAllAvailable blocks forever if a stream ever
       // wedges, and a hung entry would stall the driver's ENTIRE gate
       // run — bound the blast radius to this one query (stop() makes
@@ -276,10 +263,8 @@ object StreamingQueries {
           (s, rows.grouped(per).toIndexedSeq)
         }
         (0 until nTicks).foreach { i =>
-          probe(s"tick$i") {
-            batched.foreach { case (s, bs) => if (i < bs.length) s.addData(bs(i).toSeq) }
-            q.processAllAvailable()
-          }
+          batched.foreach { case (s, bs) => if (i < bs.length) s.addData(bs(i).toSeq) }
+          q.processAllAvailable()
         }
         // watermark-flush sentinels (append-mode aggregations emit a
         // group only when the watermark passes it): each flush row is
@@ -310,7 +295,7 @@ object StreamingQueries {
         case Some(v) => spark.conf.set(pollKey, v)
         case None    => spark.conf.unset(pollKey)
       }
-      if (!gateCodegen) spark.conf.set(wsKey, prevWs)
+      spark.conf.set(wsKey, prevWs)
     }
     (spark.table(name), ckpt)
   }
@@ -348,8 +333,7 @@ object StreamingQueries {
     val ckpt = gateCheckpointDir("graft-sq-rckpt")
     val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions",
-      gatePartitionsOverride.map(_.toString)
-        .getOrElse(sys.env.getOrElse("GRAFT_GATE_PARTITIONS", "4")))
+      gatePartitionsOverride.getOrElse(GatePartitions).toString)
     val provKey = "spark.sql.streaming.stateStore.providerClass"
     val prevProv = spark.conf.get(provKey)
     spark.conf.set(provKey,
@@ -363,11 +347,10 @@ object StreamingQueries {
     // tick pays scheduler naps; at 43 twins × 3-6 cycles the naps are
     // seconds of pure idle. 1 ms keeps the handshake tight at gate
     // feed sizes (A/B below); production streams with real triggers
-    // keep Spark's default (env knob for A/Bs).
+    // keep Spark's default.
     val pollKey = "spark.sql.streaming.pollingDelay"
     val prevPoll = spark.conf.getOption(pollKey)
-    spark.conf.set(pollKey,
-      sys.env.getOrElse("GRAFT_GATE_POLLING_MS", "1") + "ms")
+    spark.conf.set(pollKey, s"${GatePollingMs}ms")
     // Measurement runs dump q.recentProgress at end-of-run; Spark keeps
     // only the last numRecentProgressUpdates (default 100) progress
     // entries, so a StreamScale entry exceeding ~100 micro-batches
@@ -1015,7 +998,7 @@ object StreamingQueries {
       // project BEFORE the memory stream: the gate feed collects and
       // row-encodes every input row driver-side, and lineitem's other
       // 8 columns (incl. the wide comment string) were half that cost
-      // for zero semantic effect (QueryBench A/B: 6.7 s → see SCALE.md)
+      // for zero semantic effect (one-JVM A/B: 6.7 s → see SCALE.md)
       val (out, _) = runStream(s,
         Seq((t(s, dir, "lineitem").select(cols.map(col): _*), "l_orderkey")),
         // 3-tick representative (see GateTicks): incremental profile

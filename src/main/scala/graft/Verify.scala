@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -126,22 +125,9 @@ object Verify {
     // the driver always passes exactly two args → full run)
     val only = rest.toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // cap status-listener retention (same rationale as Bench): a full
-      // 269-entry catalog run otherwise drags early queries' job/stage
-      // wrappers through every later query's GC
-      .config("spark.ui.retainedJobs", "50")
-      .config("spark.ui.retainedStages", "50")
-      .config("spark.ui.retainedTasks", "500")
-      .config("spark.sql.ui.retainedExecutions", "20")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the production session (GraftSession): the gate checks the
+    // config the gateway serves from
+    val spark = graft.core.GraftSession.build(s"local[$cpus]", "graft-verify", cpus.toInt)
     new java.io.File(outDir).mkdirs()
     val rollup = scala.collection.mutable.LinkedHashMap.empty[String, (Long, String, String)]
     SparkEntry.queries

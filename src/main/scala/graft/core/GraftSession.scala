@@ -10,7 +10,9 @@ import org.apache.spark.sql.SparkSession
   * engine defaults that matter at 100 TB scale are set here:
   * AQE (runtime re-plan, skew-join splitting), sane shuffle
   * parallelism, UTC session time so event-time semantics are
-  * reproducible across engines.
+  * reproducible across engines. Every main (the gateway launcher,
+  * Verify, Bench, the tools) builds its session here, so the gate and
+  * the bench run the config the gateway serves from.
   */
 object GraftSession {
 
@@ -23,8 +25,7 @@ object GraftSession {
       appName: String = "graft",
       parallelism: Int = Runtime.getRuntime.availableProcessors()
   ): SparkSession = {
-    val spark = SparkSession
-      .builder()
+    val spark = SparkSession.builder()
       .master(master)
       .appName(appName)
       .config("spark.sql.shuffle.partitions", parallelism.toString)
@@ -42,6 +43,16 @@ object GraftSession {
       .config("spark.sql.parquet.filterPushdown", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
       .config("spark.ui.enabled", "false")
+      // the status listener retains jobs/stages/executions even with the
+      // UI off, and every micro-batch of a long-lived gateway (or every
+      // entry of a full catalog run) is a retained job and SQL execution;
+      // the defaults (1000 each, 100k tasks) hold tens of thousands of
+      // task wrappers on the old-gen heap, so later work runs under
+      // earlier work's GC debt
+      .config("spark.ui.retainedJobs", "50")
+      .config("spark.ui.retainedStages", "50")
+      .config("spark.ui.retainedTasks", "500")
+      .config("spark.sql.ui.retainedExecutions", "20")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -63,7 +63,7 @@ object Tables {
     */
   def fanOut(df: DataFrame): DataFrame = {
     if (df.isStreaming) return df // micro-batch partitioning is the
-    // stream's own concern (GRAFT_GATE_PARTITIONS); .rdd would throw
+    // stream's own concern (the gate's state partitions); .rdd would throw
     // advisor r15: `.rdd` on a shuffling plan materializes upstream
     // query stages eagerly under AQE (executing work the caller will
     // run again) — probe the split count only for bare scans

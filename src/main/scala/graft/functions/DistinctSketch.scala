@@ -191,7 +191,7 @@ final class DSketch(val k: Int, val p: Int) extends Serializable {
     * per-task work): exact-tier values in table-iteration order — no
     * sort. st7s round-trips up to 2^18 values per column per
     * micro-batch hop, and the canonical sort was ~75% of serialize
-    * time (SketchSerdeProbe: 13 ms sorted vs ~3 ms raw at 139k
+    * time (OPTIMIZATION_r16.md: 13 ms sorted vs ~3 ms raw at 139k
     * values) for bytes nobody compares. The PERSISTABLE image stays
     * [[canonicalSerialize]] (one byte image per value set — the
     * emitState contract st7/st10 write to parquet).

@@ -40,7 +40,7 @@ import org.apache.spark.sql.functions._
 object GraphOps {
 
   /** `checkpointEvery = AutoCadence` (the default) resolves to the
-    * `tools/IterBench`-measured guidance: cadence 2 once the iteration
+    * measured guidance (SCALE.md "Deep-iteration PageRank"): cadence 2 once the iteration
     * count exceeds ~6 (each deeper open round re-references the
     * previous frame and the recompute doubles per round — 30 open
     * PageRank rounds measured 44 s where cadence 2 runs 12 s), open

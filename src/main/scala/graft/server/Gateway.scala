@@ -82,13 +82,14 @@ final class Gateway(
       * GET /api/v1/field/{name} (listing at /field), JSON-serialized.
       * Unknown name → 404, like the reference's route. */
     staticFields: Map[String, Any] = Map.empty) {
+  import Gateway.detailJson
 
   private val mapper = new ObjectMapper()
   // TCP_NODELAY on the JDK server: without it, small keep-alive
   // responses interleave with the peer's 40 ms delayed ACK and every
-  // interactive read floors at ~44 ms (ClientSoak-measured); the
-  // property is read at ServerConfig class load, so set it before the
-  // first HttpServer instantiates
+  // interactive read floors at ~44 ms (measured in round 8, SCALE.md
+  // "Measured EXTERNAL ceiling"); the property is read at ServerConfig
+  // class load, so set it before the first HttpServer instantiates
   Gateway.enableNoDelay()
   private val server = HttpServer.create(new InetSocketAddress(port), 0)
   // cached (elastic) pool: /stream holds a thread per subscriber and
@@ -320,7 +321,7 @@ final class Gateway(
     val target = root.resolve(
       java.net.URLDecoder.decode(rel, "UTF-8")).toAbsolutePath.normalize()
     if (!target.startsWith(root) || !java.nio.file.Files.exists(target))
-      respond(ex, 404, s"""{"detail":"Not found: /outputs/$rel"}""")
+      respond(ex, 404, detailJson(s"Not found: /outputs/$rel"))
     else if (java.nio.file.Files.isDirectory(target)) {
       val base = ("/outputs/" + rel).stripSuffix("/")
       val items = java.nio.file.Files.list(target).iterator().asScala.toSeq
@@ -431,7 +432,7 @@ final class Gateway(
           // and /send — open key domains admit every key);
           // admissible-but-unticked → []
           if (!keyDeclared(name, key))
-            respond(ex, 404, s"""{"detail":"Channel not found: $name/$key"}""")
+            respond(ex, 404, detailJson(s"Channel not found: $name/$key"))
           else {
             val observed = runtime.lastByBasketKey(name).collectFirst {
               case (k, row) if String.valueOf(k) == key => row
@@ -445,7 +446,7 @@ final class Gateway(
           // per-key next (reference futures/adapter.py:99-127); keys
           // outside a declared key set → 404
           if (!keyDeclared(name, key))
-            respond(ex, 404, s"""{"detail":"Channel not found: $name/$key"}""")
+            respond(ex, 404, detailJson(s"Channel not found: $name/$key"))
           else {
             val r = runtime.awaitNextByKey(name, key, 30.seconds)
             respond(ex, 200, rowsJson(name, identityFilter(name, identity, r.toSeq)))
@@ -481,12 +482,10 @@ final class Gateway(
               if (rest.isEmpty) respond(ex, 200, "[]")
               else {
                 ex.getResponseHeaders.set("Retry-After", "2")
-                respond(ex, 503, s"""{"detail":"Table not ready: $vname"}""")
+                respond(ex, 503, detailJson(s"Table not ready: $vname"))
               }
             case None =>
-              val err = mapper.createObjectNode()
-              err.put("detail", s"Table not found: $vname")
-              respond(ex, 404, mapper.writeValueAsString(err))
+              respond(ex, 404, detailJson(s"Table not found: $vname"))
             case Some((channel, (rawRows, schema))) =>
               // X13 parity: a table over an identity-filtered channel
               // serves only the caller's rows — and if the view's
@@ -514,7 +513,7 @@ final class Gateway(
           // the path key is injected as the basket key column
           val keyOpt = rest.headOption
           if (keyOpt.exists(k => !keyDeclared(name, k))) {
-            respond(ex, 404, s"""{"detail":"Channel not found: $name/${keyOpt.get}"}""")
+            respond(ex, 404, detailJson(s"Channel not found: $name/${keyOpt.get}"))
             return
           }
           val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
@@ -544,7 +543,7 @@ final class Gateway(
             respond(ex, 200, rowsJson(name, rows))
           } catch {
             case e: IllegalArgumentException =>
-              respond(ex, 422, s"""{"detail":${mapper.writeValueAsString(e.getMessage)}}""")
+              respond(ex, 422, detailJson(e.getMessage))
           }
         // static-field routes (reference MountFieldRestRoutes,
         // mount_fields.py:10-82): GET /field → names, GET
@@ -558,7 +557,7 @@ final class Gateway(
             case Some(v) => respond(ex, 200, mapper.writeValueAsString(anyToJsonNode(v)))
             case None =>
               respond(ex, 404,
-                s"""{"detail":${mapper.writeValueAsString(s"Channel field not found: $fname")}}""")
+                detailJson(s"Channel field not found: $fname"))
           }
         // available-channels listing per route family (reference
         // last.py:160-170 add_*_available_channels: GET /last/ → names)
@@ -600,9 +599,9 @@ final class Gateway(
       }
     } catch {
       case e: IllegalArgumentException =>
-        respond(ex, 422, s"""{"detail":${mapper.writeValueAsString(e.getMessage)}}""")
+        respond(ex, 422, detailJson(e.getMessage))
       case NonFatal(e) =>
-        respond(ex, 500, s"""{"detail":${mapper.writeValueAsString(String.valueOf(e.getMessage))}}""")
+        respond(ex, 500, detailJson(e.getMessage))
     }
 
   /** K8/K9 — streaming egress: server-sent events, one `data:` frame
@@ -856,7 +855,7 @@ final class Gateway(
         respondBytes(ex, 200, html.getBytes(StandardCharsets.UTF_8), "text/html")
       }
     } catch {
-      case NonFatal(e) => respond(ex, 500, s"""{"detail":"${e.getMessage}"}""")
+      case NonFatal(e) => respond(ex, 500, detailJson(e.getMessage))
     }
 
   /** `/logout` (reference simple.py:420-428): drop the session, expire
@@ -944,7 +943,7 @@ final class Gateway(
     } catch {
       case NonFatal(e) =>
         respond(ex, 500,
-          s"""{"detail":${mapper.writeValueAsString(String.valueOf(e.getMessage))}}""")
+          detailJson(e.getMessage))
     }
 
   def start(): Gateway = {
@@ -965,13 +964,13 @@ final class Gateway(
         case Some(root) =>
           try handleOutputs(e, root)
           catch { case NonFatal(err) =>
-            respond(e, 500, s"""{"detail":${mapper.writeValueAsString(String.valueOf(err.getMessage))}}""") }
+            respond(e, 500, detailJson(err.getMessage)) }
         case None => respond(e, 404, """{"detail":"Not Found"}""")
       }
     }(ex))
     server.createContext("/openapi.json", (ex: HttpExchange) => gated { ex =>
       try respond(ex, 200, openApiJson)
-      catch { case NonFatal(e) => respond(ex, 500, s"""{"detail":"${e.getMessage}"}""") }
+      catch { case NonFatal(e) => respond(ex, 500, detailJson(e.getMessage)) }
     }(ex))
     server.createContext("/docs", (ex: HttpExchange) => {
       val bytes = docsHtml.getBytes(StandardCharsets.UTF_8)
@@ -1391,6 +1390,14 @@ final class Gateway(
 object Gateway {
   /** Published library version (surfaced in the OpenAPI document). */
   val Version = "0.3.0"
+
+  private val detailMapper = new ObjectMapper()
+
+  /** The `{"detail": …}` error body with `msg` JSON-escaped (quotes,
+    * backslashes, control characters); a null message renders as
+    * the string "null". */
+  private[graft] def detailJson(msg: String): String =
+    s"""{"detail":${detailMapper.writeValueAsString(String.valueOf(msg))}}"""
 
   /** Idempotent; must run before the first HttpServer is created in
     * the JVM (the JDK server reads it once at config class load). */

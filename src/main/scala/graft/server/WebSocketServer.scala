@@ -98,7 +98,7 @@ final class WebSocketServer(
           // drain-and-flush-once: under a busy stream the queue holds
           // many per-row frames; flushing each one paid a syscall per
           // frame and capped a subscriber at ~1.1k frames/s
-          // (ClientSoak) — one flush per drained batch lifts that
+          // (SCALE.md "Measured EXTERNAL ceiling") — one flush per drained batch lifts that
           // without changing frame order or the poison-pill contract
           var item = outbox.take()
           var wrote = false

@@ -146,10 +146,7 @@ object ViewServer {
 
 final class ViewServer(
     runtime: ChannelRuntime,
-    defaultLimit: Int = ViewServer.DefaultLimit,
-    /** Escape hatch (and A/B lever — tools/ViewRefreshBench): false
-      * forces every view onto the full-recompute path. */
-    deltaMaintenance: Boolean = true) {
+    defaultLimit: Int = ViewServer.DefaultLimit) {
   import ViewServer.ViewDef
 
   private val views = new TrieMap[String, ViewDef]
@@ -215,7 +212,7 @@ final class ViewServer(
     * distributed-state mode must not mirror the frontier onto the
     * driver (its whole point is driver-state-zero). */
   private def deltaEligible(v: ViewConfig): Boolean =
-    deltaMaintenance && !runtime.distributedState &&
+    !runtime.distributedState &&
       v.groupBy.isEmpty && v.aggregates.isEmpty && v.splitBy.isEmpty &&
       v.expressions.forall { case (_, e) => rowLocalExpression(e) }
 

@@ -12,7 +12,8 @@ import org.apache.spark.sql.types._
   * Why: the gateway's hottest interactive read (`GET /state/{ch}`)
   * paid a full Spark job per request — createDataFrame over the
   * frontier, Catalyst filter/sort, collect — ~140 ms p50 measured by
-  * `tools/ClientSoak` on a 50-key frontier. The frontier is ALREADY
+  * the round-8 soak on a 50-key frontier (SCALE.md "Measured EXTERNAL
+  * ceiling"). The frontier is ALREADY
   * driver-resident in single-node serving mode, so the query is a
   * filter+sort over an in-memory Seq. Measured after: sub-ms.
   *

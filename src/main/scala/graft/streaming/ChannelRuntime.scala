@@ -413,7 +413,8 @@ final class ChannelRuntime(
     * exactly the batch StateOps semantics (shared translator). In
     * single-node serving mode the frontier is driver-resident, so the
     * query evaluates in-memory ([[graft.state.StateFastPath]] —
-    * sub-ms vs the ~140 ms Spark-job round trip, ClientSoak-measured)
+    * sub-ms vs the ~140 ms Spark-job round trip; SCALE.md "Measured
+    * EXTERNAL ceiling")
     * whenever its semantics are exactly reproducible; anything else
     * (distributed state, ANSI-sensitive casts, coercing comparisons)
     * takes the Spark path below.

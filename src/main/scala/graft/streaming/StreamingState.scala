@@ -425,7 +425,7 @@ object StreamingState {
     * plain DataFrame — cached AND materialized here (one count() at
     * build time) so the full reference banding job runs before the
     * first arrival instead of inflating batch-0 latency; the
-    * tools/CrossDupProbe one-JVM A/B measured eager ~8% faster than
+    * one-JVM A/B (SCALE.md "d10s static-side A/B") measured eager ~8% faster than
     * lazy end-to-end at sf0.1 and confirmed the cache is honored
     * across micro-batches (nocache ≈ lazy at gate scale — the
     * round-6 d10s "regression" was session noise). The cache lives

@@ -1,18 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Mirrors the driver's smoke check: SparkEntry.entry(spark) rows > 0. */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.build("local[4]", "graft-entry-smoke", 4)
     val df = graft.SparkEntry.entry(spark)
     val n = df.count()
     println(s"ENTRY_ROWS=$n")

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Cross-configuration invariance probe for the driver-red rows
   * (VERDICT r10 task 1 follow-through): run named catalog entries
   * under a matrix of session configs a foreign driver environment
@@ -39,15 +37,9 @@ object InvarianceSweep {
         // literals riding the JVM default timezone — fixed, now pinned)
         "t3_state_when_filter", "t9_time_gate")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val base = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    base.sparkContext.setLogLevel("WARN")
+    // 32 shuffle partitions: the baseline cell's value, so the base
+    // session matches the cell every other cell is compared against
+    val base = graft.core.GraftSession.build(s"local[$cpus]", "graft-invariance-sweep", 32)
 
     val allConfigs: Seq[(String, Map[String, String])] = Seq(
       "baseline_p32_aqe" -> Map(
@@ -83,7 +75,7 @@ object InvarianceSweep {
     // toUpperCase — the Turkish-İ trap turns 'i'.toUpperCase into 'İ'
     // under tr-TR, silently changing any locale-sensitive
     // canonicalization). `spark.sql.session.timeZone` itself is NOT an
-    // axis: Verify/Bench pin it to UTC inside their own builders, so no
+    // axis: GraftSession pins it to UTC for Verify/Bench, so no
     // driver run can differ on it — and flipping it would legitimately
     // move day-truncation boundaries (semantics, not environment).
     // The JVM flips are marked with jvm.* pseudo-keys, applied around

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Streaming-twin scale ledger (r13 verdict task 5; widened per r14
   * task 3): the sf1/sf10 ledgers measured BATCH scaling; the
   * state-store claim — RocksDB backend, shuffle-once per micro-batch,
@@ -43,16 +41,7 @@ object StreamScale {
   def main(args: Array[String]): Unit = {
     val entries = if (args.nonEmpty) args.toSeq else DefaultEntries
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.build(s"local[$cpus]", "graft-stream-scale", cpus.toInt)
     // the production backend — the claim under measurement
     sys.props("graft.gate.provider") = "rocksdb"
     val outDir = java.nio.file.Files.createDirectories(

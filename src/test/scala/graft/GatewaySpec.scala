@@ -487,4 +487,23 @@ class GatewaySpec extends AnyFunSuite {
       assert(get(s"$base/state/example").body() === "[]")
     }
   }
+
+  test("error detail bodies stay valid JSON for quotes, backslashes, newlines and null") {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val msg = "bad \"value\" at C:\\tmp\nline 2"
+    assert(mapper.readTree(Gateway.detailJson(msg)).get("detail").asText() == msg)
+    assert(mapper.readTree(Gateway.detailJson(null)).get("detail").asText() == "null")
+    // an undeclared basket key with a quote reaches the 404 detail verbatim
+    val rt = new ChannelRuntime(spark,
+      Map("quotes" -> ChannelSpec("quotes", schema, basketKey = Some("owner"),
+        basketKeys = Some(Seq("AAPL")))),
+      Files.createTempDirectory("graft-gw-detail-ckpt").toString)
+    rt.start()
+    val gw = new Gateway(rt, 0).start()
+    try {
+      val r = get(s"http://127.0.0.1:${gw.boundPort}/api/v1/last/quotes/a%22b")
+      assert(r.statusCode() == 404, r.body())
+      assert(mapper.readTree(r.body()).get("detail").asText() == "Channel not found: quotes/a\"b")
+    } finally { gw.stop(); rt.stop() }
+  }
 }

@@ -49,7 +49,7 @@ class PlanAuditSpec extends AnyFunSuite {
     val p = plan(graft.state.StateOps.lastByKey(ev, Seq("user_id"), "event_id"))
     // max(struct) lowers to SortAggregate (structs aren't hash-agg
     // buffer types) — measured faster than max_by's ObjectHashAggregate
-    // (tools/LastByKeyBench); the scale-critical properties are the
+    // (see StateOps.lastByKey); the scale-critical properties are the
     // partial aggregate BELOW the single keyed exchange:
     assert(p.contains("partial_max"), p)
     assert("Exchange hashpartitioning\\(user_id".r.findAllIn(p).size === 1, p)
@@ -1315,5 +1315,59 @@ class PlanAuditSpec extends AnyFunSuite {
     // the allowlist must not rot: every entry on it still trips the lint
     val stale = allow.keySet -- offenders.keySet
     assert(stale.isEmpty, s"allowlist entries no longer floating: $stale")
+  }
+
+  test("one session factory: GraftSession holds the only builder and the retention caps") {
+    import scala.jdk.CollectionConverters._
+    val builder = "SparkSession\\s*\\.builder".r
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val hits = try files.iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { f =>
+        val n = builder.findAllIn(java.nio.file.Files.readString(f)).size
+        Seq.fill(n)(f.getFileName.toString)
+      }.toList
+    finally files.close()
+    assert(hits == List("GraftSession.scala"), hits)
+    val conf = spark.sparkContext.getConf
+    assert(conf.get("spark.ui.retainedJobs") == "50")
+    assert(conf.get("spark.ui.retainedStages") == "50")
+    assert(conf.get("spark.ui.retainedTasks") == "500")
+    assert(spark.conf.get("spark.sql.ui.retainedExecutions") == "20")
+  }
+
+  test("Probe times the full output: j2 row count and its join shuffle") {
+    val fn = SparkEntry.queries("j2_asof_join")
+    val meter = new graft.tools.Probe.ShuffleMeter(spark)
+    spark.sparkContext.addSparkListener(meter)
+    val (expected, countWrite, pass) =
+      try {
+        meter.reset()
+        val n = fn(spark, dir).count()
+        meter.settle()
+        val w = meter.written.get
+        spark.catalog.clearCache()
+        (n, w, graft.tools.Probe.measure(spark, meter, fn, dir)._1)
+      } finally { spark.sparkContext.removeSparkListener(meter); spark.catalog.clearCache() }
+    assert(pass.rows == expected)
+    // count() prunes the as-of join's exchange down to its own final
+    // aggregate; the full output runs the join shuffle too
+    assert(pass.shuffleWrite > countWrite, (pass, countWrite))
+    assert(pass.shuffleRead > 0, pass)
+  }
+
+  test("Bench records a throwing entry as -1, never as a time") {
+    import org.apache.spark.sql.{DataFrame, SparkSession}
+    val failAtRun = udf((x: Long) => { if (x >= 0) throw new IllegalStateException("run"); x })
+    val entries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+      "ok" -> ((s, _) => s.range(10).toDF()),
+      "throws_at_build" -> ((_, _) => throw new IllegalStateException("build")),
+      // a filter, not a projection: count() would prune a projected UDF
+      "throws_at_run" -> ((s, _) => s.range(3).toDF().filter(failAtRun(col("id")) > 0)))
+    val t = Bench.timeEntries(spark, dir, entries)
+    assert(t("throws_at_build") == -1.0)
+    assert(t("throws_at_run") == -1.0)
+    assert(t("ok") > 0)
+    assert(t.values.filter(_ > 0).sum == t("ok"))
   }
 }
