@@ -454,17 +454,12 @@ object StreamingQueries {
       cycles(n).head.getAs[java.sql.Timestamp]("ts").getTime)
     val path = java.nio.file.Paths.get(graft.core.Scratch.track(
       Files.createTempFile("graft-k2b-log", ".jsonl").toString))
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val w = java.nio.file.Files.newBufferedWriter(path)
     try {
       shuffled.foreach { case (cycle, _) =>
-        val root = mapper.createObjectNode()
-        root.put("csp_engine_timestamp",
-          cycle.head.getAs[java.sql.Timestamp]("ts").getTime)
-        val arr = root.putArray("events")
-        cycle.foreach(r => arr.add(
-          graft.streaming.EngineLog.rowToJson(mapper, r, schema)))
-        w.write(mapper.writeValueAsString(root)); w.newLine()
+        graft.streaming.EngineLog.writeCycle(w,
+          cycle.head.getAs[java.sql.Timestamp]("ts").getTime, Seq(("events", cycle.toSeq, schema)))
+        w.newLine()
       }
     } finally w.close()
     val rt = new graft.streaming.ChannelRuntime(s,
@@ -1086,17 +1081,12 @@ object StreamingQueries {
       val rows = events.orderBy(col("event_id")).collect()
       val path = java.nio.file.Paths.get(graft.core.Scratch.track(
         Files.createTempFile("graft-k2-log", ".jsonl").toString))
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
       val w = java.nio.file.Files.newBufferedWriter(path)
       try {
         rows.grouped(100).foreach { cycle =>
-          val root = mapper.createObjectNode()
-          root.put("csp_engine_timestamp",
-            cycle.head.getAs[java.sql.Timestamp]("ts").getTime)
-          val arr = root.putArray("events")
-          cycle.foreach(r => arr.add(
-            graft.streaming.EngineLog.rowToJson(mapper, r, schema)))
-          w.write(mapper.writeValueAsString(root)); w.newLine()
+          graft.streaming.EngineLog.writeCycle(w,
+            cycle.head.getAs[java.sql.Timestamp]("ts").getTime, Seq(("events", cycle.toSeq, schema)))
+          w.newLine()
         }
       } finally w.close()
       graft.streaming.EngineLog.demux(s, path.toString, "events", schema)

@@ -275,6 +275,9 @@ final class Gateway(
     ex.close()
   }
 
+  private def respondJson(ex: HttpExchange, code: Int, bytes: Array[Byte]): Unit =
+    respondBytes(ex, code, bytes, "application/json")
+
   private def respondBytes(ex: HttpExchange, code: Int, bytes: Array[Byte],
       contentType: String): Unit = {
     ex.getResponseHeaders.set("Content-Type", contentType)
@@ -362,12 +365,8 @@ final class Gateway(
     mapper.writeValueAsString(root)
   }
 
-  private def rowsJson(name: String, rows: Seq[org.apache.spark.sql.Row]): String = {
-    val schema = runtime.runtimeSchema(runtime.specs(name))
-    val arr = mapper.createArrayNode()
-    rows.foreach(r => arr.add(EngineLog.rowToJson(mapper, r, schema)))
-    mapper.writeValueAsString(arr)
-  }
+  private def rowsJson(name: String, rows: Seq[org.apache.spark.sql.Row]): Array[Byte] =
+    EngineLog.rowsJson(rows, runtime.runtimeSchema(runtime.specs(name)))
 
   /** X13 row-level security: keep only rows owned by the identity. */
   private def identityFilter(
@@ -425,7 +424,7 @@ final class Gateway(
               runtime.lastByBasketKey(name).toSeq
                 .sortBy(kv => String.valueOf(kv._1)).map(_._2)
             else runtime.last(name).toSeq
-          respond(ex, 200, rowsJson(name, identityFilter(name, identity, rows)))
+          respondJson(ex, 200, rowsJson(name, identityFilter(name, identity, rows)))
         case "last" :: name :: key :: Nil if isBasket(name) =>
           // per-key last (reference last.py:36-76): a key outside the
           // channel's key set → 404 (same admissibility rule as /next
@@ -437,11 +436,11 @@ final class Gateway(
             val observed = runtime.lastByBasketKey(name).collectFirst {
               case (k, row) if String.valueOf(k) == key => row
             }
-            respond(ex, 200, rowsJson(name, identityFilter(name, identity, observed.toSeq)))
+            respondJson(ex, 200, rowsJson(name, identityFilter(name, identity, observed.toSeq)))
           }
         case "next" :: name :: Nil if known(name) =>
           val r = runtime.awaitNext(name, 30.seconds)
-          respond(ex, 200, rowsJson(name, identityFilter(name, identity, r.toSeq)))
+          respondJson(ex, 200, rowsJson(name, identityFilter(name, identity, r.toSeq)))
         case "next" :: name :: key :: Nil if isBasket(name) =>
           // per-key next (reference futures/adapter.py:99-127); keys
           // outside a declared key set → 404
@@ -449,7 +448,7 @@ final class Gateway(
             respond(ex, 404, detailJson(s"Channel not found: $name/$key"))
           else {
             val r = runtime.awaitNextByKey(name, key, 30.seconds)
-            respond(ex, 200, rowsJson(name, identityFilter(name, identity, r.toSeq)))
+            respondJson(ex, 200, rowsJson(name, identityFilter(name, identity, r.toSeq)))
           }
         case "state" :: name :: Nil if known(name) =>
           val q = queryParam(ex).map(QueryTranslator.parseJson)
@@ -457,12 +456,11 @@ final class Gateway(
           val rows =
             try runtime.state(name, q)
             catch { case NonFatal(_) => Nil } // reference: errors → []
-          respond(ex, 200, rowsJson(name, identityFilter(name, identity, rows)))
+          respondJson(ex, 200, rowsJson(name, identityFilter(name, identity, rows)))
         case "lookup" :: name :: id :: Nil if known(name) =>
           identityFilter(name, identity, runtime.lookup(name, id).toSeq) match {
             case Seq(row) =>
-              val schema = runtime.runtimeSchema(runtime.specs(name))
-              respond(ex, 200, mapper.writeValueAsString(EngineLog.rowToJson(mapper, row, schema)))
+              respondJson(ex, 200, EngineLog.rowJson(row, runtime.runtimeSchema(runtime.specs(name))))
             case _ => respond(ex, 404, """{"detail":"id not found"}""")
           }
         case "stream" :: name :: Nil if known(name) =>
@@ -498,11 +496,8 @@ final class Gateway(
                   identityFilterRows(rawRows, schema, f, identity)
                 case Some(_) => Nil
               }
-              if (rest.isEmpty) {
-                val arr = mapper.createArrayNode()
-                rows.foreach(r => arr.add(EngineLog.rowToJson(mapper, r, schema)))
-                respond(ex, 200, mapper.writeValueAsString(arr))
-              } else
+              if (rest.isEmpty) respondJson(ex, 200, EngineLog.rowsJson(rows, schema))
+              else
                 respondBytes(ex, 200,
                   org.apache.spark.sql.graft.ArrowBridge.toArrowStream(rows, schema),
                   "application/vnd.apache.arrow.stream")
@@ -540,7 +535,7 @@ final class Gateway(
           }
           try {
             val rows = runtime.send(name, maps)
-            respond(ex, 200, rowsJson(name, rows))
+            respondJson(ex, 200, rowsJson(name, rows))
           } catch {
             case e: IllegalArgumentException =>
               respond(ex, 422, detailJson(e.getMessage))
@@ -620,15 +615,10 @@ final class Gateway(
     ex.getResponseHeaders.set("Cache-Control", "no-cache")
     ex.sendResponseHeaders(200, 0)
     val os = ex.getResponseBody
-    val queue = new java.util.concurrent.LinkedBlockingQueue[String]
+    val queue = new java.util.concurrent.LinkedBlockingQueue[Array[Byte]]
     val schema = runtime.runtimeSchema(runtime.specs(name))
     val listener: (String, Seq[org.apache.spark.sql.Row]) => Unit = (ch, rows) =>
-      if (ch == name) rows.foreach { r =>
-        val frame = mapper.createObjectNode()
-        frame.put("channel", name)
-        frame.set[JsonNode]("data", EngineLog.rowToJson(mapper, r, schema))
-        queue.offer(mapper.writeValueAsString(frame))
-      }
+      if (ch == name) rows.foreach(r => queue.offer(Gateway.frameJson(name, None, r, schema)))
     runtime.addListener(listener)
     try {
       var sent = 0L
@@ -637,7 +627,12 @@ final class Gateway(
         val item = queue.poll(1, java.util.concurrent.TimeUnit.SECONDS)
         try {
           if (item == null) os.write(": ping\n\n".getBytes(StandardCharsets.UTF_8)) // K9
-          else { os.write(s"data: $item\n\n".getBytes(StandardCharsets.UTF_8)); sent += 1 }
+          else {
+            os.write("data: ".getBytes(StandardCharsets.UTF_8))
+            os.write(item)
+            os.write("\n\n".getBytes(StandardCharsets.UTF_8))
+            sent += 1
+          }
           os.flush()
         } catch { case _: java.io.IOException => open = false }
       }
@@ -1398,6 +1393,19 @@ object Gateway {
     * the string "null". */
   private[graft] def detailJson(msg: String): String =
     s"""{"detail":${detailMapper.writeValueAsString(String.valueOf(msg))}}"""
+
+  /** One WS/SSE egress frame `{"channel", "key"?, "data": row}` (key
+    * only for dict-basket channels). */
+  private[graft] def frameJson(channel: String, key: Option[String],
+      r: org.apache.spark.sql.Row, schema: org.apache.spark.sql.types.StructType): Array[Byte] =
+    EngineLog.jsonBytes { g =>
+      g.writeStartObject()
+      g.writeStringField("channel", channel)
+      key.foreach(g.writeStringField("key", _))
+      g.writeFieldName("data")
+      EngineLog.writeRow(g, r, schema)
+      g.writeEndObject()
+    }
 
   /** Idempotent; must run before the first HttpServer is created in
     * the JVM (the JDK server reads it once at config class load). */

@@ -12,7 +12,7 @@ import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
-import graft.streaming.{ChannelRuntime, EngineLog}
+import graft.streaming.ChannelRuntime
 
 /** S6/K8 — true WebSocket endpoint (RFC 6455, hand-rolled on a
   * `ServerSocket`: the JDK http server cannot hijack connections for
@@ -124,28 +124,22 @@ final class WebSocketServer(
         val wantAll = subs.contains((ch, None))
         val schema = runtime.runtimeSchema(spec)
         val keyIdx = basket.map(schema.fieldNames.indexOf(_)).getOrElse(-1)
+        // the auth field's index, once per batch
+        val authIdx = authFilterFields.get(ch).map(schema.fieldNames.indexOf(_))
         rows.foreach { r =>
           val rowKey = if (keyIdx >= 0 && !r.isNullAt(keyIdx)) Some(String.valueOf(r.get(keyIdx))) else None
           val subscribed = wantAll || (basket.isDefined && rowKey.exists(k => subs.contains((ch, Some(k)))))
-          if (subscribed && identityAllows(ch, r, schema)) {
-            val frame = mapper.createObjectNode()
-            frame.put("channel", ch)
-            if (basket.isDefined) rowKey.foreach(frame.put("key", _))
-            frame.set[JsonNode]("data", EngineLog.rowToJson(mapper, r, schema))
-            sendText(mapper.writeValueAsString(frame))
-          }
+          if (subscribed && identityAllows(authIdx, r))
+            sendRaw(0x1, Gateway.frameJson(ch, if (basket.isDefined) rowKey else None, r, schema))
         }
       }
 
-    private def identityAllows(
-        ch: String, r: org.apache.spark.sql.Row,
-        schema: org.apache.spark.sql.types.StructType): Boolean =
-      authFilterFields.get(ch) match {
-        case Some(field) =>
-          identity.exists { id =>
-            val i = schema.fieldNames.indexOf(field)
-            i >= 0 && !r.isNullAt(i) && String.valueOf(r.get(i)) == id
-          }
+    /** X13 on egress: `authIdx` is the channel's auth field index
+      * (None = unfiltered channel). */
+    private def identityAllows(authIdx: Option[Int], r: org.apache.spark.sql.Row): Boolean =
+      authIdx match {
+        case Some(i) =>
+          identity.exists(id => i >= 0 && !r.isNullAt(i) && String.valueOf(r.get(i)) == id)
         case None => true
       }
 

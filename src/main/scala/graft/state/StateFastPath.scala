@@ -1,5 +1,7 @@
 package graft.state
 
+import scala.collection.immutable.ArraySeq
+
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
@@ -13,11 +15,20 @@ import org.apache.spark.sql.types._
   * paid a full Spark job per request — createDataFrame over the
   * frontier, Catalyst filter/sort, collect — ~140 ms p50 measured by
   * the round-8 soak on a 50-key frontier (SCALE.md "Measured EXTERNAL
-  * ceiling"). The frontier is ALREADY
-  * driver-resident in single-node serving mode, so the query is a
-  * filter+sort over an in-memory Seq. Measured after: sub-ms.
+  * ceiling"). The frontier is driver-resident in single-node serving
+  * mode, so the query is a filter over an in-memory array.
   *
-  * Exactness contract: [[tryEval]] returns None — caller falls back
+  * Compiled once, evaluated many times: [[ordering]] is built once per
+  * channel, and the runtime keeps its frontier snapshot in that order
+  * (re-published once per micro-batch, so a read is at most one batch
+  * stale). A read is then [[filterSorted]]: dotted paths resolved to
+  * field indices once per query, one pass over the snapshot, no copy
+  * when the query has no filter and no sort. On a 20,000-key frontier
+  * (perfbench `state_read` seed 11, 4 vCPU) a 200-row filtered read
+  * takes ~0.4 ms and a full read ~0.02 ms; copying and sorting the
+  * frontier per read, as before, took 6.0 ms and 85 ms.
+  *
+  * Exactness contract: evaluation returns None — caller falls back
   * to the Spark path — for ANYTHING whose Spark semantics this
   * evaluator cannot reproduce bit-for-bit: literal casts that could
   * overflow or parse (ANSI sensitivity), cross-type attr-vs-attr
@@ -27,15 +38,169 @@ import org.apache.spark.sql.types._
   */
 object StateFastPath {
 
-  /** Evaluate `q` over frontier `rows`; None = not exactly expressible
-    * driver-side (use the Spark path). */
+  /** Evaluate `q` over frontier `rows` in any order: filter, then sort
+    * by `keys ++ tieBreak`. None = not exactly expressible driver-side
+    * (use the Spark path). */
   def tryEval(
       rows: Seq[Row],
       schema: StructType,
       keys: Seq[String],
       q: StateQuery,
-      tieBreak: Seq[String]): Option[Seq[Row]] = {
-    // compile filters up front; any inexpressible one aborts
+      tieBreak: Seq[String]): Option[Seq[Row]] =
+    for {
+      tests <- compileFilters(schema, q)
+      ord <- ordering(schema, keys ++ tieBreak)
+    } yield rows.filter(passes(tests, _)).sorted(ord)
+
+  /** Evaluate `q` over rows already in `ordering(schema, keys ++
+    * tieBreak)` order: one filtering pass, no sort; an unfiltered
+    * query returns `sorted` itself (never mutated by the caller). */
+  def filterSorted(sorted: Array[Row], schema: StructType, q: StateQuery): Option[Seq[Row]] =
+    compileFilters(schema, q).map { tests =>
+      ArraySeq.unsafeWrapArray(if (tests.isEmpty) sorted else sorted.filter(passes(tests, _)))
+    }
+
+  /** ASC NULLS FIRST over `cols`, compiled once; None when a resolved
+    * column is not a serving primitive. Unresolved columns order as a
+    * constant null (StateOps.keyCol's lit(null)), so they drop out. */
+  def ordering(schema: StructType, cols: Seq[String]): Option[Ordering[Row]] = {
+    val parts = cols.flatMap { c =>
+      QueryTranslator.resolveType(schema, c) match {
+        case None => Nil
+        case Some(dt) if orderable(dt) => Seq((pathGetter(schema, c), valueCmp(dt)))
+        case Some(_) => return None
+      }
+    }.toArray
+    val getters = parts.map(_._1)
+    val cmps = parts.map(_._2)
+    Some(new Ordering[Row] {
+      def compare(x: Row, y: Row): Int = {
+        var result = 0
+        var i = 0
+        while (result == 0 && i < getters.length) {
+          val a = getters(i)(x)
+          val b = getters(i)(y)
+          result =
+            if (a == null) { if (b == null) 0 else -1 } // ASC NULLS FIRST
+            else if (b == null) 1
+            else cmps(i)(a, b)
+          i += 1
+        }
+        result
+      }
+    })
+  }
+
+  /** Dotted-path getter with the path resolved to field indices once;
+    * null at any intermediate step (or an unresolved path) yields null. */
+  def pathGetter(schema: StructType, path: String): Row => Any = {
+    val idx = new scala.collection.mutable.ArrayBuffer[Int]
+    var dt: DataType = schema
+    path.split('.').foreach { part =>
+      dt match {
+        case st: StructType =>
+          val i = st.fieldNames.indexOf(part)
+          if (i < 0) return _ => null
+          idx += i
+          dt = st.fields(i).dataType
+        case _ => return _ => null
+      }
+    }
+    val ix = idx.toArray
+    if (ix.length == 1) { val i = ix(0); r => r.get(i) }
+    else r => {
+      var cur: Any = r
+      var k = 0
+      while (k < ix.length && cur != null) { cur = cur.asInstanceOf[Row].get(ix(k)); k += 1 }
+      cur
+    }
+  }
+
+  private def orderable(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType | FloatType |
+         DoubleType | StringType | BooleanType | TimestampType | DateType => true
+    case _ => false
+  }
+
+  /** Spark-identical comparison of two non-null values of one column
+    * type. Doubles and floats follow Spark's `SQLOrderingUtil`:
+    * `if (x == y) 0 else compare(x, y)`, so `-0.0` equals `0.0` and NaN
+    * equals NaN and sorts above every other value. */
+  private def valueCmp(dt: DataType): (Any, Any) => Int = dt match {
+    case LongType    => (a, b) => java.lang.Long.compare(a.asInstanceOf[Long], b.asInstanceOf[Long])
+    case IntegerType => (a, b) => Integer.compare(a.asInstanceOf[Int], b.asInstanceOf[Int])
+    case ShortType   => (a, b) => java.lang.Short.compare(a.asInstanceOf[Short], b.asInstanceOf[Short])
+    case ByteType    => (a, b) => java.lang.Byte.compare(a.asInstanceOf[Byte], b.asInstanceOf[Byte])
+    case DoubleType  => (a, b) => {
+      val x = a.asInstanceOf[Double]
+      val y = b.asInstanceOf[Double]
+      if (x == y) 0 else java.lang.Double.compare(x, y)
+    }
+    case FloatType   => (a, b) => {
+      val x = a.asInstanceOf[Float]
+      val y = b.asInstanceOf[Float]
+      if (x == y) 0 else java.lang.Float.compare(x, y)
+    }
+    case StringType  => (a, b) => compareUtf8(a.asInstanceOf[String], b.asInstanceOf[String])
+    case BooleanType => (a, b) =>
+      java.lang.Boolean.compare(a.asInstanceOf[Boolean], b.asInstanceOf[Boolean])
+    case TimestampType => (a, b) => toTimestamp(a).compareTo(toTimestamp(b))
+    case _ => (a, b) => (a, b) match {
+      case (x: java.sql.Date, y: java.sql.Date)             => x.compareTo(y)
+      case (x: java.time.LocalDate, y: java.time.LocalDate) => x.compareTo(y)
+      case _ => throw new IllegalStateException(
+        s"unorderable pair: ${a.getClass} vs ${b.getClass}")
+    }
+  }
+
+  /** Spark's UTF8String binary-byte order without encoding either side.
+    * UTF-8 byte order is code point order, which equals UTF-16 code
+    * unit order except where a surrogate meets a char in
+    * U+E000..U+FFFF; at a difference involving a surrogate (including
+    * a lone one, which Spark encodes as '?') defer to UTF8String. */
+  private def compareUtf8(x: String, y: String): Int = {
+    val n = math.min(x.length, y.length)
+    var i = 0
+    while (i < n) {
+      val a = x.charAt(i)
+      val b = y.charAt(i)
+      if (a != b) {
+        if (Character.isSurrogate(a) || Character.isSurrogate(b))
+          return org.apache.spark.unsafe.types.UTF8String.fromString(x)
+            .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(y))
+        return a - b
+      }
+      i += 1
+    }
+    x.length - y.length
+  }
+
+  /** Timestamps may surface as Instant or java.sql.Timestamp
+    * depending on the writer; compare in one representation. */
+  private def toTimestamp(v: Any): java.sql.Timestamp = v match {
+    case t: java.time.Instant => java.sql.Timestamp.from(t)
+    case t: java.sql.Timestamp => t
+  }
+
+  private def opTest(where: String): Int => Boolean = where match {
+    case "==" => _ == 0
+    case "!=" => _ != 0
+    case "<"  => _ < 0
+    case "<=" => _ <= 0
+    case ">"  => _ > 0
+    case ">=" => _ >= 0
+  }
+
+  private def passes(tests: Array[Row => Boolean], r: Row): Boolean = {
+    var i = 0
+    while (i < tests.length) { if (!tests(i)(r)) return false; i += 1 }
+    true
+  }
+
+  /** The query's filters compiled to Row predicates (unknown attrs
+    * dropped, like the translator); None if any filter's Spark
+    * cast/coercion semantics aren't safely reproducible. */
+  private def compileFilters(schema: StructType, q: StateQuery): Option[Array[Row => Boolean]] = {
     val tests = new scala.collection.mutable.ArrayBuffer[Row => Boolean]
     q.filters.foreach { f =>
       if (!QueryTranslator.Ops.contains(f.where)) return None
@@ -48,93 +213,7 @@ object StateFastPath {
           }
       }
     }
-    // ordering columns must all be serving primitives (unresolved
-    // keys order as constant null, like StateOps.keyCol's lit(null))
-    val orderCols: Seq[Option[(Row => Any)]] = (keys ++ tieBreak).map { k =>
-      QueryTranslator.resolveType(schema, k) match {
-        case None => Some((_: Row) => null)
-        case Some(dt) =>
-          if (orderable(dt)) Some(pathGetter(schema, k)) else return None
-      }
-    }
-    val getters = orderCols.flatten
-    val filtered = rows.filter(r => tests.forall(_(r)))
-    val ordering: Ordering[Row] = (x: Row, y: Row) => {
-      var result = 0
-      val it = getters.iterator
-      while (result == 0 && it.hasNext) {
-        val g = it.next()
-        result = (g(x), g(y)) match {
-          case (null, null) => 0
-          case (null, _)    => -1 // ASC NULLS FIRST
-          case (_, null)    => 1
-          case (a, b)       => cmp(a, b)
-        }
-      }
-      result
-    }
-    Some(filtered.sorted(ordering))
-  }
-
-  /** Dotted-path getter; null at any intermediate step yields null. */
-  private def pathGetter(schema: StructType, path: String): Row => Any = {
-    val parts = path.split('.')
-    r => {
-      var cur: Any = r
-      var s: DataType = schema
-      var i = 0
-      while (i < parts.length && cur != null) {
-        (s, cur) match {
-          case (st: StructType, row: Row) =>
-            val idx = st.fieldNames.indexOf(parts(i))
-            if (idx < 0) { cur = null }
-            else { cur = row.get(idx); s = st.fields(idx).dataType }
-          case _ => cur = null
-        }
-        i += 1
-      }
-      cur
-    }
-  }
-
-  private def orderable(dt: DataType): Boolean = dt match {
-    case ByteType | ShortType | IntegerType | LongType | FloatType |
-         DoubleType | StringType | BooleanType | TimestampType | DateType => true
-    case _ => false
-  }
-
-  /** Spark-identical comparison over one column's values (both sides
-    * are the SAME DataType by construction). */
-  private def cmp(a: Any, b: Any): Int = (a, b) match {
-    case (x: java.lang.Long, y: java.lang.Long)       => java.lang.Long.compare(x, y)
-    case (x: java.lang.Integer, y: java.lang.Integer) => Integer.compare(x, y)
-    case (x: java.lang.Short, y: java.lang.Short)     => java.lang.Short.compare(x, y)
-    case (x: java.lang.Byte, y: java.lang.Byte)       => java.lang.Byte.compare(x, y)
-    case (x: java.lang.Double, y: java.lang.Double)   => java.lang.Double.compare(x, y)
-    case (x: java.lang.Float, y: java.lang.Float)     => java.lang.Float.compare(x, y)
-    // String.compareTo orders by UTF-16 code unit, which diverges from
-    // Spark's UTF8String binary-byte order once supplementary characters
-    // (surrogate pairs) meet chars in U+E000..U+FFFF. Delegate to
-    // UTF8String itself so the fast path is bit-for-bit the Spark order.
-    case (x: String, y: String) =>
-      org.apache.spark.unsafe.types.UTF8String.fromString(x)
-        .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(y))
-    case (x: java.lang.Boolean, y: java.lang.Boolean) => java.lang.Boolean.compare(x, y)
-    case (x: java.sql.Timestamp, y: java.sql.Timestamp) => x.compareTo(y)
-    case (x: java.time.Instant, y: java.time.Instant) => x.compareTo(y)
-    case (x: java.sql.Date, y: java.sql.Date)         => x.compareTo(y)
-    case (x: java.time.LocalDate, y: java.time.LocalDate) => x.compareTo(y)
-    case _ => throw new IllegalStateException(
-      s"unorderable pair: ${a.getClass} vs ${b.getClass}")
-  }
-
-  private def applyOp(where: String, c: Int): Boolean = where match {
-    case "==" => c == 0
-    case "!=" => c != 0
-    case "<"  => c < 0
-    case "<=" => c <= 0
-    case ">"  => c > 0
-    case ">=" => c >= 0
+    Some(tests.toArray)
   }
 
   /** One filter compiled to a Row predicate, or None if its Spark
@@ -142,29 +221,34 @@ object StateFastPath {
   private def compileFilter(
       schema: StructType, f: StateFilter, colType: DataType): Option[Row => Boolean] = {
     val get = pathGetter(schema, f.attr)
+    val test = opTest(f.where)
     f.by match {
       case FilterBy.Value(v) =>
         castLiteral(v, colType).map { lit =>
+          val c = valueCmp(colType)
           r => {
             val lhs = get(r)
-            lhs != null && applyOp(f.where, cmp(normalize(lhs), lit))
+            lhs != null && test(c(lhs, lit))
           }
         }
       case FilterBy.When(ts) =>
         if (colType != TimestampType) None
-        else Some { r =>
-          val lhs = get(r)
-          lhs != null && applyOp(f.where, cmp(normalize(lhs), normalize(ts)))
+        else {
+          val c = valueCmp(TimestampType)
+          Some { r =>
+            val lhs = get(r)
+            lhs != null && test(c(lhs, ts))
+          }
         }
       case FilterBy.Attr(other) =>
         QueryTranslator.resolveType(schema, other) match {
           case Some(otherType) if otherType == colType && orderable(colType) =>
             val getOther = pathGetter(schema, other)
+            val c = valueCmp(colType)
             Some { r =>
               val lhs = get(r)
               val rhs = getOther(r)
-              lhs != null && rhs != null &&
-                applyOp(f.where, cmp(normalize(lhs), normalize(rhs)))
+              lhs != null && rhs != null && test(c(lhs, rhs))
             }
           case Some(_) => None // cross-type: Catalyst coercion rules apply
           case None    => None // translator drops it; approximating the
@@ -172,13 +256,6 @@ object StateFastPath {
           // fall back so the Spark path does the dropping + warning
         }
     }
-  }
-
-  /** Timestamps may surface as Instant or java.sql.Timestamp
-    * depending on the writer; compare in one representation. */
-  private def normalize(v: Any): Any = v match {
-    case t: java.time.Instant => java.sql.Timestamp.from(t)
-    case other                => other
   }
 
   /** Spark-equivalent literal cast to the column type — only the

@@ -9,7 +9,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.ChannelSpec
-import graft.state.{FilterBy, StateFilter, StateQuery}
+import graft.state.{FilterBy, StateFilter, StateOps, StateQuery}
 import graft.streaming.{ChannelRuntime, EngineLog}
 
 /** End-to-end streaming gateway tests, mirroring the reference's
@@ -351,6 +351,85 @@ class ChannelRuntimeSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(rt.lookup("bounded", "i1").isEmpty, "eldest entry must be evicted")
       assert(rt.lookup("bounded", "i2").isDefined && rt.lookup("bounded", "i3").isDefined)
       assert(ids.size === 3)
+    } finally rt.stop()
+  }
+
+  test("frontier keys group like Spark: dotted keyby, NaN and -0.0 keys") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.col
+    val schema = StructType(Seq(
+      StructField("id", StringType), StructField("timestamp", TimestampType),
+      StructField("nested", StructType(Seq(StructField("inner", LongType)))),
+      StructField("d", DoubleType), StructField("x", LongType)))
+    val keyings = Map(
+      "dotted" -> Seq("nested.inner"), "dbl" -> Seq("d"), "pair" -> Seq("d", "nested.inner"))
+    val rt = new ChannelRuntime(spark,
+      keyings.map { case (n, k) => n -> ChannelSpec(n, schema, stateKeyby = k) },
+      Files.createTempDirectory("graft-keys-ckpt").toString)
+    rt.start()
+    try {
+      val inner = Seq(10L, 20L, 30L, 10L, 20L, 10L, 20L, 30L)
+      val ds = Seq(1.0, Double.NaN, -0.0, Double.NaN, 0.0, -0.0, Double.NaN, 0.0)
+      val ticks = inner.zip(ds).zipWithIndex.map { case ((i, d), x) =>
+        Map[String, Any]("nested" -> Row(i), "d" -> d, "x" -> x.toLong)
+      }
+      keyings.foreach { case (ch, keys) =>
+        // two ticks per micro-batch: keys repeat within and across batches
+        val sent = ticks.grouped(2).flatMap { g =>
+          val s = rt.send(ch, g); rt.processAllAvailable(); s
+        }.toSeq
+        val df = spark.createDataFrame(sent.asJava, rt.runtimeSchema(rt.specs(ch)))
+        val expected = StateOps.query(
+          StateOps.lastByKey(df, keys, ChannelRuntime.SeqCol).select(df.columns.map(col): _*),
+          keys, StateQuery(), tieBreak = Seq(ChannelRuntime.SeqCol)).collect().toSeq
+        assert(rt.state(ch) === expected, ch)
+        assert(rt.driverStateSize(ch) === expected.size, ch)
+      }
+      assert(rt.state("dotted").size === 3) // 10, 20, 30
+      assert(rt.state("dbl").size === 3)    // 1.0, NaN, 0.0 / -0.0
+      assert(rt.state("pair").size === 6)
+    } finally rt.stop()
+  }
+
+  test("readers never see a torn batch: every state read carries one marker") {
+    import scala.jdk.CollectionConverters._
+    val schema = StructType(Seq(StructField("k", LongType), StructField("m", LongType)))
+    val rt = new ChannelRuntime(spark,
+      Map("wide" -> ChannelSpec("wide", schema, stateKeyby = Seq("k"))),
+      Files.createTempDirectory("graft-torn-ckpt").toString)
+    val keys = 1000
+    // one send = one MemoryStream add = never split across micro-batches,
+    // so after any batch every key carries the same marker
+    def rewrite(m: Long): Unit =
+      rt.send("wide", (0 until keys).map(k => Map[String, Any]("k" -> k.toLong, "m" -> m)))
+    rt.start()
+    try {
+      rewrite(0L)
+      rt.processAllAvailable()
+      val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+      val problems = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val readers = Seq(
+        (StateQuery(), keys),
+        (StateQuery(Seq(StateFilter("k", FilterBy.Value(keys / 2L), "<"))), keys / 2)
+      ).map { case (q, expectRows) =>
+        new Thread(() => while (!stop.get()) {
+          val rows = rt.state("wide", q)
+          val markers = rows.map(_.getLong(1)).distinct
+          if (markers.size != 1 || rows.size != expectRows)
+            problems.add(s"${rows.size} rows, markers ${markers.take(5)}")
+          markers.foreach(seen.add)
+        })
+      }
+      readers.foreach(_.start())
+      (1L to 20L).foreach { m => rewrite(m); Thread.sleep(20) }
+      rt.processAllAvailable()
+      stop.set(true)
+      readers.foreach(_.join())
+      assert(problems.isEmpty, problems.asScala.take(3).mkString("; "))
+      assert(seen.size > 1, "reads did not overlap the rewrites")
+      assert(rt.state("wide").map(_.getLong(1)).distinct === Seq(20L))
     } finally rt.stop()
   }
 }

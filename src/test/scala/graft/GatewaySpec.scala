@@ -506,4 +506,137 @@ class GatewaySpec extends AnyFunSuite {
       assert(mapper.readTree(r.body()).get("detail").asText() == "Channel not found: quotes/a\"b")
     } finally { gw.stop(); rt.stop() }
   }
+
+  /** The Jackson tree row encoder that the streaming writer replaced,
+    * kept here as the byte-for-byte oracle. */
+  private def treeRow(m: com.fasterxml.jackson.databind.ObjectMapper,
+      r: org.apache.spark.sql.Row, schema: StructType): com.fasterxml.jackson.databind.node.ObjectNode = {
+    val node = m.createObjectNode()
+    schema.fields.zipWithIndex.foreach { case (f, i) =>
+      if (r.isNullAt(i)) node.putNull(f.name)
+      else f.dataType match {
+        case StringType => node.put(f.name, r.getString(i))
+        case LongType => node.put(f.name, r.getLong(i))
+        case IntegerType => node.put(f.name, r.getInt(i))
+        case DoubleType => node.put(f.name, r.getDouble(i))
+        case FloatType => node.put(f.name, r.getFloat(i).toDouble)
+        case BooleanType => node.put(f.name, r.getBoolean(i))
+        case TimestampType =>
+          node.put(f.name, r.getAs[java.sql.Timestamp](i).toInstant.toString)
+        case s: StructType => node.set[com.fasterxml.jackson.databind.JsonNode](
+          f.name, treeRow(m, r.getStruct(i), s))
+        case ArrayType(et, _) =>
+          val arr = node.putArray(f.name)
+          r.getSeq[Any](i).foreach {
+            case null => arr.addNull()
+            case x: String => arr.add(x)
+            case x: Long => arr.add(x)
+            case x: Int => arr.add(x)
+            case x: Double => arr.add(x)
+            case x: org.apache.spark.sql.Row => arr.add(treeRow(m, x, et.asInstanceOf[StructType]))
+            case x => arr.add(String.valueOf(x))
+          }
+        case _ => node.put(f.name, String.valueOf(r.get(i)))
+      }
+    }
+    node
+  }
+
+  test("streaming row encoder emits the tree encoder's bytes (rows, frames, cycles, routes)") {
+    import org.apache.spark.sql.Row
+    import graft.streaming.EngineLog
+    val m = new com.fasterxml.jackson.databind.ObjectMapper()
+    def utf8(s: String) = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val inner = StructType(Seq(StructField("a", LongType), StructField("s", StringType)))
+    val mschema = StructType(Seq(
+      StructField("s", StringType), StructField("l", LongType), StructField("i", IntegerType),
+      StructField("d", DoubleType), StructField("f", FloatType), StructField("b", BooleanType),
+      StructField("ts", TimestampType), StructField("date", DateType),
+      StructField("dec", DecimalType(10, 3)), StructField("st", inner),
+      StructField("structs", ArrayType(inner)), StructField("longs", ArrayType(LongType)),
+      StructField("ints", ArrayType(IntegerType)), StructField("dbls", ArrayType(DoubleType)),
+      StructField("flts", ArrayType(FloatType)), StructField("strs", ArrayType(StringType)),
+      StructField("bools", ArrayType(BooleanType)), StructField("m", MapType(StringType, LongType))))
+    val emoji = new String(Character.toChars(0x1F600))
+    val rows = Seq(
+      Row(s"héllo ☃ $emoji \"q\" \\ \n\t\u0001  ", Long.MaxValue, Int.MinValue, Double.NaN,
+        1.1f, true, java.sql.Timestamp.valueOf("2024-01-02 03:04:05.123456"),
+        java.sql.Date.valueOf("2024-01-02"), new java.math.BigDecimal("12.345"), Row(1L, "ü"),
+        Seq(Row(2L, "x"), null, Row(null, null)), Seq(1L, null, -1L), Seq(1, 2),
+        Seq(0.1, Double.NaN, Double.NegativeInfinity, -0.0), Seq(1.5f, Float.NaN),
+        Seq("a", null, emoji), Seq(true, false), Map("k" -> 1L)),
+      Row(Seq.fill(mschema.length)(null): _*),
+      Row("lone \uD800 surrogate", 0L, 0, Double.PositiveInfinity, -0.0f, false,
+        new java.sql.Timestamp(0L), null, null, Row(null, "日本"), Seq.empty, Seq.empty, null,
+        Seq(1e300, 4.9e-324), Seq.empty, Seq.empty, null, Map.empty),
+      Row("", -1L, 7, Double.NegativeInfinity, Float.NaN, null, null, null, null, null,
+        null, null, null, null, null, null, null, null),
+      Row("x", 1L, 1, -0.0, Float.PositiveInfinity, null, null, null, null, null,
+        null, null, null, null, null, null, null, null))
+    val treeArray = m.createArrayNode()
+    rows.foreach(r => treeArray.add(treeRow(m, r, mschema)))
+    assert(EngineLog.rowsJson(rows, mschema) === utf8(m.writeValueAsString(treeArray)))
+    rows.foreach { r =>
+      assert(EngineLog.rowJson(r, mschema) === utf8(m.writeValueAsString(treeRow(m, r, mschema))))
+      for (key <- Seq(None, Some("AAPL"), Some(s"k$emoji"))) {
+        val frame = m.createObjectNode()
+        frame.put("channel", "quotes")
+        key.foreach(frame.put("key", _))
+        frame.set[com.fasterxml.jackson.databind.JsonNode]("data", treeRow(m, r, mschema))
+        assert(Gateway.frameJson("quotes", key, r, mschema) === utf8(m.writeValueAsString(frame)))
+      }
+    }
+    // timestamps: the hand-rolled ISO instant equals Instant.toString,
+    // across years 0000..9999 and beyond, for every fraction width
+    val rnd = new java.util.SplittableRandom(7)
+    val instants = Seq(0L, -1L, 1L, -62167219200000L, -62167219200001L, 253402300799999L,
+      253402300800000L, 951782400000L) ++ Seq.fill(20000)(rnd.nextLong(-70000000000000L, 300000000000000L))
+    instants.zipWithIndex.foreach { case (ms, k) =>
+      val t = new java.sql.Timestamp(ms)
+      k % 4 match {
+        case 0 => t.setNanos(0)
+        case 1 => t.setNanos(rnd.nextInt(1000) * 1000000)
+        case 2 => t.setNanos(rnd.nextInt(1000000) * 1000)
+        case _ => t.setNanos(rnd.nextInt(1000000000))
+      }
+      val fast = EngineLog.jsonBytes(EngineLog.writeInstant(_, t))
+      assert(fast === utf8(m.writeValueAsString(t.toInstant.toString)), t.toInstant.toString)
+    }
+
+    // an engine-log cycle, as EngineLog.Writer and the log catalog entries write it
+    val root = m.createObjectNode()
+    root.put("csp_engine_timestamp", 1700000000123L)
+    Seq("a" -> rows.take(2), "b" -> rows.drop(2)).foreach { case (ch, rs) =>
+      val arr = root.putArray(ch)
+      rs.foreach(r => arr.add(treeRow(m, r, mschema)))
+    }
+    val out = new java.io.StringWriter()
+    EngineLog.writeCycle(out, 1700000000123L,
+      Seq(("a", rows.take(2), mschema), ("b", rows.drop(2), mschema)))
+    assert(out.toString === m.writeValueAsString(root))
+
+    // the live routes serve the same bytes
+    val rt = new ChannelRuntime(spark,
+      Map("matrix" -> ChannelSpec("matrix", mschema, stateKeyby = Seq("l"))),
+      Files.createTempDirectory("graft-gw-bytes-ckpt").toString)
+    rt.start()
+    val gw = new Gateway(rt, 0).start()
+    try {
+      rt.send("matrix", rows.filter(!_.isNullAt(1)).map(r =>
+        mschema.fieldNames.zipWithIndex.map { case (n, i) => n -> r.get(i) }.toMap))
+      rt.processAllAvailable()
+      val rtSchema = rt.runtimeSchema(rt.specs("matrix"))
+      def tree(rs: Seq[Row]): Array[Byte] = {
+        val arr = m.createArrayNode()
+        rs.foreach(r => arr.add(treeRow(m, r, rtSchema)))
+        utf8(m.writeValueAsString(arr))
+      }
+      def body(path: String): Array[Byte] = http.send(
+        HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${gw.boundPort}/api/v1/$path")).build(),
+        HttpResponse.BodyHandlers.ofByteArray()).body()
+      assert(rt.state("matrix").size === 4)
+      assert(body("state/matrix") === tree(rt.state("matrix")))
+      assert(body("last/matrix") === tree(rt.last("matrix").toSeq))
+    } finally { gw.stop(); rt.stop() }
+  }
 }

@@ -22,7 +22,7 @@ Reference contract being guarded: tests/server/web/test_webserver.py
 (the reference's 82-844 route-shape assertions).
 
 Usage (from a dedicated worktree, same discipline as mutate.py):
-  git worktree add /tmp/graft_smut HEAD
+  git clone . /tmp/graft_smut   # or: git worktree add /tmp/graft_smut HEAD
   python3 tools/mutate_serving.py --worktree /tmp/graft_smut \
       --out receipts/mutants_w3.jsonl [--ids s01,...]
 """
@@ -31,6 +31,7 @@ import argparse, json, os, subprocess, sys, time
 GW = "src/main/scala/graft/server/Gateway.scala"
 WS = "src/main/scala/graft/server/WebSocketServer.scala"
 CR = "src/main/scala/graft/streaming/ChannelRuntime.scala"
+SFP = "src/main/scala/graft/state/StateFastPath.scala"
 
 # (id, file, old, new, note); `old` must occur EXACTLY once.
 MUTANTS = [
@@ -50,21 +51,21 @@ MUTANTS = [
      "X13: row filter INVERTED — caller sees everyone's rows except their own"),
     ("s04_basket_last_no_404", GW,
      '''          if (!keyDeclared(name, key))
-            respond(ex, 404, s"""{"detail":"Channel not found: $name/$key"}""")
+            respond(ex, 404, detailJson(s"Channel not found: $name/$key"))
           else {
             val observed = runtime.lastByBasketKey(name).collectFirst {''',
      '''          if (false)
-            respond(ex, 404, s"""{"detail":"Channel not found: $name/$key"}""")
+            respond(ex, 404, detailJson(s"Channel not found: $name/$key"))
           else {
             val observed = runtime.lastByBasketKey(name).collectFirst {''',
      "/last/{ch}/{key}: an undeclared basket key no longer 404s"),
     ("s05_send_422_as_200", GW,
      '''            case e: IllegalArgumentException =>
-              respond(ex, 422, s"""{"detail":${mapper.writeValueAsString(e.getMessage)}}""")
+              respond(ex, 422, detailJson(e.getMessage))
           }
         // static-field routes (reference MountFieldRestRoutes,''',
      '''            case e: IllegalArgumentException =>
-              respond(ex, 200, s"""{"detail":${mapper.writeValueAsString(e.getMessage)}}""")
+              respond(ex, 200, detailJson(e.getMessage))
           }
         // static-field routes (reference MountFieldRestRoutes,''',
      "/send validation failure answers 200 instead of 422"),
@@ -91,10 +92,7 @@ MUTANTS = [
      "        val wantAll = true",
      "WS fanout ignores the subscription set — every conn gets every channel"),
     ("s11_ws_identity_any", WS,
-     "          identity.exists { id =>\n"
-     "            val i = schema.fieldNames.indexOf(field)\n"
-     "            i >= 0 && !r.isNullAt(i) && String.valueOf(r.get(i)) == id\n"
-     "          }",
+     "          identity.exists(id => i >= 0 && !r.isNullAt(i) && String.valueOf(r.get(i)) == id)",
      "          identity.isDefined",
      "WS identity filter: ANY authenticated identity sees every row"),
     ("s12_next_resolves_previous", CR,
@@ -119,6 +117,21 @@ MUTANTS = [
      '''            case None if simpleAuthUsers.nonEmpty =>
               respond(ex, 200, """{"detail":"Session not found"}""")''',
      "/whoami without a session answers 200 instead of 401"),
+    ("s15_frontier_snapshot_unpublished", CR,
+     "      snapshot = order match {",
+     "      val unpublished = order match {",
+     "state frontier: upserts land in the key map but no snapshot is published"),
+    ("s16_cmp_double_compare", SFP,
+     "      if (x == y) 0 else java.lang.Double.compare(x, y)",
+     "      java.lang.Double.compare(x, y)",
+     "fast path orders/filters doubles with Double.compare: -0.0 < 0.0, unlike Spark"),
+    ("s17_frontier_key_top_level", CR,
+     "    private val getters = keys.map(StateFastPath.pathGetter(schema, _)).toArray",
+     "    private val getters = keys.map { k =>\n"
+     "      val i = schema.fieldNames.indexOf(k)\n"
+     "      (r: Row) => if (i >= 0) r.get(i) else null\n"
+     "    }.toArray",
+     "state frontier keys by top-level indexOf: a dotted keyby puts every row under null"),
 ]
 
 # Prefilter: serving-focused suites, most likely to see these bugs.
@@ -126,7 +139,7 @@ PREFILTER_SUITES = [
     "graft.GatewaySpec", "graft.GraftGatewaySpec", "graft.WebSocketSpec",
     "graft.GatewayClientSpec", "graft.GatewayTestHarnessSpec",
     "graft.ServerMiddlewareSpec", "graft.ChannelRuntimeSpec",
-    "graft.ViewServerDeltaSpec",
+    "graft.ViewServerDeltaSpec", "graft.StateFastPathSpec",
 ]
 
 
