@@ -15,6 +15,7 @@ import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.state.{FilterBy, StateQuery}
+import graft.streaming.EngineLog
 
 /** Typed errors mirroring the reference client's exception family
   * (client/client.py + utils: `ServerRouteNotFoundException` on 404,
@@ -50,6 +51,16 @@ final case class GatewayClientConfig(
     /** WebSocket port (Gateway.wsPort). None = streaming disabled. */
     wsPort: Option[Int] = None) {
 
+  /** Credential headers of every request, REST and WebSocket alike;
+    * `apiKey` rides separately as the `token` query parameter. */
+  private[client] def authHeaders: Seq[(String, String)] =
+    bearerToken.map(t => "Authorization" -> s"Bearer $t").toSeq ++
+      basicAuth.map { case (u, p) =>
+        "Authorization" -> ("Basic " + java.util.Base64.getEncoder
+          .encodeToString(s"$u:$p".getBytes(StandardCharsets.UTF_8)))
+      } ++
+      identity.map("x-identity" -> _)
+
   def hostUrl: String = {
     val h =
       if (host.startsWith("http://") || host.startsWith("https://")) host
@@ -72,8 +83,8 @@ final class GatewayResponse private[client] (val json: JsonNode, mapper: ObjectM
   /** Rows as maps; a single-object response is list-wrapped like the
     * reference's response shaping (one row → [row], empty → []). */
   def rows: Seq[Map[String, Any]] =
-    if (json.isArray) json.elements().asScala.map(jsonToAny(_).asInstanceOf[Map[String, Any]]).toSeq
-    else if (json.isObject) Seq(jsonToAny(json).asInstanceOf[Map[String, Any]])
+    if (json.isArray) json.elements().asScala.map(EngineLog.jsonValue(_).asInstanceOf[Map[String, Any]]).toSeq
+    else if (json.isObject) Seq(EngineLog.jsonValue(json).asInstanceOf[Map[String, Any]])
     else Nil
 
   def isEmpty: Boolean = json.isArray && json.isEmpty
@@ -90,15 +101,6 @@ final class GatewayResponse private[client] (val json: JsonNode, mapper: ObjectM
       else Seq(mapper.writeValueAsString(json))
     spark.read.json(lines.toDS())
   }
-
-  private def jsonToAny(n: JsonNode): Any =
-    if (n == null || n.isNull) null
-    else if (n.isIntegralNumber) n.asLong()
-    else if (n.isFloatingPointNumber) n.asDouble()
-    else if (n.isBoolean) n.asBoolean()
-    else if (n.isArray) n.elements().asScala.map(jsonToAny).toSeq
-    else if (n.isObject) n.properties().asScala.map(e => e.getKey -> jsonToAny(e.getValue)).toMap
-    else n.asText()
 
   override def toString: String = raw
 }
@@ -127,7 +129,8 @@ final class GatewayResponse private[client] (val json: JsonNode, mapper: ObjectM
   * Auth: `apiKey` rides as the `token` query parameter (reference
   * `_buildroute`), `bearerToken` as `Authorization: Bearer`,
   * `basicAuth` as HTTP Basic (this gateway's simple-auth), and the
-  * explicit `identity` as `x-identity`.
+  * explicit `identity` as `x-identity` — on REST calls and on the
+  * WebSocket handshake alike.
   */
 final class GatewayClient(val config: GatewayClientConfig) {
 
@@ -190,13 +193,7 @@ final class GatewayClient(val config: GatewayClientConfig) {
 
   private def baseRequest(url: String): HttpRequest.Builder = {
     val b = HttpRequest.newBuilder(URI.create(url))
-    config.bearerToken.foreach(t => b.header("Authorization", s"Bearer $t"))
-    config.basicAuth.foreach { case (u, p) =>
-      val cred = java.util.Base64.getEncoder
-        .encodeToString(s"$u:$p".getBytes(StandardCharsets.UTF_8))
-      b.header("Authorization", s"Basic $cred")
-    }
-    config.identity.foreach(b.header("x-identity", _))
+    config.authHeaders.foreach { case (k, v) => b.header(k, v) }
     b
   }
 
@@ -454,13 +451,9 @@ final class GatewayStream private[client] (
       else if (config.host.startsWith("https://")) config.host.stripPrefix("https://")
       else config.host
     val b = HttpClient.newHttpClient().newWebSocketBuilder()
-    config.identity.foreach(b.header("x-identity", _))
-    config.basicAuth.foreach { case (u, p) =>
-      val cred = java.util.Base64.getEncoder
-        .encodeToString(s"$u:$p".getBytes(StandardCharsets.UTF_8))
-      b.header("Authorization", s"Basic $cred")
-    }
-    b.buildAsync(URI.create(s"ws://$wsHost:$wsPort/api/v1/stream"), listener)
+    config.authHeaders.foreach { case (k, v) => b.header(k, v) }
+    val token = config.apiKey.fold("")(k => "?token=" + java.net.URLEncoder.encode(k, "UTF-8"))
+    b.buildAsync(URI.create(s"ws://$wsHost:$wsPort/api/v1/stream$token"), listener)
       .join()
   }
 

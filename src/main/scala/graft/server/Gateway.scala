@@ -85,6 +85,12 @@ final class Gateway(
   import Gateway.detailJson
 
   private val mapper = new ObjectMapper()
+  private val oauthSupport: Option[OAuthSupport] = oauth.map(new OAuthSupport(_))
+  /** Auth gate, send decoder and X13 row filter, shared with the
+    * WebSocket endpoint; built (and its auth fields checked) before any
+    * socket binds. */
+  private val contract = new RequestContract(runtime, authFilterFields, apiKeys,
+    simpleAuthUsers, sessionTimeoutMillis, sessionCookieName, oauthSupport, apiKeyValidator)
   // TCP_NODELAY on the JDK server: without it, small keep-alive
   // responses interleave with the peer's 40 ms delayed ACK and every
   // interactive read floors at ~44 ms (measured in round 8, SCALE.md
@@ -101,171 +107,21 @@ final class Gateway(
 
   /** S6 — companion WebSocket endpoint (RFC 6455 needs a raw socket;
     * the JDK http server cannot upgrade connections, so it binds its
-    * own port). Same runtime, same identity filtering.
+    * own port). Same runtime, same request contract.
     */
-  private val ws = new WebSocketServer(runtime, authFilterFields,
-    identityFromHeaders = wsIdentity)
+  private val ws = new WebSocketServer(runtime, contract)
   def wsPort: Int = ws.boundPort
 
-  private val oauthSupport: Option[OAuthSupport] = oauth.map(new OAuthSupport(_))
-
-  /** Auth identity for a WebSocket handshake, from its (lowercased)
-    * headers: simple-auth session cookie, then Basic, then the OAuth
-    * session cookie / bearer (same ordering as the REST side). */
-  private def wsIdentity(headers: Map[String, String]): Option[String] = {
-    def cookieVal(name: String): Option[String] = headers.get("cookie")
-      .flatMap(_.split(";").map(_.trim).collectFirst {
-        case kv if kv.startsWith(name + "=") => kv.stripPrefix(name + "=")
-      })
-    val simple =
-      if (simpleAuthUsers.isEmpty) None
-      else cookieVal(sessionCookieName).flatMap(sessionUserByUuid)
-        .orElse(headers.get("authorization").flatMap(basicUserOf))
-    simple.orElse(oauthSupport.flatMap(o =>
-      o.identityFrom(cookieVal(o.cookieName), headers.get("authorization"))))
-  }
-
-  /** All `token` credentials on a request: query param, header, or
-    * cookie (reference api_key.py:46-59 extraction order). */
-  private def presentedTokens(ex: HttpExchange): Seq[String] = {
-    val fromQuery = Option(ex.getRequestURI.getRawQuery)
-      .flatMap(_.split("&").collectFirst {
-        case kv if kv.startsWith("token=") =>
-          java.net.URLDecoder.decode(kv.stripPrefix("token="), "UTF-8")
-      })
-    val fromHeader = Option(ex.getRequestHeaders.getFirst("token"))
-    val fromCookie = cookie(ex, "token")
-    Seq(fromQuery, fromHeader, fromCookie).flatten
-  }
-
-  /** API-key check (reference api_key.py): any configured key. */
-  private def apiKeyAuthorized(ex: HttpExchange): Boolean =
-    apiKeys.nonEmpty && presentedTokens(ex).exists(apiKeys.contains)
-
-  /** External-validator identity: first presented token the hook
-    * accepts (api_key_external.py get_identity_from_credentials). */
-  private def apiKeyIdentity(ex: HttpExchange): Option[String] =
-    apiKeyValidator.flatMap { v =>
-      presentedTokens(ex).iterator.map(v).collectFirst { case Some(id) => id }
-    }
-
-  /** OAuth identity: session cookie, else validated bearer. */
-  private def oauthIdentity(ex: HttpExchange): Option[String] =
-    oauthSupport.flatMap(o => o.identityFrom(
-      cookie(ex, o.cookieName),
-      Option(ex.getRequestHeaders.getFirst("Authorization"))))
-
-  // ---- Simple Auth (reference middleware/simple.py) ----------------------
-
-  /** `identity_store`: session UUID → (username, expiry). Expired
-    * entries are purged lazily on every lookup. */
-  private val sessions =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
-
-  private def cookie(ex: HttpExchange, name: String): Option[String] =
-    Option(ex.getRequestHeaders.getFirst("Cookie"))
-      .flatMap(_.split(";").map(_.trim).collectFirst {
-        case kv if kv.startsWith(name + "=") => kv.stripPrefix(name + "=")
-      })
-
-  /** Live (unexpired) session's user for a session UUID, if any. */
-  private def sessionUserByUuid(uuid: String): Option[String] =
-    Option(sessions.get(uuid)).flatMap { case (user, expires) =>
-      if (System.currentTimeMillis() <= expires) Some(user)
-      else { sessions.remove(uuid); None }
-    }
-
-  /** Username for a live session cookie, if any. */
-  private def sessionUser(ex: HttpExchange): Option[String] =
-    cookie(ex, sessionCookieName).flatMap(sessionUserByUuid)
-
-  /** Username for a valid `Authorization: Basic …` header value. */
-  private def basicUserOf(header: String): Option[String] =
-    Option(header).filter(_.startsWith("Basic ")).flatMap { h =>
-      try {
-        val decoded = new String(
-          java.util.Base64.getDecoder.decode(h.stripPrefix("Basic ").trim),
-          StandardCharsets.UTF_8)
-        decoded.split(":", 2) match {
-          // constant-time compare: a naive String.equals leaks the
-          // matching prefix length through response timing
-          case Array(u, p) if simpleAuthUsers.get(u).exists(expect =>
-            java.security.MessageDigest.isEqual(
-              expect.getBytes(StandardCharsets.UTF_8),
-              p.getBytes(StandardCharsets.UTF_8))) => Some(u)
-          case _ => None
-        }
-      } catch { case NonFatal(_) => None }
-    }
-
-  /** Username for valid HTTP Basic credentials, if presented. */
-  private def basicUser(ex: HttpExchange): Option[String] =
-    Option(ex.getRequestHeaders.getFirst("Authorization")).flatMap(basicUserOf)
-
-  /** Simple-auth identity (session cookie first, then Basic —
-    * reference get_identity_from_credentials ordering). */
-  private def simpleAuthUser(ex: HttpExchange): Option[String] =
-    if (simpleAuthUsers.isEmpty) None
-    else sessionUser(ex).orElse(basicUser(ex))
-
-  private def createSession(user: String): String = {
-    // sweep expired entries here: lazy lookup-purge alone never frees
-    // sessions whose uuid is simply abandoned, a slow leak on a
-    // long-lived gateway; one O(live sessions) pass per login is cheap
-    val now = System.currentTimeMillis()
-    sessions.entrySet().removeIf(e => e.getValue._2 < now)
-    val uuid = java.util.UUID.randomUUID().toString
-    sessions.put(uuid, (user, now + sessionTimeoutMillis))
-    uuid
-  }
-
-  private def authDisabled: Boolean =
-    apiKeys.isEmpty && simpleAuthUsers.isEmpty &&
-      oauthSupport.isEmpty && apiKeyValidator.isEmpty
-
-  /** Resolve the request's authenticated identity ONCE per exchange
-    * and cache it on the exchange: the OAuth bearer path and the
-    * external key validator are network round trips, and both the
-    * auth gate and the X13 row filter need the answer — without the
-    * cache every authenticated request paid the external validation
-    * twice (ADVICE r8). Resolution order matches the X13 filter's
-    * (simple auth, then OAuth, then external validator). */
-  // NOT HttpExchange.setAttribute — that map belongs to the
-  // HttpContext and is shared across ALL exchanges, which would leak
-  // one request's identity into the next. The gate and the handler
-  // run on the same dispatch thread for one exchange, so a
-  // ThreadLocal keyed by the exchange reference is a safe cache.
-  private val identityCache =
-    new ThreadLocal[(HttpExchange, Option[String])]
-
-  private def resolvedIdentity(ex: HttpExchange): Option[String] =
-    identityCache.get() match {
-      case (cachedEx, id) if cachedEx eq ex => id
-      case _ =>
-        val id = simpleAuthUser(ex).orElse(oauthIdentity(ex))
-          .orElse(apiKeyIdentity(ex))
-        identityCache.set((ex, id))
-        id
-    }
-
-  private def authorized(ex: HttpExchange): Boolean =
-    authDisabled || apiKeyAuthorized(ex) || resolvedIdentity(ex).nonEmpty
-
-  /** Wrap a context handler with the auth gate. 403 is the API-key
-    * middleware's rejection (api_key.py); session-based mounts
-    * (simple auth, OAuth) reject with 401 + the matching challenge
-    * (simple.py's / oauth.py's auth_error_handler), like the
-    * reference. Co-mounted middlewares: any one passing authorizes.
-    */
-  private def gated(h: HttpExchange => Unit): HttpExchange => Unit =
+  /** Wrap a context handler with the auth gate; the handler gets the
+    * request's identity, resolved once. */
+  private def gated(h: (HttpExchange, Option[String]) => Unit): HttpExchange => Unit =
     ex =>
-      if (authorized(ex)) h(ex)
-      else if (apiKeys.isEmpty && apiKeyValidator.isEmpty &&
-          (simpleAuthUsers.nonEmpty || oauthSupport.nonEmpty)) {
-        ex.getResponseHeaders.set("WWW-Authenticate",
-          if (simpleAuthUsers.nonEmpty) "Basic" else "Bearer")
-        respond(ex, 401, """{"detail":"unauthorized"}""")
-      } else respond(ex, 403, """{"detail":"unauthorized"}""")
+      contract.admit(Gateway.view(ex)) match {
+        case Right(identity) => h(ex, identity)
+        case Left(refusal) =>
+          refusal.challenge.foreach(ex.getResponseHeaders.set("WWW-Authenticate", _))
+          respond(ex, refusal.status, RequestContract.UnauthorizedBody)
+      }
 
   private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
     val bytes = body.getBytes(StandardCharsets.UTF_8)
@@ -365,52 +221,27 @@ final class Gateway(
     mapper.writeValueAsString(root)
   }
 
-  private def rowsJson(name: String, rows: Seq[org.apache.spark.sql.Row]): Array[Byte] =
-    EngineLog.rowsJson(rows, runtime.runtimeSchema(runtime.specs(name)))
+  private def schemaOf(name: String): org.apache.spark.sql.types.StructType =
+    runtime.runtimeSchema(runtime.specs(name))
 
-  /** X13 row-level security: keep only rows owned by the identity. */
-  private def identityFilter(
-      name: String, identity: Option[String],
-      rows: Seq[org.apache.spark.sql.Row]): Seq[org.apache.spark.sql.Row] =
-    (authFilterFields.get(name), identity) match {
-      case (Some(field), Some(id)) =>
-        val schema = runtime.runtimeSchema(runtime.specs(name))
-        val i = schema.fieldNames.indexOf(field)
-        if (i < 0) rows else rows.filter(r => !r.isNullAt(i) && String.valueOf(r.get(i)) == id)
-      case (Some(_), None) => Nil // auth-filtered channel, anonymous caller
-      case _ => rows
-    }
+  /** The caller's rows of channel `name` (X13) as a JSON array. */
+  private def respondRows(ex: HttpExchange, name: String, identity: Option[String],
+      rows: Seq[org.apache.spark.sql.Row]): Unit = {
+    val schema = schemaOf(name)
+    respondJson(ex, 200, EngineLog.rowsJson(contract.visible(name, schema, identity, rows), schema))
+  }
 
-  /** X13 over an arbitrary row set (mounted views carry their own
-    * compiled schema, not a channel schema): caller's rows only;
-    * anonymous callers of a filtered surface see nothing. */
-  private def identityFilterRows(
-      rows: Seq[org.apache.spark.sql.Row],
-      schema: org.apache.spark.sql.types.StructType,
-      field: String,
-      identity: Option[String]): Seq[org.apache.spark.sql.Row] =
-    identity match {
-      case Some(id) =>
-        val i = schema.fieldNames.indexOf(field)
-        if (i < 0) Nil
-        else rows.filter(r => !r.isNullAt(i) && String.valueOf(r.get(i)) == id)
-      case None => Nil
-    }
-
-  private def handle(ex: HttpExchange): Unit =
+  /** `identity` is the gate's X13 identity (reference
+    * IdentityAwareMiddlewareMixin: the auth middleware's identity feeds
+    * the filter). */
+  private def handle(ex: HttpExchange, identity: Option[String]): Unit =
     try {
       val path = ex.getRequestURI.getPath.stripPrefix("/api/v1/")
       val parts = path.split("/").toList
-      // X13 identity: explicit header, else the simple-auth principal
-      // (reference IdentityAwareMiddlewareMixin: the auth middleware's
-      // identity feeds the filter)
-      val identity = Option(ex.getRequestHeaders.getFirst("x-identity"))
-        .orElse(resolvedIdentity(ex)) // cached by the auth gate — no
-                                      // second introspection round trip
       parts match {
         case "whoami" :: Nil =>
           // reference simple.py /whoami: the authenticated identity
-          simpleAuthUser(ex) match {
+          contract.simpleAuthUser(Gateway.view(ex)) match {
             case Some(u) => respond(ex, 200, s"""{"user":"$u"}""")
             case None if simpleAuthUsers.nonEmpty =>
               respond(ex, 401, """{"detail":"Session not found"}""")
@@ -424,7 +255,7 @@ final class Gateway(
               runtime.lastByBasketKey(name).toSeq
                 .sortBy(kv => String.valueOf(kv._1)).map(_._2)
             else runtime.last(name).toSeq
-          respondJson(ex, 200, rowsJson(name, identityFilter(name, identity, rows)))
+          respondRows(ex, name, identity, rows)
         case "last" :: name :: key :: Nil if isBasket(name) =>
           // per-key last (reference last.py:36-76): a key outside the
           // channel's key set → 404 (same admissibility rule as /next
@@ -436,11 +267,11 @@ final class Gateway(
             val observed = runtime.lastByBasketKey(name).collectFirst {
               case (k, row) if String.valueOf(k) == key => row
             }
-            respondJson(ex, 200, rowsJson(name, identityFilter(name, identity, observed.toSeq)))
+            respondRows(ex, name, identity, observed.toSeq)
           }
         case "next" :: name :: Nil if known(name) =>
           val r = runtime.awaitNext(name, 30.seconds)
-          respondJson(ex, 200, rowsJson(name, identityFilter(name, identity, r.toSeq)))
+          respondRows(ex, name, identity, r.toSeq)
         case "next" :: name :: key :: Nil if isBasket(name) =>
           // per-key next (reference futures/adapter.py:99-127); keys
           // outside a declared key set → 404
@@ -448,23 +279,23 @@ final class Gateway(
             respond(ex, 404, detailJson(s"Channel not found: $name/$key"))
           else {
             val r = runtime.awaitNextByKey(name, key, 30.seconds)
-            respondJson(ex, 200, rowsJson(name, identityFilter(name, identity, r.toSeq)))
+            respondRows(ex, name, identity, r.toSeq)
           }
         case "state" :: name :: Nil if known(name) =>
-          val q = queryParam(ex).map(QueryTranslator.parseJson)
+          val q = Gateway.view(ex).query("query").map(QueryTranslator.parseJson)
             .getOrElse(graft.state.StateQuery())
           val rows =
             try runtime.state(name, q)
             catch { case NonFatal(_) => Nil } // reference: errors → []
-          respondJson(ex, 200, rowsJson(name, identityFilter(name, identity, rows)))
+          respondRows(ex, name, identity, rows)
         case "lookup" :: name :: id :: Nil if known(name) =>
-          identityFilter(name, identity, runtime.lookup(name, id).toSeq) match {
-            case Seq(row) =>
-              respondJson(ex, 200, EngineLog.rowJson(row, runtime.runtimeSchema(runtime.specs(name))))
+          val schema = schemaOf(name)
+          contract.visible(name, schema, identity, runtime.lookup(name, id).toSeq) match {
+            case Seq(row) => respondJson(ex, 200, EngineLog.rowJson(row, schema))
             case _ => respond(ex, 404, """{"detail":"id not found"}""")
           }
         case "stream" :: name :: Nil if known(name) =>
-          handleStream(ex, name)
+          handleStream(ex, name, identity)
         case "table" :: Nil =>
           val arr = mapper.createArrayNode()
           viewServer.map(_.names).getOrElse(Nil).foreach(arr.add)
@@ -489,13 +320,7 @@ final class Gateway(
               // serves only the caller's rows — and if the view's
               // projection dropped the auth field (aggregates), it
               // serves nothing rather than leaking everyone's rows
-              val authField = channel.flatMap(authFilterFields.get)
-              val rows = authField match {
-                case None => rawRows
-                case Some(f) if schema.fieldNames.contains(f) =>
-                  identityFilterRows(rawRows, schema, f, identity)
-                case Some(_) => Nil
-              }
+              val rows = channel.fold(rawRows)(contract.visible(_, schema, identity, rawRows))
               if (rest.isEmpty) respondJson(ex, 200, EngineLog.rowsJson(rows, schema))
               else
                 respondBytes(ex, 200,
@@ -512,34 +337,8 @@ final class Gateway(
             return
           }
           val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-          val node = mapper.readTree(body)
-          val objs: Seq[JsonNode] =
-            if (node.isArray) node.elements().asScala.toSeq else Seq(node)
-          val keyCol = runtime.specs(name).basketKey
-          val maps = objs.map { o =>
-            val m = jsonToMap(o)
-            (keyCol, keyOpt) match {
-              case (Some(col), Some(k)) => m + (col -> k)
-              case _                    => m
-            }
-          }
-          // X13 write validation: rows must carry the caller's identity
-          authFilterFields.get(name).foreach { field =>
-            // the auth field must be PRESENT and equal — a row omitting
-            // it must not slip past validation
-            identity match {
-              case Some(id) if maps.forall(m =>
-                m.get(field).exists(v => String.valueOf(v) == id)) => ()
-              case _ => throw new IllegalArgumentException(s"identity mismatch on '$field'")
-            }
-          }
-          try {
-            val rows = runtime.send(name, maps)
-            respondJson(ex, 200, rowsJson(name, rows))
-          } catch {
-            case e: IllegalArgumentException =>
-              respond(ex, 422, detailJson(e.getMessage))
-          }
+          val maps = contract.sendRows(name, mapper.readTree(body), keyOpt, identity)
+          respondRows(ex, name, identity, runtime.send(name, maps))
         // static-field routes (reference MountFieldRestRoutes,
         // mount_fields.py:10-82): GET /field → names, GET
         // /field/{name} → the JSON-serialized value, 404 unknown
@@ -603,14 +402,12 @@ final class Gateway(
     * per tick (the reference's websocket fanout re-expressed on the
     * JDK server; frame payload matches `{"channel","data"}` shape,
     * websocket.py:183-225) plus 1s heartbeat pings (websocket.py:38).
+    * Frames carry only the caller's rows (X13), like every egress.
     * Demand-driven: the listener exists only while the client is
     * connected. `?max_events=N` closes after N data frames (testing).
     */
-  private def handleStream(ex: HttpExchange, name: String): Unit = {
-    val maxEvents = Option(ex.getRequestURI.getRawQuery)
-      .flatMap(_.split("&").collectFirst {
-        case kv if kv.startsWith("max_events=") => kv.stripPrefix("max_events=").toLong
-      }).getOrElse(Long.MaxValue)
+  private def handleStream(ex: HttpExchange, name: String, identity: Option[String]): Unit = {
+    val maxEvents = Gateway.view(ex).query("max_events").map(_.toLong).getOrElse(Long.MaxValue)
     ex.getResponseHeaders.set("Content-Type", "text/event-stream")
     ex.getResponseHeaders.set("Cache-Control", "no-cache")
     ex.sendResponseHeaders(200, 0)
@@ -618,7 +415,8 @@ final class Gateway(
     val queue = new java.util.concurrent.LinkedBlockingQueue[Array[Byte]]
     val schema = runtime.runtimeSchema(runtime.specs(name))
     val listener: (String, Seq[org.apache.spark.sql.Row]) => Unit = (ch, rows) =>
-      if (ch == name) rows.foreach(r => queue.offer(Gateway.frameJson(name, None, r, schema)))
+      if (ch == name) contract.visible(name, schema, identity, rows)
+        .foreach(r => queue.offer(Gateway.frameJson(name, None, r, schema)))
     runtime.addListener(listener)
     try {
       var sent = 0L
@@ -754,25 +552,6 @@ final class Gateway(
   private def keyDeclared(name: String, key: String): Boolean =
     runtime.specs.get(name).forall(_.basketKeys.forall(_.contains(key)))
 
-  private def queryParam(ex: HttpExchange): Option[String] =
-    Option(ex.getRequestURI.getRawQuery).flatMap(_.split("&").collectFirst {
-      case kv if kv.startsWith("query=") =>
-        java.net.URLDecoder.decode(kv.stripPrefix("query="), "UTF-8")
-    })
-
-  private def jsonValue(v: JsonNode): Any =
-    if (v.isNull) null
-    else if (v.isIntegralNumber) v.asLong()
-    else if (v.isFloatingPointNumber) v.asDouble()
-    else if (v.isBoolean) v.asBoolean()
-    else if (v.isArray) v.elements().asScala.map(jsonValue).toSeq
-    else if (v.isObject)
-      v.properties().asScala.map(e => e.getKey -> jsonValue(e.getValue)).toMap
-    else v.asText()
-
-  private def jsonToMap(node: JsonNode): Map[String, Any] =
-    node.properties().asScala.map(e => e.getKey -> jsonValue(e.getValue)).toMap
-
   /** JSON-serialize a static-field value (Scala maps/seqs aren't
     * Jackson-native; the reference requires "JSON serializable"
     * fields — same contract here). */
@@ -825,13 +604,13 @@ final class Gateway(
         (form.get("username"), form.get("password")) match {
           case (Some(u), Some(p)) if u.nonEmpty && p.nonEmpty =>
             if (simpleAuthUsers.get(u).contains(p))
-              redirect(ex, "/", Some(sessionSetCookie(createSession(u))))
+              redirect(ex, "/", Some(sessionSetCookie(contract.createSession(u))))
             else redirect(ex, "/login?error=invalid_credentials", None)
           case _ => redirect(ex, "/login?error=missing_credentials", None)
         }
       } else if (Option(ex.getRequestHeaders.getFirst("Authorization")).exists(_.startsWith("Basic "))) {
-        basicUser(ex) match {
-          case Some(u) => redirect(ex, "/", Some(sessionSetCookie(createSession(u))))
+        contract.basicUser(ex.getRequestHeaders.getFirst("Authorization")) match {
+          case Some(u) => redirect(ex, "/", Some(sessionSetCookie(contract.createSession(u))))
           case None =>
             ex.getResponseHeaders.set("WWW-Authenticate", "Basic")
             respond(ex, 401, """{"detail":"unauthorized"}""")
@@ -857,7 +636,7 @@ final class Gateway(
     * the cookie, redirect to the login page.
     */
   private def handleLogout(ex: HttpExchange): Unit = {
-    cookie(ex, sessionCookieName).foreach(sessions.remove)
+    Gateway.view(ex).cookie(sessionCookieName).foreach(contract.dropSession)
     ex.getResponseHeaders.set("Set-Cookie",
       s"$sessionCookieName=; HttpOnly; Path=/; Max-Age=0")
     redirect(ex, "/login", None)
@@ -873,11 +652,7 @@ final class Gateway(
   private def handleOAuth(ex: HttpExchange, o: OAuthSupport): Unit =
     try {
       val path = ex.getRequestURI.getPath
-      def queryOf(name: String): Option[String] =
-        Option(ex.getRequestURI.getRawQuery).flatMap(_.split("&").collectFirst {
-          case kv if kv.startsWith(name + "=") =>
-            java.net.URLDecoder.decode(kv.stripPrefix(name + "="), "UTF-8")
-        })
+      val req = Gateway.view(ex)
       // configured URI wins — deriving it from the Host header lets a
       // spoofed Host steer the issuer's redirect (ADVICE r8)
       def callbackUri: String = o.configuredRedirectUri.getOrElse {
@@ -887,12 +662,12 @@ final class Gateway(
       }
       path match {
         case "/auth/callback" =>
-          (queryOf("error"), queryOf("code")) match {
+          (req.query("error"), req.query("code")) match {
             case (Some(err), _) =>
               respond(ex, 400, s"""{"error":${mapper.writeValueAsString(err)}}""")
             case (None, None) =>
               respond(ex, 400, """{"error":"No authorization code provided"}""")
-            case (None, Some(_)) if !queryOf("state").exists(o.consumeState) =>
+            case (None, Some(_)) if !req.query("state").exists(o.consumeState) =>
               // CSRF gate: the state must be one this gateway minted at
               // /login (one-shot, TTL-bounded) — else an attacker can
               // inject their own code into a victim's session
@@ -920,12 +695,12 @@ final class Gateway(
               }
           }
         case "/auth/logout" =>
-          cookie(ex, o.cookieName).foreach(o.dropSession)
+          req.cookie(o.cookieName).foreach(o.dropSession)
           ex.getResponseHeaders.set("Set-Cookie",
             s"${o.cookieName}=; HttpOnly; Path=/; Max-Age=0")
           redirect(ex, "/login", None)
         case "/auth/userinfo" =>
-          cookie(ex, o.cookieName).flatMap(o.sessionUserinfo)
+          req.cookie(o.cookieName).flatMap(o.sessionUserinfo)
             .orElse(o.userinfoFrom(
               Option(ex.getRequestHeaders.getFirst("Authorization")))) match {
             case Some(info) => respond(ex, 200, mapper.writeValueAsString(info))
@@ -954,7 +729,7 @@ final class Gateway(
         server.createContext("/login", (ex: HttpExchange) => handleOAuth(ex, o))
     }
     server.createContext("/api/v1", (ex: HttpExchange) => gated(handle)(ex))
-    server.createContext("/outputs", (ex: HttpExchange) => gated { e =>
+    server.createContext("/outputs", (ex: HttpExchange) => gated { (e, _) =>
       outputsDir match {
         case Some(root) =>
           try handleOutputs(e, root)
@@ -963,7 +738,7 @@ final class Gateway(
         case None => respond(e, 404, """{"detail":"Not Found"}""")
       }
     }(ex))
-    server.createContext("/openapi.json", (ex: HttpExchange) => gated { ex =>
+    server.createContext("/openapi.json", (ex: HttpExchange) => gated { (ex, _) =>
       try respond(ex, 200, openApiJson)
       catch { case NonFatal(e) => respond(ex, 500, detailJson(e.getMessage)) }
     }(ex))
@@ -1393,6 +1168,11 @@ object Gateway {
     * the string "null". */
   private[graft] def detailJson(msg: String): String =
     s"""{"detail":${detailMapper.writeValueAsString(String.valueOf(msg))}}"""
+
+  /** The request contract's view of an exchange. */
+  private[server] def view(ex: HttpExchange): RequestView =
+    new RequestView(ex.getRequestURI.getRawQuery,
+      name => Option(ex.getRequestHeaders.getFirst(name)))
 
   /** One WS/SSE egress frame `{"channel", "key"?, "data": row}` (key
     * only for dict-basket channels). */

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
 
 import graft.core.ChannelSpec
-import graft.streaming.ChannelRuntime
+import graft.streaming.{ChannelRuntime, EngineLog}
 
 /** Config-file gateway construction — the reference launches from
   * declarative configs (`server/config/gateway/demo.yaml`: channel
@@ -26,7 +26,8 @@ import graft.streaming.ChannelRuntime
   *      "fields": [{"name": "id", "type": "string"},
   *                 {"name": "timestamp", "type": "timestamp"},
   *                 {"name": "x", "type": "long"},
-  *                 {"name": "tags", "type": "array<string>"}],
+  *                 {"name": "tags", "type": "array<string>"},
+  *                 {"name": "user", "type": "string"}],
   *      "stateKeyby": ["x"],
   *      "basketKey": "y", "basketKeys": ["a", "b"],
   *      "omitFromLookup": false, "lookupMaxEntries": 100000}
@@ -100,15 +101,16 @@ object GatewayConfig {
     val specs = specList.map(s => s.name -> s).toMap
     require(specs.nonEmpty, "config declares no channels")
     val port = root.path("port").asInt(0)
-    val runtime = new ChannelRuntime(spark, specs,
-      checkpointDir.getOrElse(
-        java.nio.file.Files.createTempDirectory("graft-gw-ckpt").toString),
-      distributedState = root.path("distributedState").asBoolean(false))
     val auth: Map[String, String] =
       if (root.has("authField"))
         root.get("authField").properties().asScala
           .map(e => e.getKey -> e.getValue.asText()).toMap
       else Map.empty
+    RequestContract.checkAuthFields(specs, auth)
+    val runtime = new ChannelRuntime(spark, specs,
+      checkpointDir.getOrElse(
+        java.nio.file.Files.createTempDirectory("graft-gw-ckpt").toString),
+      distributedState = root.path("distributedState").asBoolean(false))
     val apiKeys: Seq[String] =
       if (root.has("apiKeys"))
         root.get("apiKeys").elements().asScala.map(_.asText()).toSeq
@@ -171,7 +173,7 @@ object GatewayConfig {
     val staticFields: Map[String, Any] =
       if (!root.has("staticFields")) Map.empty
       else root.get("staticFields").properties().asScala
-        .map(e => e.getKey -> jsonToValue(e.getValue)).toMap
+        .map(e => e.getKey -> EngineLog.jsonValue(e.getValue)).toMap
     val gateway = new Gateway(runtime, port, auth, onShutdown, apiKeys,
       simpleAuthUsers, sessionTimeoutMillis, sessionCookieName,
       oauth = oauth, staticFields = staticFields)
@@ -189,18 +191,6 @@ object GatewayConfig {
     }
     Loaded(runtime, gateway, port)
   }
-
-  /** Static-field config value → JVM value (the JSON-serializable
-    * contract of the /field routes). */
-  private def jsonToValue(v: JsonNode): Any =
-    if (v.isNull) null
-    else if (v.isIntegralNumber) v.asLong()
-    else if (v.isFloatingPointNumber) v.asDouble()
-    else if (v.isBoolean) v.asBoolean()
-    else if (v.isArray) v.elements().asScala.map(jsonToValue).toSeq
-    else if (v.isObject)
-      v.properties().asScala.map(e => e.getKey -> jsonToValue(e.getValue)).toMap
-    else v.asText()
 
   /** Load a config file; `.yaml`/`.yml` extensions parse as YAML
     * (reference launch format), anything else as JSON. */

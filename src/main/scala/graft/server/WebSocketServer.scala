@@ -7,10 +7,9 @@ import java.security.MessageDigest
 import java.util.Base64
 import java.util.concurrent.{ConcurrentHashMap, Executors, TimeUnit}
 
-import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.ObjectMapper
 
 import graft.streaming.ChannelRuntime
 
@@ -22,7 +21,7 @@ import graft.streaming.ChannelRuntime
   *   client → server: {"action":"subscribe"|"unsubscribe"|"send",
   *                     "channel":c, ["key":k,] ["data":obj|[obj…]]}
   *   server → client: {"channel":c, ["key":"k",] "data":{row}}  per tick row
-  *                    {"channel":"heartbeat","data":"PING"}     every pingMillis
+  *                    {"channel":"heartbeat","data":"PING"}     every second
   *
   * Reference semantics reproduced:
   *  - one connection multiplexes many channels; a per-connection
@@ -33,9 +32,11 @@ import graft.streaming.ChannelRuntime
   *    unsubscribe without a key covers the whole basket
   *    (websocket.py:271-279), send REQUIRES a key (:281-283), and a
   *    key on a non-basket channel voids the message (:280-282);
-  *  - send validates rows exactly like the REST path (S5) and ingests
-  *    into the channel stream; per-identity row filtering (X13) holds
-  *    on egress frames;
+  *  - the handshake passes the gateway's auth gate ([[RequestContract]])
+  *    or gets its 401/403 and no upgrade; send decodes and validates
+  *    rows with the REST path's decoder (S5), a rejected send is logged
+  *    and the connection stays up; per-identity row filtering (X13)
+  *    holds on egress frames;
   *  - JSON heartbeat frames (not ws pings) every interval, matching
   *    handle_heartbeat_connection (websocket.py:162-181).
   *
@@ -45,16 +46,10 @@ import graft.streaming.ChannelRuntime
   */
 final class WebSocketServer(
     runtime: ChannelRuntime,
-    authFilterFields: Map[String, String] = Map.empty,
-    port: Int = 0,
-    pingMillis: Long = 1000L,
-    /** Auth-middleware identity from the handshake's (lowercased)
-      * headers — the reference needed a dedicated websocket fix for
-      * exactly this (middleware/hacks/api_key_middleware_websocket_fix:
-      * browser WebSocket clients can send cookies but not custom
-      * headers). The gateway supplies its session/Basic resolver; the
-      * explicit `x-identity` header still wins (test/tooling path). */
-    identityFromHeaders: Map[String, String] => Option[String] = _ => None) {
+    /** The gateway's auth gate, send decoder and X13 row filter. */
+    contract: RequestContract,
+    port: Int = 0) {
+  import WebSocketServer.PingMillis
 
   private val mapper = new ObjectMapper()
   // bound lazily in start() — constructing a server must not leak a
@@ -124,23 +119,12 @@ final class WebSocketServer(
         val wantAll = subs.contains((ch, None))
         val schema = runtime.runtimeSchema(spec)
         val keyIdx = basket.map(schema.fieldNames.indexOf(_)).getOrElse(-1)
-        // the auth field's index, once per batch
-        val authIdx = authFilterFields.get(ch).map(schema.fieldNames.indexOf(_))
-        rows.foreach { r =>
+        contract.visible(ch, schema, identity, rows).foreach { r =>
           val rowKey = if (keyIdx >= 0 && !r.isNullAt(keyIdx)) Some(String.valueOf(r.get(keyIdx))) else None
           val subscribed = wantAll || (basket.isDefined && rowKey.exists(k => subs.contains((ch, Some(k)))))
-          if (subscribed && identityAllows(authIdx, r))
+          if (subscribed)
             sendRaw(0x1, Gateway.frameJson(ch, if (basket.isDefined) rowKey else None, r, schema))
         }
-      }
-
-    /** X13 on egress: `authIdx` is the channel's auth field index
-      * (None = unfiltered channel). */
-    private def identityAllows(authIdx: Option[Int], r: org.apache.spark.sql.Row): Boolean =
-      authIdx match {
-        case Some(i) =>
-          identity.exists(id => i >= 0 && !r.isNullAt(i) && String.valueOf(r.get(i)) == id)
-        case None => true
       }
 
     def sendText(s: String): Unit = sendRaw(0x1, s.getBytes(StandardCharsets.UTF_8))
@@ -207,50 +191,19 @@ final class WebSocketServer(
             conn.subs.removeIf(s => s._1 == channel)
           case "send" => () // basket send requires a key: ignore
         }
-      case (basket, key) =>
+      case (_, key) =>
         action match {
           case "subscribe"   => conn.subs.add((channel, key))
           case "unsubscribe" => conn.subs.remove((channel, key))
           case "send" =>
-            val data = node.get("data")
-            if (data == null || data.isNull) return
-            val objs: Seq[JsonNode] =
-              if (data.isArray) data.elements().asScala.toSeq else Seq(data)
-            val withKey = basket.zip(key) // Some((col, k)) on basket channels
-            try {
-              val maps = objs.map { o =>
-                val m = jsonToMap(o)
-                withKey match {
-                  case Some((col, k)) => m + (col -> k)
-                  case None           => m
-                }
-              }
-              // X13 write validation, same rule as the REST send path
-              authFilterFields.get(channel).foreach { field =>
-                conn.identity match {
-                  case Some(id) if maps.forall(_.get(field).exists(v => String.valueOf(v) == id)) => ()
-                  case _ => throw new IllegalArgumentException(s"identity mismatch on '$field'")
-                }
-              }
-              runtime.send(channel, maps)
-            } catch {
-              case NonFatal(_) => () // reference: send errors logged + ignored
+            try runtime.send(channel, contract.sendRows(channel, node.get("data"), key, conn.identity))
+            catch { // reference websocket.py: a failed send is logged, the socket stays up
+              case NonFatal(e) =>
+                Console.err.println(s"[graft] websocket send to '$channel' rejected: ${e.getMessage}")
             }
         }
     }
   }
-
-  private def jsonToMap(node: JsonNode): Map[String, Any] =
-    node.properties().asScala.map { e =>
-      val v = e.getValue
-      val value: Any =
-        if (v.isNull) null
-        else if (v.isIntegralNumber) v.asLong()
-        else if (v.isFloatingPointNumber) v.asDouble()
-        else if (v.isBoolean) v.asBoolean()
-        else v.asText()
-      e.getKey -> value
-    }.toMap
 
   // ---- RFC 6455 wire ------------------------------------------------------
 
@@ -268,25 +221,46 @@ final class WebSocketServer(
     if (b < 0 && sb.length == 0) null else sb.toString
   }
 
+  /** Read the upgrade request and put it through the gateway's auth
+    * gate: 101 with the caller's identity on the connection, or the
+    * gate's 401/403 (with its challenge) and no upgrade. Browser
+    * clients can send cookies and a query string but not custom
+    * headers (the reference's api_key_middleware_websocket_fix), so
+    * every credential transport of the REST side works here too.
+    */
   private def handshake(conn: Conn): Boolean = {
     val requestLine = readHeaderLine(conn.in)
     if (requestLine == null || !requestLine.startsWith("GET")) return false
-    var wsKey: String = null
     val headers = scala.collection.mutable.Map.empty[String, String]
     var line = readHeaderLine(conn.in)
     while (line != null && line.nonEmpty) {
       val idx = line.indexOf(':')
-      if (idx > 0) {
-        val name = line.substring(0, idx).trim.toLowerCase(java.util.Locale.ROOT)
-        val value = line.substring(idx + 1).trim
-        headers(name) = value
-        if (name == "sec-websocket-key") wsKey = value
-        if (name == "x-identity") conn.identity = Some(value)
-      }
+      if (idx > 0)
+        headers(line.substring(0, idx).trim.toLowerCase(java.util.Locale.ROOT)) =
+          line.substring(idx + 1).trim
       line = readHeaderLine(conn.in)
     }
+    val wsKey = headers.getOrElse("sec-websocket-key", null)
     if (wsKey == null) return false
-    if (conn.identity.isEmpty) conn.identity = identityFromHeaders(headers.toMap)
+    // request line: GET <path>[?<query>] HTTP/1.1
+    val target = requestLine.split(" ").lift(1).getOrElse("")
+    val q = target.indexOf('?')
+    val view = new RequestView(if (q < 0) null else target.substring(q + 1),
+      name => headers.get(name.toLowerCase(java.util.Locale.ROOT)))
+    contract.admit(view) match {
+      case Left(refusal) =>
+        val body = RequestContract.UnauthorizedBody.getBytes(StandardCharsets.UTF_8)
+        conn.out.write(
+          (s"HTTP/1.1 ${refusal.status} ${if (refusal.status == 401) "Unauthorized" else "Forbidden"}\r\n" +
+            refusal.challenge.fold("")(c => s"WWW-Authenticate: $c\r\n") +
+            "Content-Type: application/json\r\n" +
+            s"Content-Length: ${body.length}\r\nConnection: close\r\n\r\n")
+            .getBytes(StandardCharsets.ISO_8859_1))
+        conn.out.write(body)
+        conn.out.flush()
+        return false
+      case Right(identity) => conn.identity = identity
+    }
     val accept = Base64.getEncoder.encodeToString(
       MessageDigest.getInstance("SHA-1").digest(
         (wsKey + "258EAFA5-E914-47DA-95CA-C5AB0DC85B11").getBytes(StandardCharsets.US_ASCII)))
@@ -394,7 +368,7 @@ final class WebSocketServer(
     acceptor.start()
     pinger.scheduleAtFixedRate(
       () => conns.forEach(_.sendText("""{"channel": "heartbeat", "data": "PING"}""")),
-      pingMillis, pingMillis, TimeUnit.MILLISECONDS)
+      PingMillis, PingMillis, TimeUnit.MILLISECONDS)
     this
   }
 
@@ -410,4 +384,9 @@ final class WebSocketServer(
     if (server != null)
       try server.close() catch { case _: IOException => () }
   }
+}
+
+object WebSocketServer {
+  /** Heartbeat frame interval (reference websocket.py:38). */
+  private val PingMillis = 1000L
 }

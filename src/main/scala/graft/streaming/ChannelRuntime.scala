@@ -12,7 +12,7 @@ import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType, TimestampType}
+import org.apache.spark.sql.types._
 
 import graft.core.ChannelSpec
 import graft.state.{StateFastPath, StateOps, StateQuery}
@@ -537,25 +537,39 @@ object ChannelRuntime {
   }
 
   /** Lenient value coercion at the ingress boundary (pydantic-validate
-    * analogue): numbers widen, ISO strings parse to timestamps;
-    * anything else must already match.
+    * analogue): numbers widen or narrow, ISO strings parse to
+    * timestamps and `yyyy-mm-dd` strings to dates, arrays coerce per
+    * element. A value of another JVM type for a string, numeric,
+    * boolean, timestamp, date or array field is rejected with an
+    * `IllegalArgumentException` that names the field; values for other
+    * types pass to the row encoder as they are.
     */
-  def coerce(v: Any, dt: org.apache.spark.sql.types.DataType, field: String): Any = (v, dt) match {
+  def coerce(v: Any, dt: DataType, field: String): Any = (v, dt) match {
     case (null, _) => null
+    case (_: String, StringType) | (_: Long, LongType) | (_: Int, IntegerType) |
+         (_: Double, DoubleType) | (_: Float, FloatType) | (_: Boolean, BooleanType) |
+         (_: java.sql.Timestamp, TimestampType) | (_: java.sql.Date, DateType) => v
     case (x: Int, LongType) => x.toLong
-    case (x: Long, org.apache.spark.sql.types.IntegerType) => x.toInt
-    case (x: Int, org.apache.spark.sql.types.DoubleType) => x.toDouble
-    case (x: Long, org.apache.spark.sql.types.DoubleType) => x.toDouble
-    case (x: Double, org.apache.spark.sql.types.FloatType) => x.toFloat
-    case (x: Long, org.apache.spark.sql.types.FloatType) => x.toFloat
-    case (x: java.math.BigDecimal, org.apache.spark.sql.types.DoubleType) => x.doubleValue()
+    case (x: Long, IntegerType) => x.toInt
+    case (x: Int, DoubleType) => x.toDouble
+    case (x: Long, DoubleType) => x.toDouble
+    case (x: java.math.BigDecimal, DoubleType) => x.doubleValue()
+    case (x: Double, FloatType) => x.toFloat
+    case (x: Long, FloatType) => x.toFloat
     case (x: String, TimestampType) =>
-      java.sql.Timestamp.from(java.time.OffsetDateTime.parse(x).toInstant)
-    case (x: java.sql.Timestamp, TimestampType) => x
-    case (xs: Seq[_], org.apache.spark.sql.types.ArrayType(et, _)) =>
-      xs.map(coerce(_, et, field))
-    case (xs: java.util.List[_], org.apache.spark.sql.types.ArrayType(et, _)) =>
-      xs.asScala.toSeq.map(coerce(_, et, field))
+      try java.sql.Timestamp.from(java.time.OffsetDateTime.parse(x).toInstant)
+      catch { case e: java.time.format.DateTimeParseException => mismatch(field, dt, e.getMessage) }
+    case (x: String, DateType) => java.sql.Date.valueOf(x) // IllegalArgumentException if malformed
+    case (xs: Seq[_], ArrayType(et, _)) => xs.map(coerce(_, et, field))
+    case (xs: java.util.List[_], ArrayType(et, _)) => xs.asScala.toSeq.map(coerce(_, et, field))
+    case (xs: Array[_], ArrayType(et, _)) => xs.toSeq.map(coerce(_, et, field))
+    case (x, StringType | LongType | IntegerType | DoubleType | FloatType | BooleanType |
+        TimestampType | DateType | _: ArrayType) =>
+      mismatch(field, dt, s"got ${x.getClass.getSimpleName} $x")
     case (x, _) => x
   }
+
+  private def mismatch(field: String, dt: DataType, detail: String): Nothing =
+    throw new IllegalArgumentException(
+      s"Field '$field' expects ${dt.simpleString}: $detail")
 }

@@ -112,6 +112,21 @@ object EngineLog {
     g.writeEndObject()
   }
 
+  /** The JSON value decoder shared by every ingress (REST and WS send,
+    * engine-log replay, config and client responses): integers as
+    * Long, other numbers as Double, arrays as Seq and objects as Map,
+    * recursively; text stays text. Typing a value against a channel
+    * schema is left to [[ChannelRuntime.coerce]]. */
+  def jsonValue(v: com.fasterxml.jackson.databind.JsonNode): Any =
+    if (v.isNull) null
+    else if (v.isIntegralNumber) v.asLong()
+    else if (v.isFloatingPointNumber) v.asDouble()
+    else if (v.isBoolean) v.asBoolean()
+    else if (v.isArray) v.elements().asScala.map(jsonValue).toSeq
+    else if (v.isObject)
+      v.properties().asScala.map(e => e.getKey -> jsonValue(e.getValue)).toMap
+    else v.asText()
+
   /** Epoch seconds of 0000-01-01T00:00:00Z and 9999-12-31T23:59:59Z. */
   private val MinFourDigitYear = -62167219200L
   private val MaxFourDigitYear = 253402300799L
@@ -263,7 +278,7 @@ object EngineLog {
             val m = spec.schema.fields.flatMap { f =>
               val v = obj.get(f.name)
               if (v == null || v.isNull) None
-              else Some(f.name -> jsonToValue(v, f.dataType))
+              else Some(f.name -> jsonValue(v))
             }.toMap
             if (forceNewIds) m - ChannelRuntime.IdCol else m
           }.toSeq
@@ -307,15 +322,4 @@ object EngineLog {
       logPath: String,
       channels: Seq[String]): Long =
     replay(runtime, logPath, channels, forceNewIds = false)
-
-  private def jsonToValue(v: com.fasterxml.jackson.databind.JsonNode, dt: DataType): Any =
-    dt match {
-      case StringType => v.asText()
-      case LongType => v.asLong()
-      case IntegerType => v.asInt()
-      case DoubleType => v.asDouble()
-      case BooleanType => v.asBoolean()
-      case TimestampType => java.sql.Timestamp.from(java.time.Instant.parse(v.asText()))
-      case _ => v.asText()
-    }
 }

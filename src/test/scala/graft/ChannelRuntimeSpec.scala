@@ -234,6 +234,40 @@ class ChannelRuntimeSpec extends AnyFunSuite with BeforeAndAfterAll {
       rt3.processAllAvailable()
       assert(rt3.state("example").map(_.getAs[Long]("x")).toSet === Set(2L))
     } finally rt3.stop()
+
+    // every column type round-trips writeCycle -> replay: replay decodes
+    // like a send and ChannelRuntime.coerce types the values
+    val typed = StructType(Seq(
+      StructField("l", LongType), StructField("i", IntegerType),
+      StructField("d", DoubleType), StructField("f", FloatType),
+      StructField("b", BooleanType), StructField("s", StringType),
+      StructField("ts", TimestampType), StructField("dt", DateType),
+      StructField("as", ArrayType(StringType)), StructField("al", ArrayType(LongType))))
+    val ts = java.sql.Timestamp.from(java.time.Instant.parse("2024-02-29T12:34:56.123456Z"))
+    val sent = Seq(
+      Seq(1L << 40, -7, 0.1, 0.1f, true, "é \"q\" \u00e9", ts,
+        java.sql.Date.valueOf("2024-02-29"), Seq("a", null), Seq(1L, -2L)),
+      Seq.fill[Any](typed.size)(null))
+    val typedRuntime = StructType(typed.fields :+ StructField("_seq", LongType))
+    val typedLog = Files.createTempFile("graft-typed", ".jsonl")
+    val w = Files.newBufferedWriter(typedLog)
+    try EngineLog.writeCycle(w, 0L, Seq(("typed", sent.zipWithIndex.map { case (vs, k) =>
+      new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
+        (vs :+ k.toLong).toArray, typedRuntime): org.apache.spark.sql.Row
+    }, typedRuntime)))
+    finally w.close()
+    val rt4 = new ChannelRuntime(spark, Map("typed" -> ChannelSpec("typed", typed)),
+      Files.createTempDirectory("graft-test-ckpt").toString)
+    val replayed = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.Row]
+    rt4.addListener((_, rows) => rows.foreach(replayed.add))
+    rt4.start()
+    try {
+      assert(EngineLog.replay(rt4, typedLog.toString, Seq("typed")) === 2)
+      rt4.processAllAvailable()
+      import scala.jdk.CollectionConverters._
+      val got = replayed.asScala.toSeq.sortBy(_.getLong(typed.size)).map(_.toSeq.dropRight(1))
+      assert(got === sent)
+    } finally rt4.stop()
   }
 
   test("set_state keyby on the FIRST schema field keys rows distinctly") {

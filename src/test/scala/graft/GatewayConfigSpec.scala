@@ -41,6 +41,7 @@ class GatewayConfigSpec extends AnyFunSuite {
         |      - {name: timestamp, type: timestamp}
         |      - {name: x, type: long}
         |      - {name: tags, type: "array<string>"}
+        |      - {name: user, type: string}
         |authField:
         |  example: user
         |""".stripMargin
@@ -48,7 +49,7 @@ class GatewayConfigSpec extends AnyFunSuite {
     java.nio.file.Files.writeString(f, yaml)
     val loaded = GatewayConfig.loadFile(spark, f.toString)
     val ex = loaded.runtime.specs("example")
-    assert(ex.schema.fieldNames.toSeq === Seq("id", "timestamp", "x", "tags"))
+    assert(ex.schema.fieldNames.toSeq === Seq("id", "timestamp", "x", "tags", "user"))
     assert(ex.schema("tags").dataType === ArrayType(StringType))
     assert(ex.stateKeyby === Seq("x"))
   }
@@ -103,6 +104,16 @@ class GatewayConfigSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       GatewayConfig.parseType("complex128")
     }
+  }
+
+  test("an authField naming a column the channel lacks is rejected at load") {
+    val bad = config.replace("\"port\": 0,", "\"port\": 0, \"authField\": {\"example\": \"owner\"},")
+    val e = intercept[IllegalArgumentException](GatewayConfig.load(spark, bad))
+    assert(e.getMessage.contains("auth field 'owner'"))
+    // the Gateway constructor holds the same rule for code-built gateways
+    val rt = new graft.streaming.ChannelRuntime(spark, Map("example" ->
+      graft.core.ChannelSpec("example", StructType(Seq(StructField("x", LongType))))))
+    intercept[IllegalArgumentException](new graft.server.Gateway(rt, 0, Map("example" -> "owner")))
   }
 
   test("api-key auth: 403 without a key; query/header/cookie all accepted") {

@@ -87,6 +87,9 @@ class GatewaySpec extends AnyFunSuite {
       assert(get(s"$base/last/ghost").statusCode() === 404)
       assert(post(s"$base/send/ghost", "{}").statusCode() === 404)
       assert(post(s"$base/send/example", """{"ghost_field": 1}""").statusCode() === 422)
+      // a value of the wrong type is a 422 naming the field, not a 500
+      val typed = post(s"$base/send/example", """{"x": "abc"}""")
+      assert(typed.statusCode() === 422 && typed.body().contains("'x'"), typed.body())
     }
   }
 
@@ -103,6 +106,38 @@ class GatewaySpec extends AnyFunSuite {
       val body = fut.get(30, java.util.concurrent.TimeUnit.SECONDS)
       assert(body.contains("\"channel\":\"example\""))
       assert(body.contains("\"x\":7") && body.contains("\"x\":8"))
+    }
+  }
+
+  test("SSE frames carry only the caller's rows (X13)") {
+    withGateway(Map("example" -> "owner")) { (base, rt) =>
+      // one subscriber per caller; each collects its `data:` lines
+      val subs = Seq(Map.empty[String, String], Map("x-identity" -> "bob"),
+          Map("x-identity" -> "alice")).map { headers =>
+        val b = HttpRequest.newBuilder(URI.create(s"$base/stream/example"))
+        headers.foreach { case (k, v) => b.header(k, v) }
+        val lines = http.send(b.build(), HttpResponse.BodyHandlers.ofLines()).body()
+        val frames = new java.util.concurrent.LinkedBlockingQueue[String]
+        val reader = new Thread(() =>
+          try lines.forEach(l => if (l.startsWith("data: ")) frames.offer(l))
+          catch { case _: Throwable => () })
+        reader.setDaemon(true)
+        reader.start()
+        (lines, frames)
+      }
+      try {
+        Thread.sleep(300) // the listener attaches just after the headers
+        assert(post(s"$base/send/example", """{"x": 1, "owner": "alice"}""",
+          Map("x-identity" -> "alice")).statusCode() === 200)
+        rt.processAllAvailable()
+        val Seq(anon, bob, alice) = subs.map(_._2)
+        val own = alice.poll(10, java.util.concurrent.TimeUnit.SECONDS)
+        assert(own != null && own.contains("\"owner\":\"alice\""), "the owner receives the row")
+        assert(anon.poll(1500, java.util.concurrent.TimeUnit.MILLISECONDS) === null,
+          "an anonymous subscriber must get none of alice's rows")
+        assert(bob.poll(500, java.util.concurrent.TimeUnit.MILLISECONDS) === null,
+          "another identity must get none of alice's rows")
+      } finally subs.foreach(_._1.close())
     }
   }
 

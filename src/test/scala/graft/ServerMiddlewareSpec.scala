@@ -374,6 +374,23 @@ class ServerMiddlewareSpec extends AnyFunSuite {
         // rejected key → 403 (api-key middleware rejection semantics)
         assert(get(s"$base/state/example?token=nope").statusCode() === 403)
         assert(get(s"$base/state/example").statusCode() === 403)
+
+        // the same gate and identity hold on the websocket: the client's
+        // handshake carries its key like its REST calls do
+        def client(key: Option[String]) = new graft.client.GatewayClient(
+          graft.client.GatewayClientConfig(host = "127.0.0.1", port = gw.boundPort,
+            apiKey = key, wsPort = Some(gw.wsPort)))
+        val stream = client(Some("key-svc-a")).connect(Seq(("example", None)))
+        try {
+          assert(stream.take().isDefined) // a heartbeat: the subscription has landed
+          rt.send("example", Seq(
+            Map("x" -> 3L, "owner" -> "svc-b"), Map("x" -> 4L, "owner" -> "svc-a")))
+          rt.processAllAvailable()
+          assert(stream.takeData(10000).exists(_.get("data").get("x").asLong() == 4L))
+          assert(stream.takeData(1500).isEmpty, "svc-b's row must not reach svc-a")
+        } finally stream.close()
+        intercept[graft.client.ServerUnknownException](
+          client(None).connect(connectTimeoutMillis = 0))
       } finally gw.stop()
     }
   }

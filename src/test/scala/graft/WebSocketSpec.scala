@@ -26,7 +26,8 @@ class WebSocketSpec extends AnyFunSuite {
     StructField("id", StringType),
     StructField("timestamp", TimestampType),
     StructField("x", LongType),
-    StructField("owner", StringType)))
+    StructField("owner", StringType),
+    StructField("tags", ArrayType(StringType))))
 
   private val basketSchema = StructType(Seq(
     StructField("id", StringType),
@@ -67,7 +68,15 @@ class WebSocketSpec extends AnyFunSuite {
       catch { case _: Throwable => ws.abort() }
   }
 
-  private def withGateway(auth: Map[String, String] = Map.empty)(
+  /** Status of a refused handshake (the JDK client fails the upgrade). */
+  private def refusedWith(uri: String, headers: Map[String, String] = Map.empty): Int =
+    try { new Client(uri, headers).close(); 101 }
+    catch {
+      case e: java.util.concurrent.ExecutionException =>
+        e.getCause.asInstanceOf[java.net.http.WebSocketHandshakeException].getResponse.statusCode()
+    }
+
+  private def withGateway(mkGateway: ChannelRuntime => Gateway = new Gateway(_, 0))(
       f: (Gateway, ChannelRuntime) => Unit): Unit = {
     val rt = new ChannelRuntime(spark,
       Map(
@@ -75,7 +84,7 @@ class WebSocketSpec extends AnyFunSuite {
         "basket" -> ChannelSpec("basket", basketSchema, basketKey = Some("sym"))),
       Files.createTempDirectory("graft-ws-ckpt").toString)
     rt.start()
-    val gw = new Gateway(rt, 0, auth).start()
+    val gw = mkGateway(rt).start()
     try f(gw, rt)
     finally { gw.stop(); rt.stop() }
   }
@@ -110,7 +119,7 @@ class WebSocketSpec extends AnyFunSuite {
     withGateway() { (gw, rt) =>
       val c = new Client(s"ws://127.0.0.1:${gw.wsPort}/api/v1/ws")
       try {
-        c.send("""{"action":"send","channel":"example","data":{"x":7,"owner":"bob"}}""")
+        c.send("""{"action":"send","channel":"example","data":{"x":7,"owner":"bob","tags":["c"]}}""")
         var got: Option[org.apache.spark.sql.Row] = None
         val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
         while (got.isEmpty && System.nanoTime() < deadline) {
@@ -120,6 +129,7 @@ class WebSocketSpec extends AnyFunSuite {
         }
         assert(got.isDefined, "socket send must reach the channel")
         assert(got.get.getAs[Long]("x") === 7L)
+        assert(got.get.getAs[Seq[String]]("tags") === Seq("c")) // arrays decode like REST
         assert(got.get.getAs[String]("id") != null) // system fields auto-assigned
 
         // invalid send (unknown field) is ignored, connection survives
@@ -210,7 +220,7 @@ class WebSocketSpec extends AnyFunSuite {
   }
 
   test("identity filter holds on websocket egress") {
-    withGateway(auth = Map("example" -> "owner")) { (gw, rt) =>
+    withGateway(new Gateway(_, 0, Map("example" -> "owner"))) { (gw, rt) =>
       val anon = new Client(s"ws://127.0.0.1:${gw.wsPort}/api/v1/ws")
       try {
         anon.send("""{"action":"subscribe","channel":"example"}""")
@@ -241,6 +251,12 @@ class WebSocketSpec extends AnyFunSuite {
         java.net.http.HttpResponse.BodyHandlers.ofString())
       val cookie = login.headers().firstValue("Set-Cookie").orElse("").split(";")(0)
       assert(cookie.startsWith("session="))
+      // without it the handshake gets the REST gate's 401 and challenge
+      val refused = intercept[java.util.concurrent.ExecutionException](
+        new Client(s"ws://127.0.0.1:${gw.wsPort}/api/v1/ws"))
+        .getCause.asInstanceOf[java.net.http.WebSocketHandshakeException].getResponse
+      assert(refused.statusCode() === 401)
+      assert(refused.headers().firstValue("WWW-Authenticate").orElse("") === "Basic")
 
       val c = new Client(s"ws://127.0.0.1:${gw.wsPort}/api/v1/ws",
         Map("Cookie" -> cookie))
@@ -256,5 +272,20 @@ class WebSocketSpec extends AnyFunSuite {
         assert(c.nextData(2) === null, "bob's row must not reach alice's session")
       } finally c.close()
     } finally { gw.stop(); rt.stop() }
+  }
+
+  test("the handshake passes the REST auth gate: no token → 403, token in query, header or cookie → 101") {
+    withGateway(new Gateway(_, 0, apiKeys = Seq("k123"))) { (gw, rt) =>
+      val uri = s"ws://127.0.0.1:${gw.wsPort}/api/v1/ws"
+      assert(refusedWith(uri) === 403)
+      assert(refusedWith(s"$uri?token=nope") === 403)
+      for ((u, headers) <- Seq(s"$uri?token=k123" -> Map.empty[String, String],
+          uri -> Map("token" -> "k123"), uri -> Map("Cookie" -> "other=1; token=k123"))) {
+        val c = new Client(u, headers)
+        try assert(c.heartbeats.poll(5, TimeUnit.SECONDS) === "PING")
+        finally c.close()
+      }
+      assert(rt.tickCount("example") === 0)
+    }
   }
 }

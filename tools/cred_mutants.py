@@ -26,11 +26,11 @@ tests/server/web/test_webserver.py's auth cases.
 """
 import json, os
 
-GW = "src/main/scala/graft/server/Gateway.scala"
+RC = "src/main/scala/graft/server/RequestContract.scala"
 OA = "src/main/scala/graft/server/OAuth.scala"
 
 MUTANTS = [
-    ("c01_session_expiry_ignored", GW,
+    ("c01_session_expiry_ignored", RC,
      "    Option(sessions.get(uuid)).flatMap { case (user, expires) =>\n"
      "      if (System.currentTimeMillis() <= expires) Some(user)\n"
      "      else { sessions.remove(uuid); None }\n"
@@ -40,12 +40,11 @@ MUTANTS = [
      "      else { sessions.remove(uuid); None }\n"
      "    }",
      "simple-auth session: EXPIRED session cookie still authenticates"),
-    ("c02_apikey_prefix_match", GW,
-     "    apiKeys.nonEmpty && presentedTokens(ex).exists(apiKeys.contains)",
-     "    apiKeys.nonEmpty && presentedTokens(ex).exists(t =>\n"
-     "      apiKeys.exists(_.startsWith(t)))",
+    ("c02_apikey_prefix_match", RC,
+     "(apiKeys.nonEmpty && tokens(req).exists(apiKeys.contains))",
+     "(apiKeys.nonEmpty && tokens(req).exists(t => apiKeys.exists(_.startsWith(t))))",
      "api-key check: a PREFIX of a configured key authorizes"),
-    ("c03_basic_password_ignored", GW,
+    ("c03_basic_password_ignored", RC,
      "          case Array(u, p) if simpleAuthUsers.get(u).exists(expect =>\n"
      "            java.security.MessageDigest.isEqual(\n"
      "              expect.getBytes(StandardCharsets.UTF_8),\n"
@@ -91,14 +90,9 @@ MUTANTS = [
      "  }",
      "OAuth callback: CSRF `state` never validated (reference's open gap, "
      "closed by this gateway — the close must be suite-pinned)"),
-    ("c09_external_validator_bypassed", GW,
-     "    apiKeyValidator.flatMap { v =>\n"
-     "      presentedTokens(ex).iterator.map(v).collectFirst { case Some(id) => id }\n"
-     "    }",
-     "    apiKeyValidator.flatMap { v =>\n"
-     "      val _ = v\n"
-     "      presentedTokens(ex).headOption\n"
-     "    }",
+    ("c09_external_validator_bypassed", RC,
+     "apiKeyValidator.flatMap(v => tokens(req).iterator.map(v).collectFirst { case Some(id) => id })",
+     "apiKeyValidator.flatMap(v => { val _ = v; tokens(req).headOption })",
      "external api-key validator hook bypassed — any presented token "
      "becomes the identity"),
 ]

@@ -32,6 +32,8 @@ GW = "src/main/scala/graft/server/Gateway.scala"
 WS = "src/main/scala/graft/server/WebSocketServer.scala"
 CR = "src/main/scala/graft/streaming/ChannelRuntime.scala"
 SFP = "src/main/scala/graft/state/StateFastPath.scala"
+RC = "src/main/scala/graft/server/RequestContract.scala"
+EL = "src/main/scala/graft/streaming/EngineLog.scala"
 
 # (id, file, old, new, note); `old` must occur EXACTLY once.
 MUTANTS = [
@@ -41,14 +43,14 @@ MUTANTS = [
      '''          }, "graft-shutdown").start()
         case _ => respond(ex, 200, """{"detail":"Not Found"}""")''',
      "unknown REST route answers 200 instead of 404 (reference 404 rule)"),
-    ("s02_identity_filter_anon_leak", GW,
-     "case (Some(_), None) => Nil // auth-filtered channel, anonymous caller",
-     "case (Some(_), None) => rows // auth-filtered channel, anonymous caller",
-     "X13: anonymous caller of an auth-filtered channel sees EVERY row"),
-    ("s03_identity_filter_wrong_row", GW,
-     "if (i < 0) rows else rows.filter(r => !r.isNullAt(i) && String.valueOf(r.get(i)) == id)",
-     "if (i < 0) rows else rows.filter(r => !r.isNullAt(i) && String.valueOf(r.get(i)) != id)",
-     "X13: row filter INVERTED — caller sees everyone's rows except their own"),
+    ("s02_identity_filter_anon_leak", RC,
+     "case None => Nil // anonymous caller of an auth-filtered channel",
+     "case None => rows // anonymous caller of an auth-filtered channel",
+     "X13 (shared filter): anonymous caller of an auth-filtered channel sees EVERY row"),
+    ("s03_identity_filter_wrong_row", RC,
+     "case Some(id) => rows.filter(r => !r.isNullAt(i) && String.valueOf(r.get(i)) == id)",
+     "case Some(id) => rows.filter(r => !r.isNullAt(i) && String.valueOf(r.get(i)) != id)",
+     "X13 (shared filter): INVERTED — caller sees everyone's rows except their own"),
     ("s04_basket_last_no_404", GW,
      '''          if (!keyDeclared(name, key))
             respond(ex, 404, detailJson(s"Channel not found: $name/$key"))
@@ -60,28 +62,26 @@ MUTANTS = [
             val observed = runtime.lastByBasketKey(name).collectFirst {''',
      "/last/{ch}/{key}: an undeclared basket key no longer 404s"),
     ("s05_send_422_as_200", GW,
-     '''            case e: IllegalArgumentException =>
-              respond(ex, 422, detailJson(e.getMessage))
-          }
-        // static-field routes (reference MountFieldRestRoutes,''',
-     '''            case e: IllegalArgumentException =>
-              respond(ex, 200, detailJson(e.getMessage))
-          }
-        // static-field routes (reference MountFieldRestRoutes,''',
-     "/send validation failure answers 200 instead of 422"),
-    ("s06_send_identity_forall", GW,
-     "              case Some(id) if maps.forall(m =>\n"
-     "                m.get(field).exists(v => String.valueOf(v) == id)) => ()",
-     "              case Some(id) if maps.forall(m =>\n"
-     "                m.get(field).forall(v => String.valueOf(v) == id)) => ()",
-     "X13 write validation: a row OMITTING the auth field slips past"),
-    ("s07_send_key_not_injected", GW,
-     "              case (Some(col), Some(k)) => m + (col -> k)",
-     "              case (Some(col), Some(k)) => m",
-     "/send/{ch}/{key}: the path key is no longer injected as the basket key column"),
-    ("s08_table_dropped_auth_leak", GW,
-     "                case Some(_) => Nil\n              }",
-     "                case Some(_) => rawRows\n              }",
+     '''      case e: IllegalArgumentException =>
+        respond(ex, 422, detailJson(e.getMessage))
+      case NonFatal(e) =>
+        respond(ex, 500, detailJson(e.getMessage))''',
+     '''      case e: IllegalArgumentException =>
+        respond(ex, 200, detailJson(e.getMessage))
+      case NonFatal(e) =>
+        respond(ex, 500, detailJson(e.getMessage))''',
+     "REST validation failure (send decoding, coercion) answers 200 instead of 422"),
+    ("s06_send_identity_forall", RC,
+     "case Some(id) if rows.forall(_.get(field).exists(v => String.valueOf(v) == id)) => ()",
+     "case Some(id) if rows.forall(_.get(field).forall(v => String.valueOf(v) == id)) => ()",
+     "X13 write validation (shared decoder): a row OMITTING the auth field slips past"),
+    ("s07_send_key_not_injected", RC,
+     "        case (Some(col), Some(k)) => m + (col -> k)",
+     "        case (Some(col), Some(k)) => m",
+     "send to a basket key (REST path key or WS key): the key is no longer injected as the basket key column"),
+    ("s08_table_dropped_auth_leak", RC,
+     "case Some(_) if i < 0 => Nil // a view that projected the auth field away",
+     "case Some(_) if i < 0 => rows // a view that projected the auth field away",
      "K4 tables: a view whose projection dropped the auth field leaks every row"),
     ("s09_ws_unsubscribe_noop", WS,
      '          case "unsubscribe" => conn.subs.remove((channel, key))',
@@ -92,9 +92,9 @@ MUTANTS = [
      "        val wantAll = true",
      "WS fanout ignores the subscription set — every conn gets every channel"),
     ("s11_ws_identity_any", WS,
-     "          identity.exists(id => i >= 0 && !r.isNullAt(i) && String.valueOf(r.get(i)) == id)",
-     "          identity.isDefined",
-     "WS identity filter: ANY authenticated identity sees every row"),
+     "        contract.visible(ch, schema, identity, rows).foreach { r =>",
+     "        rows.foreach { r =>",
+     "WS frames skip the shared X13 filter: every subscriber sees every row"),
     ("s12_next_resolves_previous", CR,
      "  def next(name: String): Future[Option[Row]] = {\n"
      "    val p = Promise[Option[Row]]()\n"
@@ -132,6 +132,18 @@ MUTANTS = [
      "      (r: Row) => if (i >= 0) r.get(i) else null\n"
      "    }.toArray",
      "state frontier keys by top-level indexOf: a dotted keyby puts every row under null"),
+    ("s18_sse_unfiltered", GW,
+     "      if (ch == name) contract.visible(name, schema, identity, rows)\n",
+     "      if (ch == name) rows\n",
+     "SSE frames skip the shared X13 filter: every subscriber sees every row"),
+    ("s19_ws_handshake_ungated", WS,
+     "    contract.admit(view) match {",
+     "    (Right(view.header(\"x-identity\")): Either[Refusal, Option[String]]) match {",
+     "WS handshake skips the auth gate: an unauthenticated socket is upgraded"),
+    ("s20_ws_arrays_as_text", EL,
+     "    else if (v.isArray) v.elements().asScala.map(jsonValue).toSeq",
+     "    else if (v.isArray) v.toString",
+     "the shared JSON decoder turns arrays into text: a WS send with an array field is dropped"),
 ]
 
 # Prefilter: serving-focused suites, most likely to see these bugs.
