@@ -113,15 +113,17 @@ final class Gateway(
   def wsPort: Int = ws.boundPort
 
   /** Wrap a context handler with the auth gate; the handler gets the
-    * request's identity, resolved once. */
-  private def gated(h: (HttpExchange, Option[String]) => Unit): HttpExchange => Unit =
-    ex =>
-      contract.admit(Gateway.view(ex)) match {
-        case Right(identity) => h(ex, identity)
+    * gate's view of the request and its identity, resolved once. */
+  private def gated(h: (HttpExchange, RequestView, Option[String]) => Unit): HttpExchange => Unit =
+    ex => {
+      val req = Gateway.view(ex)
+      contract.admit(req) match {
+        case Right(identity) => h(ex, req, identity)
         case Left(refusal) =>
           refusal.challenge.foreach(ex.getResponseHeaders.set("WWW-Authenticate", _))
           respond(ex, refusal.status, RequestContract.UnauthorizedBody)
       }
+    }
 
   private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
     val bytes = body.getBytes(StandardCharsets.UTF_8)
@@ -231,17 +233,18 @@ final class Gateway(
     respondJson(ex, 200, EngineLog.rowsJson(contract.visible(name, schema, identity, rows), schema))
   }
 
-  /** `identity` is the gate's X13 identity (reference
+  /** `req` is the gate's view of the request and `identity` its X13
+    * identity (reference
     * IdentityAwareMiddlewareMixin: the auth middleware's identity feeds
     * the filter). */
-  private def handle(ex: HttpExchange, identity: Option[String]): Unit =
+  private def handle(ex: HttpExchange, req: RequestView, identity: Option[String]): Unit =
     try {
       val path = ex.getRequestURI.getPath.stripPrefix("/api/v1/")
       val parts = path.split("/").toList
       parts match {
         case "whoami" :: Nil =>
           // reference simple.py /whoami: the authenticated identity
-          contract.simpleAuthUser(Gateway.view(ex)) match {
+          contract.simpleAuthUser(req) match {
             case Some(u) => respond(ex, 200, s"""{"user":"$u"}""")
             case None if simpleAuthUsers.nonEmpty =>
               respond(ex, 401, """{"detail":"Session not found"}""")
@@ -282,7 +285,7 @@ final class Gateway(
             respondRows(ex, name, identity, r.toSeq)
           }
         case "state" :: name :: Nil if known(name) =>
-          val q = Gateway.view(ex).query("query").map(QueryTranslator.parseJson)
+          val q = req.query("query").map(QueryTranslator.parseJson)
             .getOrElse(graft.state.StateQuery())
           val rows =
             try runtime.state(name, q)
@@ -295,7 +298,7 @@ final class Gateway(
             case _ => respond(ex, 404, """{"detail":"id not found"}""")
           }
         case "stream" :: name :: Nil if known(name) =>
-          handleStream(ex, name, identity)
+          handleStream(ex, req, name, identity)
         case "table" :: Nil =>
           val arr = mapper.createArrayNode()
           viewServer.map(_.names).getOrElse(Nil).foreach(arr.add)
@@ -406,8 +409,9 @@ final class Gateway(
     * Demand-driven: the listener exists only while the client is
     * connected. `?max_events=N` closes after N data frames (testing).
     */
-  private def handleStream(ex: HttpExchange, name: String, identity: Option[String]): Unit = {
-    val maxEvents = Gateway.view(ex).query("max_events").map(_.toLong).getOrElse(Long.MaxValue)
+  private def handleStream(ex: HttpExchange, req: RequestView, name: String,
+      identity: Option[String]): Unit = {
+    val maxEvents = req.query("max_events").map(_.toLong).getOrElse(Long.MaxValue)
     ex.getResponseHeaders.set("Content-Type", "text/event-stream")
     ex.getResponseHeaders.set("Cache-Control", "no-cache")
     ex.sendResponseHeaders(200, 0)
@@ -613,7 +617,7 @@ final class Gateway(
           case Some(u) => redirect(ex, "/", Some(sessionSetCookie(contract.createSession(u))))
           case None =>
             ex.getResponseHeaders.set("WWW-Authenticate", "Basic")
-            respond(ex, 401, """{"detail":"unauthorized"}""")
+            respond(ex, 401, RequestContract.UnauthorizedBody)
         }
       } else {
         val err = Option(ex.getRequestURI.getRawQuery)
@@ -729,7 +733,7 @@ final class Gateway(
         server.createContext("/login", (ex: HttpExchange) => handleOAuth(ex, o))
     }
     server.createContext("/api/v1", (ex: HttpExchange) => gated(handle)(ex))
-    server.createContext("/outputs", (ex: HttpExchange) => gated { (e, _) =>
+    server.createContext("/outputs", (ex: HttpExchange) => gated { (e, _, _) =>
       outputsDir match {
         case Some(root) =>
           try handleOutputs(e, root)
@@ -738,7 +742,7 @@ final class Gateway(
         case None => respond(e, 404, """{"detail":"Not Found"}""")
       }
     }(ex))
-    server.createContext("/openapi.json", (ex: HttpExchange) => gated { (ex, _) =>
+    server.createContext("/openapi.json", (ex: HttpExchange) => gated { (ex, _, _) =>
       try respond(ex, 200, openApiJson)
       catch { case NonFatal(e) => respond(ex, 500, detailJson(e.getMessage)) }
     }(ex))

@@ -539,7 +539,9 @@ object ChannelRuntime {
   /** Lenient value coercion at the ingress boundary (pydantic-validate
     * analogue): numbers widen or narrow, ISO strings parse to
     * timestamps and `yyyy-mm-dd` strings to dates, arrays coerce per
-    * element. A value of another JVM type for a string, numeric,
+    * element, and the strings `NaN`, `Infinity` and `-Infinity` that
+    * the engine log writes for non-finite doubles and floats parse back
+    * to them. A value of another JVM type for a string, numeric,
     * boolean, timestamp, date or array field is rejected with an
     * `IllegalArgumentException` that names the field; values for other
     * types pass to the row encoder as they are.
@@ -559,7 +561,12 @@ object ChannelRuntime {
     case (x: String, TimestampType) =>
       try java.sql.Timestamp.from(java.time.OffsetDateTime.parse(x).toInstant)
       catch { case e: java.time.format.DateTimeParseException => mismatch(field, dt, e.getMessage) }
-    case (x: String, DateType) => java.sql.Date.valueOf(x) // IllegalArgumentException if malformed
+    case (x: String, DateType) =>
+      try java.sql.Date.valueOf(x)
+      catch { case _: IllegalArgumentException => mismatch(field, dt, s"got String $x") }
+    // writeRow's names for the non-finite doubles and floats
+    case (x: String, DoubleType) if NonFinite(x) => x.toDouble
+    case (x: String, FloatType) if NonFinite(x) => x.toFloat
     case (xs: Seq[_], ArrayType(et, _)) => xs.map(coerce(_, et, field))
     case (xs: java.util.List[_], ArrayType(et, _)) => xs.asScala.toSeq.map(coerce(_, et, field))
     case (xs: Array[_], ArrayType(et, _)) => xs.toSeq.map(coerce(_, et, field))
@@ -568,6 +575,8 @@ object ChannelRuntime {
       mismatch(field, dt, s"got ${x.getClass.getSimpleName} $x")
     case (x, _) => x
   }
+
+  private val NonFinite = Set("NaN", "Infinity", "-Infinity")
 
   private def mismatch(field: String, dt: DataType, detail: String): Nothing =
     throw new IllegalArgumentException(

@@ -247,7 +247,15 @@ class ChannelRuntimeSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sent = Seq(
       Seq(1L << 40, -7, 0.1, 0.1f, true, "é \"q\" \u00e9", ts,
         java.sql.Date.valueOf("2024-02-29"), Seq("a", null), Seq(1L, -2L)),
-      Seq.fill[Any](typed.size)(null))
+      Seq.fill[Any](typed.size)(null),
+      // the log writes non-finite doubles and floats as "NaN",
+      // "Infinity" and "-Infinity"; replay must read them back
+      Seq(0L, 0, Double.NaN, Float.NaN, false, "", ts, java.sql.Date.valueOf("1970-01-01"),
+        Seq.empty, Seq.empty),
+      Seq(-1L, 1, Double.PositiveInfinity, Float.NegativeInfinity, true, "i", ts,
+        java.sql.Date.valueOf("2099-12-31"), Seq("b"), Seq(Long.MaxValue)),
+      Seq(2L, 2, Double.NegativeInfinity, Float.PositiveInfinity, false, "j", ts,
+        java.sql.Date.valueOf("1900-01-01"), Seq.empty, Seq(Long.MinValue)))
     val typedRuntime = StructType(typed.fields :+ StructField("_seq", LongType))
     val typedLog = Files.createTempFile("graft-typed", ".jsonl")
     val w = Files.newBufferedWriter(typedLog)
@@ -262,11 +270,14 @@ class ChannelRuntimeSpec extends AnyFunSuite with BeforeAndAfterAll {
     rt4.addListener((_, rows) => rows.foreach(replayed.add))
     rt4.start()
     try {
-      assert(EngineLog.replay(rt4, typedLog.toString, Seq("typed")) === 2)
+      assert(EngineLog.replay(rt4, typedLog.toString, Seq("typed")) === sent.size)
       rt4.processAllAvailable()
       import scala.jdk.CollectionConverters._
       val got = replayed.asScala.toSeq.sortBy(_.getLong(typed.size)).map(_.toSeq.dropRight(1))
-      assert(got === sent)
+      // boxed equals: NaN equals NaN, and a Long never equals an Int
+      assert(got.size === sent.size && got.zip(sent).forall { case (g, s) =>
+        g.size == s.size && g.zip(s).forall { case (a, b) => java.util.Objects.equals(a, b) }
+      }, got)
     } finally rt4.stop()
   }
 

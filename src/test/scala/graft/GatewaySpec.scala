@@ -27,10 +27,10 @@ class GatewaySpec extends AnyFunSuite {
 
   private var gatewayUnderTest: Option[Gateway] = None
 
-  private def withGateway(auth: Map[String, String] = Map.empty)(
-      f: (String, ChannelRuntime) => Unit): Unit = {
+  private def withGateway(auth: Map[String, String] = Map.empty,
+      channelSchema: StructType = schema)(f: (String, ChannelRuntime) => Unit): Unit = {
     val rt = new ChannelRuntime(spark,
-      Map("example" -> ChannelSpec("example", schema, stateKeyby = Seq("owner"))),
+      Map("example" -> ChannelSpec("example", channelSchema, stateKeyby = Seq("owner"))),
       Files.createTempDirectory("graft-gw-ckpt").toString)
     rt.start()
     val gw = new Gateway(rt, 0, auth).start()
@@ -83,13 +83,17 @@ class GatewaySpec extends AnyFunSuite {
   }
 
   test("404 unknown channel, 422 bad payload") {
-    withGateway() { (base, _) =>
+    withGateway(channelSchema = schema.add(StructField("day", DateType))) { (base, _) =>
       assert(get(s"$base/last/ghost").statusCode() === 404)
       assert(post(s"$base/send/ghost", "{}").statusCode() === 404)
       assert(post(s"$base/send/example", """{"ghost_field": 1}""").statusCode() === 422)
       // a value of the wrong type is a 422 naming the field, not a 500
       val typed = post(s"$base/send/example", """{"x": "abc"}""")
       assert(typed.statusCode() === 422 && typed.body().contains("'x'"), typed.body())
+      // dates travel as `yyyy-mm-dd`; any other text is a 422 naming the field
+      assert(post(s"$base/send/example", """{"day": "2024-02-29"}""").statusCode() === 200)
+      val badDay = post(s"$base/send/example", """{"day": "29.02.2024"}""")
+      assert(badDay.statusCode() === 422 && badDay.body().contains("'day'"), badDay.body())
     }
   }
 
@@ -118,15 +122,19 @@ class GatewaySpec extends AnyFunSuite {
         headers.foreach { case (k, v) => b.header(k, v) }
         val lines = http.send(b.build(), HttpResponse.BodyHandlers.ofLines()).body()
         val frames = new java.util.concurrent.LinkedBlockingQueue[String]
+        val pinged = new java.util.concurrent.CountDownLatch(1)
         val reader = new Thread(() =>
-          try lines.forEach(l => if (l.startsWith("data: ")) frames.offer(l))
-          catch { case _: Throwable => () })
+          try lines.forEach { l =>
+            if (l.startsWith(": ping")) pinged.countDown()
+            else if (l.startsWith("data: ")) frames.offer(l)
+          } catch { case _: Throwable => () })
         reader.setDaemon(true)
         reader.start()
-        (lines, frames)
+        (lines, frames, pinged)
       }
       try {
-        Thread.sleep(300) // the listener attaches just after the headers
+        // the server pings only once its listener is attached
+        subs.foreach(s => assert(s._3.await(10, java.util.concurrent.TimeUnit.SECONDS)))
         assert(post(s"$base/send/example", """{"x": 1, "owner": "alice"}""",
           Map("x-identity" -> "alice")).statusCode() === 200)
         rt.processAllAvailable()
