@@ -1,4 +1,6 @@
 package graft
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -20,7 +22,7 @@ object Bench {
     // steady-state (ASV-style), not first-query JVM warmup.
     graft.core.Tables.names.foreach { t =>
       try spark.read.parquet(s"$sfDir/$t.parquet").limit(1).count()
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
     // Two passes, min per query: the first pass doubles as per-query
     // warmup (codegen/JIT), the min is the steady-state number — the
@@ -43,13 +45,13 @@ object Bench {
     // flatMapGroupsWithState state store.
     val insertSec =
       if (only.nonEmpty) -1.0
-      else try stateInsertBench(spark) catch { case _: Throwable => -1.0 }
+      else try stateInsertBench(spark) catch { case NonFatal(_) => -1.0 }
     // BASELINE `state_query_all` / `state_query_filter` / `replay`
     // mirrors (ASV StateFirstQueryAll / StateFirstQueryFilter /
     // ReplayEngineJSON shapes).
     val gw =
       if (only.nonEmpty) Map.empty[String, Double]
-      else try gatewayBench(spark) catch { case _: Throwable =>
+      else try gatewayBench(spark) catch { case NonFatal(_) =>
         Map("state_query_all" -> -1.0, "state_query_filter" -> -1.0, "replay" -> -1.0) }
     val allResults = results + ("state_insert_100k" -> insertSec) ++ gw
     val total = if (allResults.nonEmpty) allResults.values.filter(_ > 0).sum else 0.0
@@ -72,7 +74,7 @@ object Bench {
     val twinFloor =
       if (only.nonEmpty) -1.0
       else try (0 until 3).map(_ => twinFloorRep(spark)).min
-           catch { case _: Throwable => -1.0 }
+           catch { case NonFatal(_) => -1.0 }
     val floorRatio =
       if (twinFloor > 0 && includedTwins > 0)
         streamSubtotal / (twinFloor * includedTwins)
@@ -106,7 +108,7 @@ object Bench {
       s"""{"metric":"total","value":$total,"unit":"sec",$drift,"queries":$qs,"sf":"$sfDir"}"""
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("bench.json"), verbose + "\n")
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     // r15 verdict task 1: the driver's PERF comparator had n_common=0
     // because the final line's q_ms array is nameless and the named map
     // (bench.json) is overwritten by the driver's own run. The zip key
@@ -120,7 +122,7 @@ object Bench {
       java.nio.file.Paths.get("BENCH_names.json"),
       sorted.map(e => "\"" + e._1 + "\"")
         .mkString("{\"order\":\"sorted-name\",\"names\":[", ",", "]}\n"))
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     println(verbose)
     val msInts = sorted.map { case (_, v) =>
       if (v < 0) "-1" else math.round(v * 1000).toString }.mkString("[", ",", "]")
@@ -162,7 +164,7 @@ object Bench {
       entries: Seq[(String, (SparkSession, String) => DataFrame)]): Map[String, Double] =
     entries.map { case (name, fn) =>
       val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
+      val ok = try { fn(spark, sfDir).count(); true } catch { case NonFatal(_) => false }
       val dt = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
       spark.catalog.clearCache()
       // r15 measurement hygiene (§1, ASV-style steady state): the

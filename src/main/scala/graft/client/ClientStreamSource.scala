@@ -8,9 +8,8 @@ import com.fasterxml.jackson.databind.JsonNode
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.types._
 
-import graft.streaming.ChannelRuntime
+import graft.streaming.{ChannelRuntime, JsonCodec}
 
 /** Drains a [[GatewayStream]]'s data frames on a daemon thread and
   * hands each to `onFrame` — the pump half of the reference's
@@ -87,11 +86,10 @@ object ClientStreamSource {
 
   /** Forward subscribed channels into a local runtime: each data
     * frame becomes a `send` on the same-named (or remapped) channel,
-    * fields filtered to the target schema and converted by its column
-    * types (ISO-8601 strings → timestamps, the engine-log envelope
-    * convention). Frames for channels the target doesn't mount are
-    * skipped — subscribe narrower or mount wider, both visible in
-    * `frameCount` vs the sender's tick count.
+    * fields filtered to the target schema and typed by the send like
+    * any other ingress ([[JsonCodec]]). Frames for channels the target
+    * doesn't mount are skipped — subscribe narrower or mount wider, both
+    * visible in `frameCount` vs the sender's tick count.
     */
   def into(stream: GatewayStream, runtime: ChannelRuntime,
       channelMap: String => String = identity,
@@ -103,22 +101,10 @@ object ClientStreamSource {
         if (data != null && data.isObject) {
           val m = spec.schema.fields.flatMap { f =>
             Option(data.get(f.name)).filterNot(_.isNull)
-              .map(v => f.name -> valueFor(v, f.dataType))
+              .map(v => f.name -> JsonCodec.jsonValue(v))
           }.toMap
           if (m.nonEmpty) runtime.send(ch, Seq(m))
         }
       }
     })
-
-  private def valueFor(v: JsonNode, dt: DataType): Any = dt match {
-    case StringType  => v.asText()
-    case LongType    => v.asLong()
-    case IntegerType => v.asInt()
-    case DoubleType  => v.asDouble()
-    case FloatType   => v.asDouble().toFloat
-    case BooleanType => v.asBoolean()
-    case TimestampType =>
-      java.sql.Timestamp.from(java.time.Instant.parse(v.asText()))
-    case _ => v.asText()
-  }
 }

@@ -10,12 +10,11 @@ import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.state.{FilterBy, StateQuery}
-import graft.streaming.EngineLog
+import graft.streaming.JsonCodec
 
 /** Typed errors mirroring the reference client's exception family
   * (client/client.py + utils: `ServerRouteNotFoundException` on 404,
@@ -83,8 +82,8 @@ final class GatewayResponse private[client] (val json: JsonNode, mapper: ObjectM
   /** Rows as maps; a single-object response is list-wrapped like the
     * reference's response shaping (one row → [row], empty → []). */
   def rows: Seq[Map[String, Any]] =
-    if (json.isArray) json.elements().asScala.map(EngineLog.jsonValue(_).asInstanceOf[Map[String, Any]]).toSeq
-    else if (json.isObject) Seq(EngineLog.jsonValue(json).asInstanceOf[Map[String, Any]])
+    if (json.isArray) json.elements().asScala.map(JsonCodec.jsonValue(_).asInstanceOf[Map[String, Any]]).toSeq
+    else if (json.isObject) Seq(JsonCodec.jsonValue(json).asInstanceOf[Map[String, Any]])
     else Nil
 
   def isEmpty: Boolean = json.isArray && json.isEmpty
@@ -294,14 +293,14 @@ final class GatewayClient(val config: GatewayClientConfig) {
   /** POST /send/{channel} — list of rows (client.py send with list). */
   def sendMany(channel: String, data: Seq[Map[String, Any]]): GatewayResponse = {
     raiseIfNotMounted("send", channel)
-    post(s"send/$channel", mapper.writeValueAsString(toJson(data)))
+    post(s"send/$channel", JsonCodec.jsonText(JsonCodec.writeAny(_, data)))
   }
 
   /** POST /send/{channel}/{key} — basket-key send: the path key is
     * injected as the basket key column server-side. */
   def send(channel: String, key: String, data: Map[String, Any]): GatewayResponse = {
     raiseIfNotMounted("send", channel)
-    post(s"send/$channel/$key", mapper.writeValueAsString(anyToJson(data)))
+    post(s"send/$channel/$key", JsonCodec.jsonText(JsonCodec.writeAny(_, data)))
   }
 
   /** Channel names mounted under a verb group (GET /{group}/). */
@@ -343,61 +342,14 @@ final class GatewayClient(val config: GatewayClientConfig) {
   // ---- JSON helpers -------------------------------------------------------
 
   /** Serialize a [[StateQuery]] to the server's `query=` JSON. */
-  def queryJson(q: StateQuery): String = {
-    val root = mapper.createObjectNode()
-    val arr = root.putArray("filters")
-    q.filters.foreach { f =>
-      val o = arr.addObject()
-      o.put("attr", f.attr)
-      val by = o.putObject("by")
-      f.by match {
-        case FilterBy.Value(v: Long)    => by.put("value", v)
-        case FilterBy.Value(v: Int)     => by.put("value", v.toLong)
-        case FilterBy.Value(v: Double)  => by.put("value", v)
-        case FilterBy.Value(v: Boolean) => by.put("value", v)
-        case FilterBy.Value(v)          => by.put("value", String.valueOf(v))
-        case FilterBy.When(ts) =>
-          by.put("when", ts.toInstant.atOffset(java.time.ZoneOffset.UTC).toString)
-        case FilterBy.Attr(a) => by.put("attr", a)
-      }
-      o.put("where", f.where)
-    }
-    mapper.writeValueAsString(root)
-  }
-
-  private def toJson(rows: Seq[Map[String, Any]]): ArrayNode = {
-    val arr = mapper.createArrayNode()
-    rows.foreach(r => arr.add(anyToJson(r)))
-    arr
-  }
-
-  private def anyToJson(m: Map[String, Any]): ObjectNode = {
-    val o = mapper.createObjectNode()
-    m.foreach { case (k, v) => setAny(o, k, v) }
-    o
-  }
-
-  private def setAny(o: ObjectNode, k: String, v: Any): Unit = v match {
-    case null         => o.putNull(k)
-    case x: Long      => o.put(k, x)
-    case x: Int       => o.put(k, x.toLong)
-    case x: Double    => o.put(k, x)
-    case x: Float     => o.put(k, x.toDouble)
-    case x: Boolean   => o.put(k, x)
-    case x: Map[_, _] => o.set[JsonNode](k,
-      anyToJson(x.asInstanceOf[Map[String, Any]]))
-    case x: Seq[_] =>
-      val arr = o.putArray(k)
-      x.foreach {
-        case e: Long    => arr.add(e)
-        case e: Int     => arr.add(e.toLong)
-        case e: Double  => arr.add(e)
-        case e: Boolean => arr.add(e)
-        case e: Map[_, _] => arr.add(anyToJson(e.asInstanceOf[Map[String, Any]]))
-        case e          => arr.add(String.valueOf(e))
-      }
-    case x => o.put(k, String.valueOf(x))
-  }
+  def queryJson(q: StateQuery): String = JsonCodec.jsonText(JsonCodec.writeAny(_,
+    Map("filters" -> q.filters.map { f =>
+      Map("attr" -> f.attr, "by" -> (f.by match {
+        case FilterBy.Value(v) => Map("value" -> v)
+        case FilterBy.When(ts) => Map("when" -> ts)
+        case FilterBy.Attr(a) => Map("attr" -> a)
+      }), "where" -> f.where)
+    })))
 }
 
 /** One multiplexed WebSocket session against the gateway's streaming
@@ -458,14 +410,9 @@ final class GatewayStream private[client] (
   }
 
   private def sendAction(action: String, channel: String,
-      key: Option[String], data: Option[JsonNode]): Unit = {
-    val o = mapper.createObjectNode()
-    o.put("action", action)
-    o.put("channel", channel)
-    key.foreach(o.put("key", _))
-    data.foreach(o.set[JsonNode]("data", _))
-    ws.sendText(mapper.writeValueAsString(o), true).join()
-  }
+      key: Option[String], data: Option[Map[String, Any]]): Unit =
+    ws.sendText(JsonCodec.jsonText(JsonCodec.writeAny(_, Map("action" -> action,
+      "channel" -> channel) ++ key.map("key" -> _) ++ data.map("data" -> _))), true).join()
 
   /** Subscribe to a channel (whole basket) or one basket key. */
   def subscribe(channel: String, key: Option[String] = None): Unit =
@@ -478,20 +425,8 @@ final class GatewayStream private[client] (
   /** Publish rows into a channel through the socket (reference
     * `publish`; basket channels require a key). */
   def publish(channel: String, data: Map[String, Any],
-      key: Option[String] = None): Unit = {
-    val o = mapper.createObjectNode()
-    data.foreach { case (k, v) =>
-      v match {
-        case null       => o.putNull(k)
-        case x: Long    => o.put(k, x)
-        case x: Int     => o.put(k, x.toLong)
-        case x: Double  => o.put(k, x)
-        case x: Boolean => o.put(k, x)
-        case x          => o.put(k, String.valueOf(x))
-      }
-    }
-    sendAction("send", channel, key, Some(o))
-  }
+      key: Option[String] = None): Unit =
+    sendAction("send", channel, key, Some(data))
 
   /** Next frame (including heartbeats), or None on timeout/close. */
   def take(timeoutMillis: Long = 5000): Option[JsonNode] =

@@ -1,5 +1,7 @@
 package graft.core
 
+import scala.util.control.NonFatal
+
 /** Run-scoped /tmp scratch registry (r11 verdict task 7): the catalog
   * writes side-effect layouts / stream checkpoints / index roots under
   * /tmp on every run, and nothing deleted them — the judge counted
@@ -50,7 +52,7 @@ object Scratch {
     val it = tracked.iterator()
     while (it.hasNext) {
       val p = it.next(); it.remove()
-      try deleteRec(new java.io.File(p)) catch { case _: Throwable => () }
+      try deleteRec(new java.io.File(p)) catch { case NonFatal(_) => () }
     }
   }
 
@@ -94,7 +96,7 @@ object Scratch {
     org.apache.hadoop.util.ShutdownHookManager.get()
       .addShutdownHook(new Runnable { def run(): Unit = sweep() }, 0)
   catch {
-    case _: Throwable =>
+    case NonFatal(_) | _: LinkageError => // a missing Hadoop class is a LinkageError
       java.lang.Runtime.getRuntime.addShutdownHook(
         new Thread(() => sweep(), "graft-scratch-sweep"))
   }

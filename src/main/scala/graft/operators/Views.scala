@@ -47,11 +47,6 @@ object Views {
     def strs(n: JsonNode): Seq[String] = n.elements().asScala.map(_.asText()).toSeq
     def opt(name: String): Option[JsonNode] =
       Option(root.get(name)).filterNot(_.isNull)
-    def value(v: JsonNode): Any =
-      if (v.isIntegralNumber) v.asLong()
-      else if (v.isFloatingPointNumber) v.asDouble()
-      else if (v.isBoolean) v.asBoolean()
-      else v.asText()
     ViewConfig(
       groupBy = opt("group_by").map(strs).getOrElse(Nil),
       splitBy = opt("split_by").map(n => (n.get("col").asText(), strs(n.get("values")))),
@@ -62,7 +57,7 @@ object Views {
         (p.get(0).asText(), p.get(1).asText() == "asc")
       }.toSeq).getOrElse(Nil),
       filter = opt("filter").map(_.elements().asScala.map { f =>
-        (f.get(0).asText(), f.get(1).asText(), value(f.get(2)))
+        (f.get(0).asText(), f.get(1).asText(), graft.streaming.JsonCodec.jsonValue(f.get(2)))
       }.toSeq).getOrElse(Nil),
       expressions = opt("expressions").map(_.properties().asScala.map { e =>
         e.getKey -> e.getValue.asText()

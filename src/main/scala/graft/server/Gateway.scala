@@ -11,7 +11,7 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 import graft.state.QueryTranslator
-import graft.streaming.{ChannelRuntime, EngineLog}
+import graft.streaming.{ChannelRuntime, JsonCodec}
 
 /** REST query surface over a running [[ChannelRuntime]] — the
   * reference's FastAPI routes re-expressed on the JDK http server
@@ -230,7 +230,7 @@ final class Gateway(
   private def respondRows(ex: HttpExchange, name: String, identity: Option[String],
       rows: Seq[org.apache.spark.sql.Row]): Unit = {
     val schema = schemaOf(name)
-    respondJson(ex, 200, EngineLog.rowsJson(contract.visible(name, schema, identity, rows), schema))
+    respondJson(ex, 200, JsonCodec.rowsJson(contract.visible(name, schema, identity, rows), schema))
   }
 
   /** `req` is the gate's view of the request and `identity` its X13
@@ -294,7 +294,7 @@ final class Gateway(
         case "lookup" :: name :: id :: Nil if known(name) =>
           val schema = schemaOf(name)
           contract.visible(name, schema, identity, runtime.lookup(name, id).toSeq) match {
-            case Seq(row) => respondJson(ex, 200, EngineLog.rowJson(row, schema))
+            case Seq(row) => respondJson(ex, 200, JsonCodec.jsonBytes(JsonCodec.writeRow(_, row, schema)))
             case _ => respond(ex, 404, """{"detail":"id not found"}""")
           }
         case "stream" :: name :: Nil if known(name) =>
@@ -324,7 +324,7 @@ final class Gateway(
               // projection dropped the auth field (aggregates), it
               // serves nothing rather than leaking everyone's rows
               val rows = channel.fold(rawRows)(contract.visible(_, schema, identity, rawRows))
-              if (rest.isEmpty) respondJson(ex, 200, EngineLog.rowsJson(rows, schema))
+              if (rest.isEmpty) respondJson(ex, 200, JsonCodec.rowsJson(rows, schema))
               else
                 respondBytes(ex, 200,
                   org.apache.spark.sql.graft.ArrowBridge.toArrowStream(rows, schema),
@@ -351,7 +351,7 @@ final class Gateway(
           respond(ex, 200, mapper.writeValueAsString(arr))
         case "field" :: fname :: Nil if ex.getRequestMethod == "GET" =>
           staticFields.get(fname) match {
-            case Some(v) => respond(ex, 200, mapper.writeValueAsString(anyToJsonNode(v)))
+            case Some(v) => respondJson(ex, 200, JsonCodec.jsonBytes(JsonCodec.writeAny(_, v)))
             case None =>
               respond(ex, 404,
                 detailJson(s"Channel field not found: $fname"))
@@ -555,28 +555,6 @@ final class Gateway(
     * or any key when the domain is open (str-typed basket). */
   private def keyDeclared(name: String, key: String): Boolean =
     runtime.specs.get(name).forall(_.basketKeys.forall(_.contains(key)))
-
-  /** JSON-serialize a static-field value (Scala maps/seqs aren't
-    * Jackson-native; the reference requires "JSON serializable"
-    * fields — same contract here). */
-  private def anyToJsonNode(v: Any): JsonNode = v match {
-    case null         => mapper.nullNode()
-    case x: String    => mapper.getNodeFactory.textNode(x)
-    case x: Long      => mapper.getNodeFactory.numberNode(x)
-    case x: Int       => mapper.getNodeFactory.numberNode(x.toLong)
-    case x: Double    => mapper.getNodeFactory.numberNode(x)
-    case x: Float     => mapper.getNodeFactory.numberNode(x.toDouble)
-    case x: Boolean   => mapper.getNodeFactory.booleanNode(x)
-    case x: Map[_, _] =>
-      val o = mapper.createObjectNode()
-      x.foreach { case (k, value) => o.set[JsonNode](String.valueOf(k), anyToJsonNode(value)) }
-      o
-    case x: Iterable[_] =>
-      val a = mapper.createArrayNode()
-      x.foreach(e => a.add(anyToJsonNode(e)))
-      a
-    case x => mapper.getNodeFactory.textNode(String.valueOf(x))
-  }
 
   /** Session cookie attributes (reference set_cookie: HttpOnly,
     * max-age = session timeout). */
@@ -1182,12 +1160,12 @@ object Gateway {
     * only for dict-basket channels). */
   private[graft] def frameJson(channel: String, key: Option[String],
       r: org.apache.spark.sql.Row, schema: org.apache.spark.sql.types.StructType): Array[Byte] =
-    EngineLog.jsonBytes { g =>
+    JsonCodec.jsonBytes { g =>
       g.writeStartObject()
       g.writeStringField("channel", channel)
       key.foreach(g.writeStringField("key", _))
       g.writeFieldName("data")
-      EngineLog.writeRow(g, r, schema)
+      JsonCodec.writeRow(g, r, schema)
       g.writeEndObject()
     }
 

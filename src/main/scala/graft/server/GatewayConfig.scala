@@ -8,7 +8,7 @@ import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
 
 import graft.core.ChannelSpec
-import graft.streaming.{ChannelRuntime, EngineLog}
+import graft.streaming.{ChannelRuntime, JsonCodec}
 
 /** Config-file gateway construction — the reference launches from
   * declarative configs (`server/config/gateway/demo.yaml`: channel
@@ -86,8 +86,8 @@ object GatewayConfig {
   final case class Loaded(runtime: ChannelRuntime, gateway: Gateway, port: Int)
 
   /** Build (but do not start) the runtime + gateway from a config
-    * document. `checkpointDir` defaults to a temp dir like the
-    * reference's per-run output dir.
+    * document. `checkpointDir` defaults to the runtime's own temp dir,
+    * like the reference's per-run output dir.
     */
   def load(spark: SparkSession, doc: String,
       checkpointDir: Option[String] = None,
@@ -107,10 +107,11 @@ object GatewayConfig {
           .map(e => e.getKey -> e.getValue.asText()).toMap
       else Map.empty
     RequestContract.checkAuthFields(specs, auth)
-    val runtime = new ChannelRuntime(spark, specs,
-      checkpointDir.getOrElse(
-        java.nio.file.Files.createTempDirectory("graft-gw-ckpt").toString),
-      distributedState = root.path("distributedState").asBoolean(false))
+    val distributedState = root.path("distributedState").asBoolean(false)
+    val runtime = checkpointDir match {
+      case Some(dir) => new ChannelRuntime(spark, specs, dir, distributedState)
+      case None => new ChannelRuntime(spark, specs, distributedState = distributedState)
+    }
     val apiKeys: Seq[String] =
       if (root.has("apiKeys"))
         root.get("apiKeys").elements().asScala.map(_.asText()).toSeq
@@ -173,7 +174,7 @@ object GatewayConfig {
     val staticFields: Map[String, Any] =
       if (!root.has("staticFields")) Map.empty
       else root.get("staticFields").properties().asScala
-        .map(e => e.getKey -> EngineLog.jsonValue(e.getValue)).toMap
+        .map(e => e.getKey -> JsonCodec.jsonValue(e.getValue)).toMap
     val gateway = new Gateway(runtime, port, auth, onShutdown, apiKeys,
       simpleAuthUsers, sessionTimeoutMillis, sessionCookieName,
       oauth = oauth, staticFields = staticFields)

@@ -10,7 +10,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.types.StructType
 
 import graft.core.ChannelSpec
-import graft.streaming.{ChannelRuntime, EngineLog}
+import graft.streaming.{ChannelRuntime, JsonCodec}
 
 /** What a transport knows of a request before the contract runs: the
   * raw query string and a case-insensitive header lookup. A REST
@@ -151,7 +151,7 @@ private[server] final class RequestContract(
 
   /** The field maps `ChannelRuntime.send` takes for a send of `data`
     * (one object or an array of them) to `channel`: values decoded by
-    * [[EngineLog.jsonValue]], the basket key injected as the key column,
+    * [[JsonCodec.jsonValue]], the basket key injected as the key column,
     * and the X13 write check applied — every row must carry the
     * caller's identity in the channel's auth field. */
   def sendRows(channel: String, data: JsonNode, key: Option[String],
@@ -162,7 +162,7 @@ private[server] final class RequestContract(
       if (o == null || !o.isObject)
         throw new IllegalArgumentException(
           s"send to '$channel' expects a JSON object or an array of objects")
-      val m = EngineLog.jsonValue(o).asInstanceOf[Map[String, Any]]
+      val m = JsonCodec.jsonValue(o).asInstanceOf[Map[String, Any]]
       (keyCol, key) match {
         case (Some(col), Some(k)) => m + (col -> k)
         case _                    => m

@@ -102,13 +102,8 @@ object QueryTranslator extends Logging {
     StateQuery(filters.map { f: JsonNode =>
       val by = f.get("by")
       val fb: FilterBy =
-        if (by.has("value")) {
-          val v = by.get("value")
-          if (v.isIntegralNumber) FilterBy.Value(v.asLong())
-          else if (v.isFloatingPointNumber) FilterBy.Value(v.asDouble())
-          else if (v.isBoolean) FilterBy.Value(v.asBoolean())
-          else FilterBy.Value(v.asText())
-        } else if (by.has("when"))
+        if (by.has("value")) FilterBy.Value(graft.streaming.JsonCodec.jsonValue(by.get("value")))
+        else if (by.has("when"))
           FilterBy.When(java.sql.Timestamp.from(
             java.time.OffsetDateTime.parse(by.get("when").asText()).toInstant))
         else if (by.has("attr")) FilterBy.Attr(by.get("attr").asText())

@@ -52,7 +52,9 @@ import graft.state.{StateFastPath, StateOps, StateQuery}
 final class ChannelRuntime(
     val spark: SparkSession,
     val specs: Map[String, ChannelSpec],
-    checkpointDir: String = java.nio.file.Files.createTempDirectory("graft-ckpt").toString,
+    /** Default: a temp dir the end-of-run [[graft.core.Scratch]] sweep
+      * deletes; an explicit one is kept for restart and recovery. */
+    checkpointDir: String = graft.core.Scratch.dir("graft-ckpt"),
     /** Cluster serving mode: keyed state accumulates in the Spark
       * state store (RocksDB, sharded across executors) via
       * [[StreamingState.lastByKeyStream]] instead of a driver map, and
@@ -75,6 +77,7 @@ final class ChannelRuntime(
 
   private final class Chan(val spec: ChannelSpec) {
     val schema: StructType = runtimeSchema(spec)
+    val names: Set[String] = spec.schema.fieldNames.toSet
     val stream: MemoryStream[Row] = MemoryStream[Row](Encoders.row(schema), sqlCtx)
     @volatile var lastRow: Option[Row] = None
     /** Bounded id→row registry (T7): oldest-inserted evicts beyond
@@ -104,8 +107,12 @@ final class ChannelRuntime(
     @volatile var tickCount: Long = 0L
   }
 
-  // fail fast on misdeclared channels (typo'd basket key columns etc.)
+  // fail fast on misdeclared channels (typo'd basket key columns,
+  // field types without a JSON form etc.)
   specs.values.foreach { s =>
+    s.schema.fields.foreach(f => require(JsonCodec.supported(f.dataType),
+      s"Channel '${s.name}': field '${f.name}' has type ${f.dataType.simpleString}, " +
+        "which has no JSON form"))
     s.basketKey.foreach(k => require(s.schema.fieldNames.contains(k),
       s"Channel '${s.name}': basket key column '$k' not in schema"))
   }
@@ -231,10 +238,10 @@ final class ChannelRuntime(
   // ---- write path (S5/S6/S7) -------------------------------------------
 
   /** Validate + ingest rows: values coerced against the declared
-    * schema (missing nullable fields → null; `id`/`timestamp` system
-    * fields auto-assigned when absent, reference base.py:61-65), a
-    * monotonic `_seq` appended (single-writer order). Returns the
-    * validated rows as ingested.
+    * schema by [[JsonCodec.coerce]] (missing nullable fields → null;
+    * `id`/`timestamp` system fields auto-assigned when absent, reference
+    * base.py:61-65), a monotonic `_seq` appended (single-writer order).
+    * Returns the validated rows as ingested.
     */
   /** `applyHooks = false` (engine-log replay): the logged rows already
     * passed the processor/validator at original ingest — re-applying
@@ -253,12 +260,10 @@ final class ChannelRuntime(
   private def sendLocked(c: Chan, name: String, values: Seq[Map[String, Any]],
       applyHooks: Boolean): Seq[Row] = {
     val rows = values.flatMap { m =>
-      val unknown = m.keySet.diff(c.spec.schema.fieldNames.toSet)
-      if (unknown.nonEmpty)
-        throw new IllegalArgumentException(s"Unknown fields $unknown for channel '$name'")
+      JsonCodec.requireKnown(m.keySet, c.names, s"channel '$name'")
       val vals = c.spec.schema.fields.map { f =>
         m.get(f.name) match {
-          case Some(v) => coerce(v, f.dataType, f.name)
+          case Some(v) => JsonCodec.coerce(v, f.dataType, f.name)
           case None =>
             f.name match {
               case IdCol if f.dataType == StringType => graft.core.IdGen.global.next()
@@ -535,50 +540,4 @@ object ChannelRuntime {
     case f: Float if f == 0.0f || f.isNaN => Float.box(if (f.isNaN) Float.NaN else 0.0f)
     case other => other.asInstanceOf[AnyRef]
   }
-
-  /** Lenient value coercion at the ingress boundary (pydantic-validate
-    * analogue): numbers widen or narrow, ISO strings parse to
-    * timestamps and `yyyy-mm-dd` strings to dates, arrays coerce per
-    * element, and the strings `NaN`, `Infinity` and `-Infinity` that
-    * the engine log writes for non-finite doubles and floats parse back
-    * to them. A value of another JVM type for a string, numeric,
-    * boolean, timestamp, date or array field is rejected with an
-    * `IllegalArgumentException` that names the field; values for other
-    * types pass to the row encoder as they are.
-    */
-  def coerce(v: Any, dt: DataType, field: String): Any = (v, dt) match {
-    case (null, _) => null
-    case (_: String, StringType) | (_: Long, LongType) | (_: Int, IntegerType) |
-         (_: Double, DoubleType) | (_: Float, FloatType) | (_: Boolean, BooleanType) |
-         (_: java.sql.Timestamp, TimestampType) | (_: java.sql.Date, DateType) => v
-    case (x: Int, LongType) => x.toLong
-    case (x: Long, IntegerType) => x.toInt
-    case (x: Int, DoubleType) => x.toDouble
-    case (x: Long, DoubleType) => x.toDouble
-    case (x: java.math.BigDecimal, DoubleType) => x.doubleValue()
-    case (x: Double, FloatType) => x.toFloat
-    case (x: Long, FloatType) => x.toFloat
-    case (x: String, TimestampType) =>
-      try java.sql.Timestamp.from(java.time.OffsetDateTime.parse(x).toInstant)
-      catch { case e: java.time.format.DateTimeParseException => mismatch(field, dt, e.getMessage) }
-    case (x: String, DateType) =>
-      try java.sql.Date.valueOf(x)
-      catch { case _: IllegalArgumentException => mismatch(field, dt, s"got String $x") }
-    // writeRow's names for the non-finite doubles and floats
-    case (x: String, DoubleType) if NonFinite(x) => x.toDouble
-    case (x: String, FloatType) if NonFinite(x) => x.toFloat
-    case (xs: Seq[_], ArrayType(et, _)) => xs.map(coerce(_, et, field))
-    case (xs: java.util.List[_], ArrayType(et, _)) => xs.asScala.toSeq.map(coerce(_, et, field))
-    case (xs: Array[_], ArrayType(et, _)) => xs.toSeq.map(coerce(_, et, field))
-    case (x, StringType | LongType | IntegerType | DoubleType | FloatType | BooleanType |
-        TimestampType | DateType | _: ArrayType) =>
-      mismatch(field, dt, s"got ${x.getClass.getSimpleName} $x")
-    case (x, _) => x
-  }
-
-  private val NonFinite = Set("NaN", "Infinity", "-Infinity")
-
-  private def mismatch(field: String, dt: DataType, detail: String): Nothing =
-    throw new IllegalArgumentException(
-      s"Field '$field' expects ${dt.simpleString}: $detail")
 }

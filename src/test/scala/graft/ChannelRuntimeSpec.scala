@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import scala.concurrent.duration._
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -236,26 +237,39 @@ class ChannelRuntimeSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally rt3.stop()
 
     // every column type round-trips writeCycle -> replay: replay decodes
-    // like a send and ChannelRuntime.coerce types the values
+    // like a send and JsonCodec.coerce types the values
+    val inner = StructType(Seq(StructField("a", LongType), StructField("s", StringType)))
     val typed = StructType(Seq(
       StructField("l", LongType), StructField("i", IntegerType),
       StructField("d", DoubleType), StructField("f", FloatType),
       StructField("b", BooleanType), StructField("s", StringType),
       StructField("ts", TimestampType), StructField("dt", DateType),
-      StructField("as", ArrayType(StringType)), StructField("al", ArrayType(LongType))))
+      StructField("as", ArrayType(StringType)), StructField("al", ArrayType(LongType)),
+      StructField("bin", BinaryType), StructField("dec", DecimalType(10, 3)),
+      StructField("m", MapType(StringType, LongType)), StructField("st", inner),
+      StructField("af", ArrayType(FloatType)), StructField("ab", ArrayType(BooleanType)),
+      StructField("ats", ArrayType(TimestampType)), StructField("aal", ArrayType(ArrayType(LongType)))))
     val ts = java.sql.Timestamp.from(java.time.Instant.parse("2024-02-29T12:34:56.123456Z"))
+    val epoch = new java.sql.Timestamp(0L)
+    def dec(s: String) = new java.math.BigDecimal(s)
     val sent = Seq(
       Seq(1L << 40, -7, 0.1, 0.1f, true, "é \"q\" \u00e9", ts,
-        java.sql.Date.valueOf("2024-02-29"), Seq("a", null), Seq(1L, -2L)),
+        java.sql.Date.valueOf("2024-02-29"), Seq("a", null), Seq(1L, -2L),
+        Array[Byte](0, -1, 127), dec("1234567.891"), Map("k" -> 1L, "z" -> -1L),
+        Row(7L, "ü"), Seq(1.5f, 0.1f, -0.0f), Seq(true, false), Seq(ts, epoch),
+        Seq(Seq(1L, 2L), Seq.empty, null)),
       Seq.fill[Any](typed.size)(null),
       // the log writes non-finite doubles and floats as "NaN",
       // "Infinity" and "-Infinity"; replay must read them back
       Seq(0L, 0, Double.NaN, Float.NaN, false, "", ts, java.sql.Date.valueOf("1970-01-01"),
-        Seq.empty, Seq.empty),
+        Seq.empty, Seq.empty, Array.emptyByteArray, dec("0.000"), Map.empty, Row(null, null),
+        Seq(Float.NaN, Float.PositiveInfinity), Seq(null), Seq.empty, Seq.empty),
       Seq(-1L, 1, Double.PositiveInfinity, Float.NegativeInfinity, true, "i", ts,
-        java.sql.Date.valueOf("2099-12-31"), Seq("b"), Seq(Long.MaxValue)),
+        java.sql.Date.valueOf("2099-12-31"), Seq("b"), Seq(Long.MaxValue), null, dec("-0.001"),
+        null, null, null, null, null, null),
       Seq(2L, 2, Double.NegativeInfinity, Float.PositiveInfinity, false, "j", ts,
-        java.sql.Date.valueOf("1900-01-01"), Seq.empty, Seq(Long.MinValue)))
+        java.sql.Date.valueOf("1900-01-01"), Seq.empty, Seq(Long.MinValue), null, null,
+        null, null, null, null, null, null))
     val typedRuntime = StructType(typed.fields :+ StructField("_seq", LongType))
     val typedLog = Files.createTempFile("graft-typed", ".jsonl")
     val w = Files.newBufferedWriter(typedLog)
@@ -276,9 +290,33 @@ class ChannelRuntimeSpec extends AnyFunSuite with BeforeAndAfterAll {
       val got = replayed.asScala.toSeq.sortBy(_.getLong(typed.size)).map(_.toSeq.dropRight(1))
       // boxed equals: NaN equals NaN, and a Long never equals an Int
       assert(got.size === sent.size && got.zip(sent).forall { case (g, s) =>
-        g.size == s.size && g.zip(s).forall { case (a, b) => java.util.Objects.equals(a, b) }
+        JsonCodecSpec.same(g, s)
       }, got)
     } finally rt4.stop()
+  }
+
+  test("a runtime without a checkpoint dir takes a Scratch dir; an explicit one is left alone") {
+    val earlier = graft.core.Scratch.drain()
+    try {
+      val rt = new ChannelRuntime(spark, Map("scratch" -> ChannelSpec("scratch", exampleSchema)))
+      val tracked = graft.core.Scratch.drain()
+      assert(tracked.size === 1, tracked)
+      val dir = new java.io.File(tracked.head)
+      assert(dir.isDirectory && dir.getName.startsWith("graft-ckpt"), dir)
+      rt.start()
+      try {
+        rt.send("scratch", Seq(Map("x" -> 1L)))
+        rt.processAllAvailable()
+        assert(new java.io.File(dir, "scratch").isDirectory)
+      } finally rt.stop()
+      graft.core.Scratch.restore(tracked)
+      graft.core.Scratch.sweep()
+      assert(!dir.exists())
+
+      val explicit = Files.createTempDirectory("graft-test-ckpt").toString
+      new ChannelRuntime(spark, Map("scratch" -> ChannelSpec("scratch", exampleSchema)), explicit)
+      assert(graft.core.Scratch.drain().isEmpty)
+    } finally graft.core.Scratch.restore(earlier)
   }
 
   test("set_state keyby on the FIRST schema field keys rows distinctly") {

@@ -143,6 +143,31 @@ class GatewayClientSpec extends AnyFunSuite {
     }
   }
 
+  test("client sends timestamps, float arrays and binary in the server's wire form") {
+    val typed = StructType(Seq(StructField("owner", StringType), StructField("at", TimestampType),
+      StructField("fs", ArrayType(FloatType)), StructField("bin", BinaryType)))
+    val rt = new ChannelRuntime(spark,
+      Map("typed" -> ChannelSpec("typed", typed, stateKeyby = Seq("owner"))),
+      Files.createTempDirectory("graft-client-typed-ckpt").toString)
+    rt.start()
+    val gw = new Gateway(rt, 0).start()
+    try {
+      val client = new GatewayClient(GatewayClientConfig(host = "127.0.0.1", port = gw.boundPort))
+      val at = java.sql.Timestamp.from(java.time.Instant.parse("2024-01-02T03:04:05.123456Z"))
+      client.send("typed", Map("owner" -> "a", "at" -> at, "fs" -> Seq(1.5f, -0.25f),
+        "bin" -> Array[Byte](1, 2, -1)))
+      rt.processAllAvailable()
+      val row = rt.last("typed").get
+      assert(row.getAs[java.sql.Timestamp]("at") === at)
+      assert(row.getAs[Seq[Float]]("fs") === Seq(1.5f, -0.25f))
+      assert(row.getAs[Array[Byte]]("bin").toSeq === Seq[Byte](1, 2, -1))
+      val back = client.last("typed").rows.head
+      assert(back("at") === "2024-01-02T03:04:05.123456Z")
+      assert(back("fs") === Seq(1.5, -0.25))
+      assert(back("bin") === "AQL/")
+    } finally { gw.stop(); rt.stop() }
+  }
+
   test("typed errors: not-mounted client-side, 404 and 422 server-side") {
     withGateway() { (mk, _) =>
       val client = mk(GatewayClientConfig())

@@ -97,6 +97,31 @@ class GatewaySpec extends AnyFunSuite {
     }
   }
 
+  test("every field type reads back over REST in the form it was sent") {
+    val typed = StructType(Seq(
+      StructField("owner", StringType), StructField("bin", BinaryType),
+      StructField("fs", ArrayType(FloatType)), StructField("bs", ArrayType(BooleanType)),
+      StructField("tss", ArrayType(TimestampType)),
+      StructField("nested", ArrayType(ArrayType(LongType))),
+      StructField("st", StructType(Seq(StructField("a", LongType), StructField("s", StringType)))),
+      StructField("m", MapType(StringType, DoubleType)), StructField("dec", DecimalType(10, 2)),
+      StructField("day", DateType)))
+    withGateway(channelSchema = typed) { (base, rt) =>
+      val m = new com.fasterxml.jackson.databind.ObjectMapper()
+      val sent = m.readTree(
+        """{"owner":"a","bin":"AAF/gA==","fs":[1.5,-0.0,"NaN"],"bs":[true,false,null],""" +
+          """"tss":["2024-01-02T03:04:05.123456Z","1970-01-01T00:00:00Z"],""" +
+          """"nested":[[1,2],[],null],"st":{"a":7,"s":"ü"},"m":{"x":0.5,"y":"-Infinity"},""" +
+          """"dec":12.34,"day":"2024-02-29"}""")
+      val r = post(s"$base/send/example", sent.toString)
+      assert(r.statusCode() === 200, r.body())
+      rt.processAllAvailable()
+      val state = m.readTree(get(s"$base/state/example").body())
+      assert(state.size() === 1, state)
+      sent.fieldNames().forEachRemaining(f => assert(state.get(0).get(f) === sent.get(f), f))
+    }
+  }
+
   test("SSE stream egress (K8): ticks fan out as data frames") {
     withGateway() { (base, rt) =>
       val fut = java.util.concurrent.CompletableFuture.supplyAsync { () =>
@@ -551,43 +576,50 @@ class GatewaySpec extends AnyFunSuite {
   }
 
   /** The Jackson tree row encoder that the streaming writer replaced,
-    * kept here as the byte-for-byte oracle. */
+    * kept here as the byte-for-byte oracle: array elements, map values
+    * and nested structs take their element type's form, dates are ISO
+    * dates, decimals numbers and binary base64 (README "JSON wire form"). */
   private def treeRow(m: com.fasterxml.jackson.databind.ObjectMapper,
       r: org.apache.spark.sql.Row, schema: StructType): com.fasterxml.jackson.databind.node.ObjectNode = {
     val node = m.createObjectNode()
     schema.fields.zipWithIndex.foreach { case (f, i) =>
-      if (r.isNullAt(i)) node.putNull(f.name)
-      else f.dataType match {
-        case StringType => node.put(f.name, r.getString(i))
-        case LongType => node.put(f.name, r.getLong(i))
-        case IntegerType => node.put(f.name, r.getInt(i))
-        case DoubleType => node.put(f.name, r.getDouble(i))
-        case FloatType => node.put(f.name, r.getFloat(i).toDouble)
-        case BooleanType => node.put(f.name, r.getBoolean(i))
-        case TimestampType =>
-          node.put(f.name, r.getAs[java.sql.Timestamp](i).toInstant.toString)
-        case s: StructType => node.set[com.fasterxml.jackson.databind.JsonNode](
-          f.name, treeRow(m, r.getStruct(i), s))
-        case ArrayType(et, _) =>
-          val arr = node.putArray(f.name)
-          r.getSeq[Any](i).foreach {
-            case null => arr.addNull()
-            case x: String => arr.add(x)
-            case x: Long => arr.add(x)
-            case x: Int => arr.add(x)
-            case x: Double => arr.add(x)
-            case x: org.apache.spark.sql.Row => arr.add(treeRow(m, x, et.asInstanceOf[StructType]))
-            case x => arr.add(String.valueOf(x))
-          }
-        case _ => node.put(f.name, String.valueOf(r.get(i)))
-      }
+      node.set[com.fasterxml.jackson.databind.JsonNode](f.name, treeValue(m, r.get(i), f.dataType))
     }
     node
   }
 
+  private def treeValue(m: com.fasterxml.jackson.databind.ObjectMapper, v: Any,
+      dt: DataType): com.fasterxml.jackson.databind.JsonNode = {
+    val nf = m.getNodeFactory
+    if (v == null) nf.nullNode()
+    else dt match {
+      case StringType => nf.textNode(v.asInstanceOf[String])
+      case LongType => nf.numberNode(v.asInstanceOf[Long])
+      case IntegerType => nf.numberNode(v.asInstanceOf[Int])
+      case DoubleType => nf.numberNode(v.asInstanceOf[Double])
+      case FloatType => nf.numberNode(v.asInstanceOf[Float].toDouble)
+      case BooleanType => nf.booleanNode(v.asInstanceOf[Boolean])
+      case TimestampType => nf.textNode(v.asInstanceOf[java.sql.Timestamp].toInstant.toString)
+      case s: StructType => treeRow(m, v.asInstanceOf[org.apache.spark.sql.Row], s)
+      case ArrayType(et, _) =>
+        val arr = nf.arrayNode()
+        v.asInstanceOf[scala.collection.Seq[Any]].foreach(x => arr.add(treeValue(m, x, et)))
+        arr
+      case MapType(_, vt, _) =>
+        val obj = nf.objectNode()
+        v.asInstanceOf[scala.collection.Map[String, Any]].foreach { case (k, x) =>
+          obj.set[com.fasterxml.jackson.databind.JsonNode](k, treeValue(m, x, vt))
+        }
+        obj
+      case DateType => nf.textNode(v.asInstanceOf[java.sql.Date].toLocalDate.toString)
+      case _: DecimalType => nf.numberNode(v.asInstanceOf[java.math.BigDecimal])
+      case BinaryType => nf.binaryNode(v.asInstanceOf[Array[Byte]])
+    }
+  }
+
   test("streaming row encoder emits the tree encoder's bytes (rows, frames, cycles, routes)") {
     import org.apache.spark.sql.Row
-    import graft.streaming.EngineLog
+    import graft.streaming.{EngineLog, JsonCodec}
     val m = new com.fasterxml.jackson.databind.ObjectMapper()
     def utf8(s: String) = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     val inner = StructType(Seq(StructField("a", LongType), StructField("s", StringType)))
@@ -599,7 +631,9 @@ class GatewaySpec extends AnyFunSuite {
       StructField("structs", ArrayType(inner)), StructField("longs", ArrayType(LongType)),
       StructField("ints", ArrayType(IntegerType)), StructField("dbls", ArrayType(DoubleType)),
       StructField("flts", ArrayType(FloatType)), StructField("strs", ArrayType(StringType)),
-      StructField("bools", ArrayType(BooleanType)), StructField("m", MapType(StringType, LongType))))
+      StructField("bools", ArrayType(BooleanType)), StructField("m", MapType(StringType, LongType)),
+      StructField("bin", BinaryType), StructField("tss", ArrayType(TimestampType)),
+      StructField("nested", ArrayType(ArrayType(LongType)))))
     val emoji = new String(Character.toChars(0x1F600))
     val rows = Seq(
       Row(s"héllo ☃ $emoji \"q\" \\ \n\t\u0001  ", Long.MaxValue, Int.MinValue, Double.NaN,
@@ -607,20 +641,23 @@ class GatewaySpec extends AnyFunSuite {
         java.sql.Date.valueOf("2024-01-02"), new java.math.BigDecimal("12.345"), Row(1L, "ü"),
         Seq(Row(2L, "x"), null, Row(null, null)), Seq(1L, null, -1L), Seq(1, 2),
         Seq(0.1, Double.NaN, Double.NegativeInfinity, -0.0), Seq(1.5f, Float.NaN),
-        Seq("a", null, emoji), Seq(true, false), Map("k" -> 1L)),
+        Seq("a", null, emoji), Seq(true, false), Map("k" -> 1L), Array[Byte](0, -1, 64),
+        Seq(new java.sql.Timestamp(0L), null), Seq(Seq(1L, 2L), null, Seq.empty)),
       Row(Seq.fill(mschema.length)(null): _*),
       Row("lone \uD800 surrogate", 0L, 0, Double.PositiveInfinity, -0.0f, false,
         new java.sql.Timestamp(0L), null, null, Row(null, "日本"), Seq.empty, Seq.empty, null,
-        Seq(1e300, 4.9e-324), Seq.empty, Seq.empty, null, Map.empty),
+        Seq(1e300, 4.9e-324), Seq.empty, Seq.empty, null, Map.empty, Array.emptyByteArray,
+        Seq.empty, Seq.empty),
       Row("", -1L, 7, Double.NegativeInfinity, Float.NaN, null, null, null, null, null,
-        null, null, null, null, null, null, null, null),
+        null, null, null, null, null, null, null, null, null, null, null),
       Row("x", 1L, 1, -0.0, Float.PositiveInfinity, null, null, null, null, null,
-        null, null, null, null, null, null, null, null))
+        null, null, null, null, null, null, null, null, null, null, null))
     val treeArray = m.createArrayNode()
     rows.foreach(r => treeArray.add(treeRow(m, r, mschema)))
-    assert(EngineLog.rowsJson(rows, mschema) === utf8(m.writeValueAsString(treeArray)))
+    assert(JsonCodec.rowsJson(rows, mschema) === utf8(m.writeValueAsString(treeArray)))
     rows.foreach { r =>
-      assert(EngineLog.rowJson(r, mschema) === utf8(m.writeValueAsString(treeRow(m, r, mschema))))
+      assert(JsonCodec.jsonBytes(JsonCodec.writeRow(_, r, mschema)) ===
+        utf8(m.writeValueAsString(treeRow(m, r, mschema))))
       for (key <- Seq(None, Some("AAPL"), Some(s"k$emoji"))) {
         val frame = m.createObjectNode()
         frame.put("channel", "quotes")
@@ -642,7 +679,7 @@ class GatewaySpec extends AnyFunSuite {
         case 2 => t.setNanos(rnd.nextInt(1000000) * 1000)
         case _ => t.setNanos(rnd.nextInt(1000000000))
       }
-      val fast = EngineLog.jsonBytes(EngineLog.writeInstant(_, t))
+      val fast = JsonCodec.jsonBytes(JsonCodec.writeInstant(_, t))
       assert(fast === utf8(m.writeValueAsString(t.toInstant.toString)), t.toInstant.toString)
     }
 

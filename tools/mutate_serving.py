@@ -33,7 +33,7 @@ WS = "src/main/scala/graft/server/WebSocketServer.scala"
 CR = "src/main/scala/graft/streaming/ChannelRuntime.scala"
 SFP = "src/main/scala/graft/state/StateFastPath.scala"
 RC = "src/main/scala/graft/server/RequestContract.scala"
-EL = "src/main/scala/graft/streaming/EngineLog.scala"
+JC = "src/main/scala/graft/streaming/JsonCodec.scala"
 
 # (id, file, old, new, note); `old` must occur EXACTLY once.
 MUTANTS = [
@@ -140,10 +140,22 @@ MUTANTS = [
      "    contract.admit(view) match {",
      "    (Right(view.header(\"x-identity\")): Either[Refusal, Option[String]]) match {",
      "WS handshake skips the auth gate: an unauthenticated socket is upgraded"),
-    ("s20_ws_arrays_as_text", EL,
+    ("s20_ws_arrays_as_text", JC,
      "    else if (v.isArray) v.elements().asScala.map(jsonValue).toSeq",
      "    else if (v.isArray) v.toString",
      "the shared JSON decoder turns arrays into text: a WS send with an array field is dropped"),
+    ("s21_float_as_string", JC,
+     "      case FloatType => g.writeNumber(v.asInstanceOf[Float].toDouble)",
+     "      case FloatType => g.writeString(String.valueOf(v))",
+     "the value writer writes a float (field or array element) as a JSON string"),
+    ("s22_binary_not_base64", JC,
+     "      case BinaryType => g.writeBinary(v.asInstanceOf[Array[Byte]])",
+     "      case BinaryType => g.writeString(String.valueOf(v))",
+     "the value writer writes binary as the JVM array name instead of base64"),
+    ("s23_coerce_struct_map_passthrough", JC,
+     "    case (null, _) => null\n",
+     "    case (null, _) => null\n    case (x, _: StructType | _: MapType) => x\n",
+     "coerce passes struct and map values through untyped, as before the codec"),
 ]
 
 # Prefilter: serving-focused suites, most likely to see these bugs.
@@ -151,7 +163,7 @@ PREFILTER_SUITES = [
     "graft.GatewaySpec", "graft.GraftGatewaySpec", "graft.WebSocketSpec",
     "graft.GatewayClientSpec", "graft.GatewayTestHarnessSpec",
     "graft.ServerMiddlewareSpec", "graft.ChannelRuntimeSpec",
-    "graft.ViewServerDeltaSpec", "graft.StateFastPathSpec",
+    "graft.ViewServerDeltaSpec", "graft.StateFastPathSpec", "graft.JsonCodecSpec",
 ]
 
 
