@@ -454,7 +454,7 @@ object StreamingQueries {
       cycles(n).head.getAs[java.sql.Timestamp]("ts").getTime)
     val path = java.nio.file.Paths.get(graft.core.Scratch.track(
       Files.createTempFile("graft-k2b-log", ".jsonl").toString))
-    val w = java.nio.file.Files.newBufferedWriter(path)
+    val w = graft.streaming.EngineLog.open(path.toString, append = false)
     try {
       shuffled.foreach { case (cycle, _) =>
         graft.streaming.EngineLog.writeCycle(w,
@@ -1081,7 +1081,7 @@ object StreamingQueries {
       val rows = events.orderBy(col("event_id")).collect()
       val path = java.nio.file.Paths.get(graft.core.Scratch.track(
         Files.createTempFile("graft-k2-log", ".jsonl").toString))
-      val w = java.nio.file.Files.newBufferedWriter(path)
+      val w = graft.streaming.EngineLog.open(path.toString, append = false)
       try {
         rows.grouped(100).foreach { cycle =>
           graft.streaming.EngineLog.writeCycle(w,

@@ -7,6 +7,7 @@ import scala.collection.immutable.ArraySeq
 import scala.concurrent.duration.Duration
 import scala.concurrent.{Await, Future, Promise}
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -78,7 +79,10 @@ final class ChannelRuntime(
   private final class Chan(val spec: ChannelSpec) {
     val schema: StructType = runtimeSchema(spec)
     val names: Set[String] = spec.schema.fieldNames.toSet
-    val stream: MemoryStream[Row] = MemoryStream[Row](Encoders.row(schema), sqlCtx)
+    /** One input partition per micro-batch: `MemoryStream` then plans the
+      * batch's rows as one task, in offset (send) order, however many
+      * sends it holds. */
+    val stream: MemoryStream[Row] = MemoryStream[Row](1)(Encoders.row(schema), sqlCtx)
     @volatile var lastRow: Option[Row] = None
     /** Bounded id→row registry (T7): oldest-inserted evicts beyond
       * `lookupMaxEntries`; skipped entirely under `omitFromLookup`. */
@@ -123,7 +127,8 @@ final class ChannelRuntime(
   /** Batch listeners: engine-log encoders, feedback edges, websocket/
     * SSE fanout, user sinks. Called on the driver per (channel,
     * micro-batch of rows in seq order). Copy-on-write: subscribers
-    * attach/detach while batches run.
+    * attach/detach while batches run. A listener that throws is logged
+    * to stderr and skipped for that batch; the channel keeps running.
     */
   private val listeners =
     new java.util.concurrent.CopyOnWriteArrayList[(String, Seq[Row]) => Unit]
@@ -176,6 +181,8 @@ final class ChannelRuntime(
 
   private def startQueries(): Unit = chans.foreach { case (name, c) =>
     val idIdx = c.schema.fieldNames.indexOf(IdCol)
+    val seqIdx = c.schema.fieldIndex(SeqCol)
+    val bySeq = java.util.Comparator.comparingLong[Row](_.getLong(seqIdx))
     val effKeys = effectiveKeys(c.spec)
     c.query = c.stream.toDF().writeStream
       .queryName(s"graft_$name")
@@ -183,7 +190,12 @@ final class ChannelRuntime(
       .trigger(Trigger.ProcessingTime("50 milliseconds"))
       .foreachBatch { (df: DataFrame, _: Long) =>
         // One engine cycle: rows in arrival order (seq assigned at send).
-        val rows = df.sort(col(SeqCol)).collectAsList().asScala.toSeq
+        // The one-partition stream already returns them in that order; the
+        // stable driver-side sort is one linear pass then, and keeps the
+        // listener contract independent of how the source plans partitions.
+        val batch = df.collect()
+        java.util.Arrays.sort(batch, bySeq)
+        val rows = ArraySeq.unsafeWrapArray(batch)
         if (rows.nonEmpty) {
           c.lastRow = Some(rows.last)
           c.tickCount += rows.length
@@ -194,7 +206,13 @@ final class ChannelRuntime(
           if (effKeys.nonEmpty && !distributedState) c.frontier.upsert(rows)
           var p = c.nextWaiters.poll()
           while (p != null) { p.trySuccess(Some(rows.head)); p = c.nextWaiters.poll() }
-          listeners.forEach(l => l(name, rows))
+          listeners.forEach { l =>
+            try l(name, rows)
+            catch {
+              case NonFatal(e) =>
+                Console.err.println(s"[graft] listener on channel '$name' failed: $e")
+            }
+          }
         }
         ()
       }
@@ -253,7 +271,8 @@ final class ChannelRuntime(
     // Seq assignment + enqueue must be atomic per channel: concurrent
     // REST senders would otherwise interleave (A gets seq 1, B gets
     // seq 2, B's addData lands in the earlier micro-batch) and the
-    // per-batch sort cannot repair cross-batch inversion.
+    // driver-side ordering within a batch cannot repair cross-batch
+    // inversion.
     c.synchronized { sendLocked(c, name, values, applyHooks) }
   }
 

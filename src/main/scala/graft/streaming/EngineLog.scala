@@ -1,6 +1,7 @@
 package graft.streaming
 
-import java.io.{BufferedWriter, FileWriter}
+import java.io.{BufferedWriter, FileOutputStream, OutputStreamWriter}
+import java.nio.charset.{CodingErrorAction, StandardCharsets}
 import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
@@ -31,7 +32,7 @@ object EngineLog {
     * micro-batch IS the engine cycle.
     */
   final class Writer(path: String, runtime: ChannelRuntime) {
-    private val out = new BufferedWriter(new FileWriter(path, true))
+    private val out = open(path, append = true)
 
     // per-cycle buffer: channel -> rows (a cycle may touch many channels)
     private val buf = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Row]]
@@ -63,6 +64,15 @@ object EngineLog {
       } else None
     }
   }
+
+  /** The one way to open an engine log for writing: UTF-8 whatever the
+    * platform charset, with input UTF-8 cannot encode (a lone surrogate)
+    * written as `?` instead of failing the write. [[replay]] reads UTF-8. */
+  def open(path: String, append: Boolean): BufferedWriter =
+    new BufferedWriter(new OutputStreamWriter(new FileOutputStream(path, append),
+      StandardCharsets.UTF_8.newEncoder()
+        .onMalformedInput(CodingErrorAction.REPLACE)
+        .onUnmappableCharacter(CodingErrorAction.REPLACE)))
 
   /** One engine cycle `{"csp_engine_timestamp": ts, channel: [rows…], …}`
     * written to `out` (no newline; `out` is neither flushed nor closed). */

@@ -515,4 +515,92 @@ class ChannelRuntimeSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(rt.state("wide").map(_.getLong(1)).distinct === Seq(20L))
     } finally rt.stop()
   }
+
+  test("a batch of several sends and a feedback batch reach listeners in _seq order") {
+    import scala.jdk.CollectionConverters._
+    val rt = newRuntime()
+    rt.addFeedback("example", "basket")(r => Some(r))
+    val batches = new java.util.concurrent.ConcurrentLinkedQueue[(String, Seq[Row])]
+    rt.addListener((ch, rows) => batches.add((ch, rows)))
+    // sent before start: the first micro-batch holds all three sends
+    Seq(
+      Seq(Map("x" -> 1L, "y" -> "a"), Map("x" -> 2L, "y" -> "b")),
+      Seq(Map("x" -> 3L, "y" -> "a")),
+      Seq(Map("x" -> 4L, "y" -> "c"), Map("x" -> 5L, "y" -> "b"))
+    ).foreach(rt.send("example", _))
+    rt.start()
+    try {
+      var tries = 0
+      while (rt.tickCount("basket") < 5 && tries < 100) {
+        rt.processAllAvailable(); Thread.sleep(20); tries += 1
+      }
+      val seen = batches.asScala.toSeq
+      def of(ch: String) = seen.collect { case (`ch`, rows) => rows }
+      assert(of("example").map(_.map(_.getAs[Long]("x"))) === Seq(Seq(1L, 2L, 3L, 4L, 5L)),
+        "the three sends form one micro-batch, in send order")
+      assert(of("basket").map(_.map(_.getAs[Long]("x"))) === Seq(Seq(1L, 2L, 3L, 4L, 5L)),
+        "the re-injected rows form one micro-batch, in send order")
+      for (ch <- Seq("example", "basket")) {
+        val rows = of(ch).flatten
+        val seqs = rows.map(_.getAs[Long]("_seq"))
+        assert(seqs.zip(seqs.drop(1)).forall { case (a, b) => a < b }, s"$ch: $seqs")
+        assert(rt.last(ch) === Some(rows.maxBy(_.getAs[Long]("_seq"))))
+        // "a" and "b" were each sent twice in the batch: the later value holds
+        assert(rt.state(ch).map(r => (r.getAs[String]("y"), r.getAs[Long]("x"))) ===
+          Seq("a" -> 3L, "b" -> 5L, "c" -> 4L), ch)
+      }
+    } finally rt.stop()
+  }
+
+  test("a throwing listener is skipped: later listeners, state and the query run on") {
+    import scala.jdk.CollectionConverters._
+    val rt = newRuntime()
+    rt.addListener((_, _) => throw new IllegalStateException("listener failure"))
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[Long]
+    rt.addListener((ch, rows) => if (ch == "example") rows.foreach(r => got.add(r.getAs[Long]("x"))))
+    rt.start()
+    try {
+      rt.send("example", Seq(Map("x" -> 1L, "y" -> "a")))
+      rt.processAllAvailable()
+      rt.send("example", Seq(Map("x" -> 2L, "y" -> "a"), Map("x" -> 3L, "y" -> "b")))
+      rt.processAllAvailable()
+      assert(got.asScala.toSeq === Seq(1L, 2L, 3L))
+      assert(rt.state("example").map(r => (r.getAs[String]("y"), r.getAs[Long]("x"))) ===
+        Seq("a" -> 2L, "b" -> 3L))
+      assert(rt.last("example").map(_.getAs[Long]("x")) === Some(3L))
+    } finally rt.stop()
+  }
+
+  test("engine log is UTF-8 under the platform charset; a lone surrogate replays as '?'") {
+    // No file.encoding is set for the test JVM. Where its default charset
+    // is US-ASCII (JDK 17 on a C/POSIX locale), a platform-charset writer
+    // logs every non-ASCII character as '?' and replay returns it
+    // corrupted.
+    import scala.jdk.CollectionConverters._
+    val texts = Seq("caf\u00e9", "\u6771\u4eac\u306e\u5929\u6c17", "launch \uD83D\uDE80",
+      "lone \uD800 half")
+    val rt = newRuntime()
+    val log = Files.createTempFile("graft", ".jsonl").toString
+    new java.io.File(log).delete()
+    val writer = new EngineLog.Writer(log, rt)
+    rt.start()
+    val sent = try {
+      val rows = rt.send("example", texts.zipWithIndex.map { case (t, i) =>
+        Map("x" -> i.toLong, "y" -> t) })
+      rt.processAllAvailable(); writer.close()
+      rows
+    } finally rt.stop()
+    val rt2 = newRuntime()
+    val back = new java.util.concurrent.ConcurrentLinkedQueue[Row]
+    rt2.addListener((ch, rows) => if (ch == "example") rows.foreach(back.add))
+    rt2.start()
+    try {
+      assert(EngineLog.replay(rt2, log, Seq("example")) === texts.size)
+      rt2.processAllAvailable()
+    } finally rt2.stop()
+    val want = sent.map { r =>
+      r.toSeq.dropRight(1).updated(3, r.getAs[String]("y").replace("\uD800", "?")) }
+    assert(back.asScala.toSeq.map(_.toSeq.dropRight(1)) === want)
+    assert(want.last(3) === "lone ? half")
+  }
 }

@@ -50,8 +50,8 @@ class JsonCodecSpec extends AnyFunSuite {
       .pureApply(Gen.Parameters.default, org.scalacheck.rng.Seed(20261019L))
       .zipWithIndex.map { case (r, k) => Row.fromSeq(k.toLong +: r.toSeq) }
     val log = Files.createTempFile("graft-codec", ".jsonl")
-    // the writer EngineLog.Writer uses: UTF-8, a lone surrogate as '?'
-    val w = new java.io.BufferedWriter(new java.io.FileWriter(log.toFile, StandardCharsets.UTF_8))
+    // the opener EngineLog.Writer uses: UTF-8, a lone surrogate as '?'
+    val w = EngineLog.open(log.toString, append = false)
     try rows.grouped(100).foreach { cycle =>
       EngineLog.writeCycle(w, 0L, Seq(("ch", cycle, schema)))
       w.newLine()

@@ -23,8 +23,14 @@ Reference contract being guarded: tests/server/web/test_webserver.py
 
 Usage (from a dedicated worktree, same discipline as mutate.py):
   git clone . /tmp/graft_smut   # or: git worktree add /tmp/graft_smut HEAD
-  python3 tools/mutate_serving.py --worktree /tmp/graft_smut \
+  PYTHONCOERCECLOCALE=0 python3 tools/mutate_serving.py --worktree /tmp/graft_smut \
       --out receipts/mutants_w3.jsonl [--ids s01,...]
+
+PYTHONCOERCECLOCALE=0 keeps the test JVM on the platform's default
+charset: under a C/POSIX locale Python otherwise exports
+LC_CTYPE=C.UTF-8 to every child, the forked test JVM then defaults to
+UTF-8, and s26 (engine log in the platform charset) cannot be told
+from the UTF-8 writer.
 """
 import argparse, json, os, subprocess, sys, time
 
@@ -34,6 +40,7 @@ CR = "src/main/scala/graft/streaming/ChannelRuntime.scala"
 SFP = "src/main/scala/graft/state/StateFastPath.scala"
 RC = "src/main/scala/graft/server/RequestContract.scala"
 JC = "src/main/scala/graft/streaming/JsonCodec.scala"
+EL = "src/main/scala/graft/streaming/EngineLog.scala"
 
 # (id, file, old, new, note); `old` must occur EXACTLY once.
 MUTANTS = [
@@ -156,6 +163,24 @@ MUTANTS = [
      "    case (null, _) => null\n",
      "    case (null, _) => null\n    case (x, _: StructType | _: MapType) => x\n",
      "coerce passes struct and map values through untyped, as before the codec"),
+    ("s24_batch_seq_descending", CR,
+     "    val bySeq = java.util.Comparator.comparingLong[Row](_.getLong(seqIdx))\n",
+     "    val bySeq = java.util.Comparator.comparingLong[Row](_.getLong(seqIdx)).reversed()\n",
+     "the driver-side batch sort orders by descending _seq: listeners, last and state see the batch backwards"),
+    ("s25_listener_unguarded", CR,
+     "          listeners.forEach { l =>\n"
+     "            try l(name, rows)\n"
+     "            catch {\n"
+     "              case NonFatal(e) =>\n"
+     "                Console.err.println(s\"[graft] listener on channel '$name' failed: $e\")\n"
+     "            }\n"
+     "          }\n",
+     "          listeners.forEach(l => l(name, rows))\n",
+     "no listener guard: one throwing listener kills its channel's query"),
+    ("s26_engine_log_platform_charset", EL,
+     "      StandardCharsets.UTF_8.newEncoder()",
+     "      java.nio.charset.Charset.defaultCharset().newEncoder()",
+     "the engine log opener encodes with the platform charset instead of UTF-8"),
 ]
 
 # Prefilter: serving-focused suites, most likely to see these bugs.
