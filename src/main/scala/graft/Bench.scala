@@ -2,6 +2,9 @@ package graft
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.tools.Probe
+
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -154,7 +157,8 @@ object Bench {
     graft.core.Scratch.sweep()
   }
 
-  /** One timed pass over `entries`: seconds per entry, or -1.0 for an
+  /** One timed pass over `entries`: seconds per entry to build and
+    * materialise its full output ([[Probe.fullOutputRows]]), or -1.0 for an
     * entry that throws, so a failure is never summed into a total
     * (every consumer of these maps keeps only values > 0).
     */
@@ -164,7 +168,9 @@ object Bench {
       entries: Seq[(String, (SparkSession, String) => DataFrame)]): Map[String, Double] =
     entries.map { case (name, fn) =>
       val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true } catch { case NonFatal(_) => false }
+      val ok =
+        try { Probe.fullOutputRows(fn(spark, sfDir)); true }
+        catch { case NonFatal(_) => false }
       val dt = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
       spark.catalog.clearCache()
       // r15 measurement hygiene (§1, ASV-style steady state): the

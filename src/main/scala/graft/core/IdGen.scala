@@ -1,7 +1,7 @@
 package graft.core
 
 import java.util.concurrent.atomic.AtomicLong
-import java.time.{Instant, LocalDate, ZoneOffset}
+import java.time.{LocalDate, ZoneOffset}
 
 /** Monotonic string id generator for gateway rows.
   *
@@ -28,6 +28,4 @@ object IdGen {
     LocalDate.now(ZoneOffset.UTC).atStartOfDay(ZoneOffset.UTC).toEpochSecond * 1000000000L
 
   lazy val global: IdGen = new IdGen(defaultSeed)
-
-  def nowUtc(): java.sql.Timestamp = java.sql.Timestamp.from(Instant.now())
 }

@@ -107,33 +107,11 @@ case class CosineSimExpr(left: Expression, right: Expression)
 object MinHashSig {
   import org.apache.spark.sql.catalyst.util.GenericArrayData
 
-  /** MinHash signature over an array of shingle strings: one pass,
-    * hashing each shingle once and updating all `numHashes` minima —
-    * vs the declarative form's numHashes re-traversals. Same values:
-    * sig_j = min over shingles of ((2j+1)*h + 97j+13) mod P.
-    */
-  def sig(shingles: ArrayData, numHashes: Int): ArrayData = {
-    val n = shingles.numElements()
-    if (n == 0) return new GenericArrayData(Array.fill[Any](numHashes)(null))
-    val mins = Array.fill(numHashes)(Long.MaxValue)
-    var i = 0
-    while (i < n) {
-      val h = PolyHash.hash(shingles.getUTF8String(i))
-      var j = 0
-      while (j < numHashes) {
-        val v = ((2L * j + 1) * h + 97L * j + 13) % PolyHash.P
-        if (v < mins(j)) mins(j) = v
-        j += 1
-      }
-      i += 1
-    }
-    new GenericArrayData(mins)
-  }
-
-  /** Same signature from precomputed shingle HASHES (the
-    * [[ShingleHashes]] output) — signatures depend only on hash
-    * values, so composing the two fused kernels is value-identical to
-    * [[sig]] over the shingle strings.
+  /** MinHash signature from precomputed shingle HASHES (the
+    * [[ShingleHashes]] output): one pass, updating all `numHashes`
+    * minima per hash — vs the declarative form's numHashes
+    * re-traversals. Same values: sig_j = min over shingle hashes h of
+    * ((2j+1)*h + 97j+13) mod P.
     */
   def sigFromHashes(hashes: ArrayData, numHashes: Int): ArrayData = {
     val n = hashes.numElements()
@@ -165,19 +143,6 @@ case class MinHashSigFromHashesExpr(child: Expression, numHashes: Int)
   override protected def withNewChildInternal(newChild: Expression): MinHashSigFromHashesExpr =
     copy(child = newChild)
   override def prettyName: String = "graft_minhash_from_hashes"
-}
-
-/** `graft_minhash(shingles, numHashes)` — fused MinHash signature. */
-case class MinHashSigExpr(child: Expression, numHashes: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-  override def nullSafeEval(input: Any): Any =
-    MinHashSig.sig(input.asInstanceOf[ArrayData], numHashes)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.MinHashSig.sig($c, $numHashes)")
-  override protected def withNewChildInternal(newChild: Expression): MinHashSigExpr =
-    copy(child = newChild)
-  override def prettyName: String = "graft_minhash"
 }
 
 object SimHash {
@@ -747,8 +712,6 @@ object NativeExpressions {
   def cosine(a: Column, b: Column): Column =
     ColumnBridge.column(CosineSimExpr(
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
-  def minhashSig(shingles: Column, numHashes: Int): Column =
-    ColumnBridge.column(MinHashSigExpr(ColumnBridge.expression(shingles), numHashes))
   def simhash(tokens: Column, bits: Int): Column =
     ColumnBridge.column(SimHashExpr(ColumnBridge.expression(tokens), bits))
   def simhashText(text: Column, bits: Int): Column =

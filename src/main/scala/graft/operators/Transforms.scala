@@ -125,15 +125,4 @@ object Transforms {
     * json_converter.py:255-273): set boolean fields to fixed values.
     */
   def flagUpdates(df: DataFrame, flags: Map[String, Boolean]): DataFrame =
-    flags.foldLeft(df) { case (d, (f, v)) => d.withColumn(f, lit(v)) }
-
-  /** X11 — force new id/timestamp on ingest (reference base.py:133-144):
-    * system columns replaced by engine-assigned values. `uuid()` is
-    * distributed-safe (no driver round-trip), matching at-scale intent;
-    * the serving path uses [[graft.core.IdGen]] for reference-shaped
-    * monotonic ids.
-    */
-  def forceNewIdTimestamp(df: DataFrame, idCol: String = "id",
-      tsCol: String = "timestamp"): DataFrame =
-    df.withColumn(idCol, uuid()).withColumn(tsCol, current_timestamp())
-}
+    flags.foldLeft(df) { case (d, (f, v)) => d.withColumn(f, lit(v)) }}

@@ -659,21 +659,6 @@ object Curation {
     */
   val MojibakeClass: String = "[\\xC2\\xC3][\\x80-\\xBF]"
 
-  /** Encoding-damage report (the ftfy-class curation check): per doc,
-    * counts of U+FFFD replacement characters (a decoder already gave
-    * up), stray control characters, and Latin-1-mojibake digraphs,
-    * plus the all-clean keep flag. Pure codegen'd column arithmetic —
-    * zero shuffle; route keep=false docs to drop or to
-    * [[graft.functions.NativeExpressions.fixMojibake]] repair.
-    */
-  def encodingReport(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.select(col(idCol),
-      regexp_count(col(textCol), lit("\uFFFD")).as("n_repl"),
-      regexp_count(col(textCol), lit(ControlCharClass)).as("n_ctrl"),
-      regexp_count(col(textCol), lit(MojibakeClass)).as("n_moji"))
-      .withColumn("keep",
-        col("n_repl") === 0 && col("n_ctrl") === 0 && col("n_moji") === 0)
-
   // ---- corpus reporting ---------------------------------------------------
 
   /** Corpus composition report: document/token/char totals per stratum

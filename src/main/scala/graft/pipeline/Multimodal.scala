@@ -1812,12 +1812,4 @@ object Multimodal {
     media.filter(col("kind") === "video" && col("n_frames").isNotNull &&
         col("n_frames") > 0) // sequence(0, -1, +step) would throw
       .select(col("media_id"),
-        explode(sequence(lit(0), col("n_frames") - 1, lit(stride))).as("frame_idx"))
-
-  /** Resize stage contract: records target dims next to the payload;
-    * the pixel transform itself lives in the stubbed codec. Keeps the
-    * plan a narrow projection.
-    */
-  def resizePlan(media: DataFrame, w: Int, h: Int): DataFrame =
-    media.withColumn("target_width", lit(w)).withColumn("target_height", lit(h))
-}
+        explode(sequence(lit(0), col("n_frames") - 1, lit(stride))).as("frame_idx"))}

@@ -125,13 +125,8 @@ final class Gateway(
       }
     }
 
-  private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
-    val bytes = body.getBytes(StandardCharsets.UTF_8)
-    ex.getResponseHeaders.set("Content-Type", "application/json")
-    ex.sendResponseHeaders(code, bytes.length)
-    ex.getResponseBody.write(bytes)
-    ex.close()
-  }
+  private def respond(ex: HttpExchange, code: Int, body: String): Unit =
+    respondJson(ex, code, body.getBytes(StandardCharsets.UTF_8))
 
   private def respondJson(ex: HttpExchange, code: Int, bytes: Array[Byte]): Unit =
     respondBytes(ex, code, bytes, "application/json")
@@ -724,13 +719,8 @@ final class Gateway(
       try respond(ex, 200, openApiJson)
       catch { case NonFatal(e) => respond(ex, 500, detailJson(e.getMessage)) }
     }(ex))
-    server.createContext("/docs", (ex: HttpExchange) => {
-      val bytes = docsHtml.getBytes(StandardCharsets.UTF_8)
-      ex.getResponseHeaders.set("Content-Type", "text/html")
-      ex.sendResponseHeaders(200, bytes.length)
-      ex.getResponseBody.write(bytes)
-      ex.close()
-    })
+    server.createContext("/docs", (ex: HttpExchange) =>
+      respondBytes(ex, 200, docsHtml.getBytes(StandardCharsets.UTF_8), "text/html"))
     // browse page (reference app_router /channels_graph: a small page
     // rendering the wiring; the interactive JS viz is out of scope —
     // this embeds the same JSON the API route serves)
@@ -743,11 +733,7 @@ final class Gateway(
                |<pre id="graph">${json.replace("<", "&lt;")}</pre>
                |<p>Data endpoint: <a href="/api/v1/channels_graph">/api/v1/channels_graph</a></p>
                |</body></html>""".stripMargin
-          val bytes = html.getBytes(StandardCharsets.UTF_8)
-          ex.getResponseHeaders.set("Content-Type", "text/html")
-          ex.sendResponseHeaders(200, bytes.length)
-          ex.getResponseBody.write(bytes)
-          ex.close()
+          respondBytes(ex, 200, html.getBytes(StandardCharsets.UTF_8), "text/html")
         case None => respond(ex, 404, """{"detail":"Not Found"}""")
       })
     // table workspace pages (reference modules/web/perspective.py
@@ -762,11 +748,7 @@ final class Gateway(
              |body{font-family:sans-serif;margin:2em}table{border-collapse:collapse}
              |td,th{border:1px solid #999;padding:4px 8px;font-size:13px}
              |th{background:#eee}</style></head><body>$body</body></html>""".stripMargin
-        val bytes = html.getBytes(StandardCharsets.UTF_8)
-        ex.getResponseHeaders.set("Content-Type", "text/html")
-        ex.sendResponseHeaders(200, bytes.length)
-        ex.getResponseBody.write(bytes)
-        ex.close()
+        respondBytes(ex, 200, html.getBytes(StandardCharsets.UTF_8), "text/html")
       }
       val rest = ex.getRequestURI.getPath.stripPrefix("/tables").stripPrefix("/")
       (viewServer, rest) match {

@@ -1,22 +1,25 @@
 package graft.sinks
 
 import scala.collection.concurrent.TrieMap
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Transforms, ViewConfig, Views}
+import graft.state.StateFastPath
 import graft.streaming.ChannelRuntime
 
 /** Egress operators (SURVEY.md §2.2).
   *
   * K1 (Kafka publish) and K3 (SQL insert) are transforms + a writer:
   * the transform halves are pure Catalyst (unit-tested on static
-  * frames); the writers are `foreachBatch`/`jdbc` wiring that needs
-  * live endpoints. K4 (Perspective tables) becomes [[ViewServer]]: a
-  * periodically refreshed, bounded, upserted materialization of view
-  * configs over channel state — which is exactly what the reference's
+  * frames); the writer is the caller's `writeStream.format("kafka")`
+  * or `foreachBatch`/`jdbc` wiring, which needs live endpoints. K4
+  * (Perspective tables) becomes [[ViewServer]]: a periodically
+  * refreshed, bounded, upserted materialization of view configs over
+  * channel state — which is exactly what the reference's
   * Arrow/Perspective buffer loop does (perspective.py:491-515).
   */
 object Sinks {
@@ -41,15 +44,6 @@ object Sinks {
     keyCol.map(k => df.select(col(k).cast("string").as("key"), payload.as("value")))
       .getOrElse(base)
   }
-
-  /** K1 — writer wiring (needs a broker at runtime). */
-  def kafkaWriter(df: DataFrame, bootstrapServers: String, topic: String,
-      checkpoint: String): org.apache.spark.sql.streaming.DataStreamWriter[Row] =
-    df.writeStream
-      .format("kafka")
-      .option("kafka.bootstrap.servers", bootstrapServers)
-      .option("topic", topic)
-      .option("checkpointLocation", checkpoint)
 
   /** K3 — SQL insert sink transform: field selection, renaming,
     * constant augmentation, nested values JSON-stringified (reference
@@ -169,12 +163,13 @@ final class ViewServer(
   // optimization, never a semantics change, and ViewServerDeltaSpec
   // pins delta snapshot == full-recompute snapshot per tick.
 
-  /** One delta-maintained view: post-expression rows by state key.
+  /** One delta-maintained view: post-expression rows by state key
+    * (`StateFastPath.groupKey`, so keys group as the frontier's do).
     * `dirty` defers snapshot materialization to the first READ after
     * a change — the periodic refresh tick then costs O(delta), not
     * O(state), and an unread view costs nothing to keep current. */
   private final class DeltaView {
-    val base = scala.collection.mutable.HashMap.empty[Seq[Any], Row]
+    val base = new java.util.HashMap[AnyRef, Row]
     var schema: org.apache.spark.sql.types.StructType = _
     var initialized = false
     var dirty = false
@@ -323,12 +318,12 @@ final class ViewServer(
     }
 
     def upsert(rows: Seq[Row], schema: org.apache.spark.sql.types.StructType): Unit = {
-      val keyIdx = spec.stateKeyby.map(schema.fieldNames.indexOf(_))
+      val keyOf = StateFastPath.groupKey(schema, spec.stateKeyby)
       val seqIdx = schema.fieldNames.indexOf(seqName)
       rows.foreach { r =>
-        val key = keyIdx.map(r.get)
-        val better = dv.base.get(key).forall(old => old.getLong(seqIdx) <= r.getLong(seqIdx))
-        if (better) dv.base.put(key, r)
+        val key = keyOf(r)
+        val old = dv.base.get(key)
+        if (old == null || old.getLong(seqIdx) <= r.getLong(seqIdx)) dv.base.put(key, r)
       }
     }
 
@@ -371,8 +366,8 @@ final class ViewServer(
         if (dv.dirty && dv.initialized) {
           views.get(name).foreach { vd =>
             snapshots.put(name, ViewEval.snapshot(
-              dv.base.values.toSeq, dv.schema, vd.config,
-              ChannelRuntime.SeqCol, defaultLimit))
+              dv.base.values.asScala.toSeq, dv.schema, vd.config,
+              ChannelRuntime.SeqCol, defaultLimit, runtime.spark.sessionState.conf.ansiEnabled))
           }
           dv.dirty = false
         }
@@ -394,7 +389,6 @@ final class ViewServer(
     }
 
   private def sparkDelta(rows: Seq[Row], channel: String): DataFrame = {
-    import scala.jdk.CollectionConverters._
     runtime.spark.createDataFrame(rows.asJava,
       runtime.runtimeSchema(runtime.specs(channel)))
   }
@@ -410,19 +404,6 @@ final class ViewServer(
     materialize(name)
     snapshots.get(name)
   }
-
-  /** The snapshot as an Arrow IPC stream — the payload a Perspective
-    * browser table loads directly (reference perspective.py:71-100
-    * ships pyarrow record batches the same way). None until the first
-    * successful refresh (schema comes from the compiled view). The
-    * gateway's `/table/{name}/arrow` route applies identity filtering
-    * first and so encodes via [[snapshotWithSchema]]; this is the
-    * unfiltered programmatic surface.
-    */
-  def snapshotArrow(name: String): Option[Array[Byte]] =
-    snapshotWithSchema(name).map { case (rows, schema) =>
-      org.apache.spark.sql.graft.ArrowBridge.toArrowStream(rows, schema)
-    }
 
   /** Periodic refresh thread (reference update_interval, default 2s). */
   def startPeriodicRefresh(intervalMillis: Long = 2000L): Thread = {
@@ -443,16 +424,21 @@ final class ViewServer(
   * index-collapse, filter, sort, limit, and the final seq-column
   * projection over a bounded in-memory row set — semantics matched
   * one-for-one to [[graft.operators.Views.compile]] over the same
-  * [[ViewConfig]] (parity pinned by ViewServerDeltaSpec). Throws on
-  * anything it cannot evaluate exactly (unknown column, unorderable
-  * type) — the caller demotes the view to full recompute.
+  * [[ViewConfig]] (parity pinned by ViewServerDeltaSpec). It keys,
+  * compares and orders rows with the [[StateFastPath]] rules the state
+  * frontier uses, and has none of its own. Throws on anything it cannot
+  * evaluate exactly (unknown column, unorderable type, a filter that
+  * needs more than numeric widening) — the caller demotes the view to
+  * full recompute.
   */
 private[sinks] object ViewEval {
-  import org.apache.spark.sql.types.StructType
+  import org.apache.spark.sql.types.{StringType, StructType}
   import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 
+  /** `ansi`: the session's `spark.sql.ansi.enabled`, which picks the
+    * type-coercion rule the filters' comparisons follow. */
   def snapshot(rows: Seq[Row], schema: StructType, v: ViewConfig,
-      seqName: String, defaultLimit: Int): (Seq[Row], StructType) = {
+      seqName: String, defaultLimit: Int, ansi: Boolean): (Seq[Row], StructType) = {
     val seqIdx = schema.fieldNames.indexOf(seqName)
     require(seqIdx >= 0, s"seq column '$seqName' missing")
     var out = rows
@@ -462,19 +448,22 @@ private[sinks] object ViewEval {
       out = out.sortBy(-_.getLong(seqIdx)).take(defaultLimit)
     // A7 index-collapse: one row per index key, max view-seq wins
     v.index.foreach { case (keys, seqCol) =>
-      val keyIdx = keys.map(k => mustIdx(schema, k))
-      val sIdx = mustIdx(schema, seqCol)
-      val m = scala.collection.mutable.LinkedHashMap.empty[Seq[Any], Row]
+      keys.foreach(mustIdx(schema, _))
+      val keyOf = StateFastPath.groupKey(schema, keys)
+      val bySeq = mustOrder(schema, Seq(seqCol -> true))
+      val m = new java.util.LinkedHashMap[AnyRef, Row]
       out.foreach { r =>
-        val key = keyIdx.map(r.get)
-        val better = m.get(key).forall(old => cmp(old.get(sIdx), r.get(sIdx)) <= 0)
-        if (better) m.put(key, r)
+        val key = keyOf(r)
+        val old = m.get(key)
+        if (old == null || bySeq.compare(old, r) <= 0) m.put(key, r)
       }
-      out = m.values.toSeq
+      out = m.values.asScala.toSeq
     }
-    if (v.filter.nonEmpty)
-      out = out.filter(r => v.filter.forall(f => evalFilter(r, schema, f)))
-    if (v.sort.nonEmpty) out = out.sorted(rowOrdering(schema, v.sort))
+    if (v.filter.nonEmpty) {
+      val tests = v.filter.map(compileFilter(schema, _, ansi)).toArray
+      out = out.filter(r => tests.forall(_(r)))
+    }
+    if (v.sort.nonEmpty) out = out.sorted(mustOrder(schema, v.sort))
     v.limit.foreach(n => out = out.take(n))
     // final projection: compile ends with drop("_seq")
     val keep = schema.fields.indices.filterNot(_ == seqIdx)
@@ -490,67 +479,38 @@ private[sinks] object ViewEval {
     i
   }
 
-  /** Total order matching Spark's over the simple serving types. */
-  private def cmp(a: Any, b: Any): Int = (a, b) match {
-    case (x: java.lang.Number, y: java.lang.Number) =>
-      new java.math.BigDecimal(x.toString).compareTo(new java.math.BigDecimal(y.toString))
-    // UTF8String binary order, not String.compareTo's UTF-16 code-unit
-    // order — they diverge for surrogate pairs vs U+E000..U+FFFF.
-    case (x: String, y: String) =>
-      org.apache.spark.unsafe.types.UTF8String.fromString(x)
-        .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(y))
-    case (x: java.sql.Timestamp, y: java.sql.Timestamp) => x.compareTo(y)
-    case (x: java.time.Instant, y: java.time.Instant)   => x.compareTo(y)
-    case (x: java.sql.Date, y: java.sql.Date)           => x.compareTo(y)
-    case (x: java.time.LocalDate, y: java.time.LocalDate) => x.compareTo(y)
-    case (x: java.lang.Boolean, y: java.lang.Boolean)   => x.compareTo(y)
-    case _ =>
-      throw new IllegalArgumentException(
-        s"unorderable driver-side: ${String.valueOf(a)} vs ${String.valueOf(b)}")
+  /** The shared ordering over top-level view columns. */
+  private def mustOrder(schema: StructType, sort: Seq[(String, Boolean)]): Ordering[Row] = {
+    sort.foreach { case (c, _) => mustIdx(schema, c) }
+    StateFastPath.ordering(schema, sort).getOrElse(
+      throw new IllegalArgumentException(s"unorderable driver-side: ${sort.map(_._1).mkString(", ")}"))
   }
 
-  /** One view filter triplet, SQL three-valued semantics: a null on
-    * either side of a comparison excludes the row (Views.filterCol's
-    * Column behavior). */
-  private def evalFilter(r: Row, schema: StructType, f: (String, String, Any)): Boolean = {
+  /** One view filter triplet compiled against the schema, SQL
+    * three-valued semantics: a null on either side of a comparison
+    * excludes the row (Views.filterCol's Column behavior). */
+  private def compileFilter(schema: StructType, f: (String, String, Any),
+      ansi: Boolean): Row => Boolean = {
     val (c, op, operand) = f
-    val v = r.get(mustIdx(schema, c))
+    val i = mustIdx(schema, c)
+    val dt = schema.fields(i).dataType
+    def nonNull(test: Any => Boolean): Row => Boolean = r => !r.isNullAt(i) && test(r.get(i))
     op match {
-      case "is null"     => v == null
-      case "is not null" => v != null
-      case _ if v == null || operand == null => false
-      case "==" | "="    => cmp(v, operand) == 0
-      case "!="          => cmp(v, operand) != 0
-      case "<"           => cmp(v, operand) < 0
-      case "<="          => cmp(v, operand) <= 0
-      case ">"           => cmp(v, operand) > 0
-      case ">="          => cmp(v, operand) >= 0
-      case "contains"    => String.valueOf(v).contains(String.valueOf(operand))
-      case "in" => operand.asInstanceOf[Seq[Any]]
-        .exists(o => o != null && cmp(v, o) == 0)
-      case other => throw new IllegalArgumentException(s"Unknown view op '$other'")
-    }
-  }
-
-  /** Lexicographic ordering over the sort spec: asc_nulls_first /
-    * desc_nulls_last, like Views.compile's orderBy. */
-  private def rowOrdering(schema: StructType,
-      sort: Seq[(String, Boolean)]): Ordering[Row] = {
-    val specs = sort.map { case (c, asc) => (mustIdx(schema, c), asc) }
-    (x: Row, y: Row) => {
-      var result = 0
-      val it = specs.iterator
-      while (result == 0 && it.hasNext) {
-        val (i, asc) = it.next()
-        val (a, b) = (x.get(i), y.get(i))
-        result = (a, b) match {
-          case (null, null) => 0
-          case (null, _)    => if (asc) -1 else 1
-          case (_, null)    => if (asc) 1 else -1
-          case _            => if (asc) cmp(a, b) else -cmp(a, b)
-        }
-      }
-      result
+      case "is null"     => _.isNullAt(i)
+      case "is not null" => !_.isNullAt(i)
+      case _ if operand == null => _ => false
+      case "contains" =>
+        require(dt == StringType && operand.isInstanceOf[String],
+          s"contains needs a string column and operand: '$c'")
+        val s = operand.asInstanceOf[String]
+        nonNull(_.asInstanceOf[String].contains(s))
+      case "in" =>
+        val cmps = StateFastPath.literalCmps(ansi, dt, operand.asInstanceOf[Seq[Any]].filter(_ != null))
+        nonNull(x => cmps.exists(_(x) == 0))
+      case _ =>
+        val test = StateFastPath.opTest(op)
+        val cmp = StateFastPath.literalCmps(ansi, dt, Seq(operand)).head
+        nonNull(x => test(cmp(x)))
     }
   }
 }

@@ -44,19 +44,6 @@ object Sources {
     }
   }
 
-  /** Batch variant of S4 for replay/backfill of an existing drop dir. */
-  def fileDropBatch(
-      spark: SparkSession,
-      dir: String,
-      format: String,
-      schema: StructType): DataFrame =
-    format match {
-      case "csv" => spark.read.schema(schema).option("header", "true").csv(dir)
-      case "json" => spark.read.schema(schema).json(dir)
-      case "parquet" => spark.read.schema(schema).parquet(dir)
-      case other => throw new IllegalArgumentException(s"Unsupported filedrop format '$other'")
-    }
-
   /** S1 — Kafka value-parse transform: JSON `value` bytes → typed
     * columns; `adjustOutOfOrder` clamps embedded event times to the
     * broker timestamp (reference kafka.py:336

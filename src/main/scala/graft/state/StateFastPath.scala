@@ -3,6 +3,8 @@ package graft.state
 import scala.collection.immutable.ArraySeq
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.analysis.{AnsiTypeCoercion, TypeCoercion}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.types._
 
 /** Driver-side evaluation of the T2/T3 state query over the serving
@@ -28,6 +30,12 @@ import org.apache.spark.sql.types._
   * takes ~0.4 ms and a full read ~0.02 ms; copying and sorting the
   * frontier per read, as before, took 6.0 ms and 85 ms.
   *
+  * This is the driver's one copy of Spark's row rules: the frontier
+  * groups rows with [[groupKey]] and keeps them in [[ordering]], and
+  * the delta-maintained views (`graft.sinks.ViewServer`) key, collapse,
+  * filter and sort with the same [[groupKey]], [[ordering]] and
+  * [[literalCmps]].
+  *
   * Exactness contract: evaluation returns None — caller falls back
   * to the Spark path — for ANYTHING whose Spark semantics this
   * evaluator cannot reproduce bit-for-bit: literal casts that could
@@ -49,30 +57,39 @@ object StateFastPath {
       tieBreak: Seq[String]): Option[Seq[Row]] =
     for {
       tests <- compileFilters(schema, q)
-      ord <- ordering(schema, keys ++ tieBreak)
+      ord <- ordering(schema, (keys ++ tieBreak).map(_ -> true))
     } yield rows.filter(passes(tests, _)).sorted(ord)
 
-  /** Evaluate `q` over rows already in `ordering(schema, keys ++
-    * tieBreak)` order: one filtering pass, no sort; an unfiltered
+  /** Evaluate `q` over rows already in ascending `ordering(schema,
+    * keys ++ tieBreak)` order: one filtering pass, no sort; an unfiltered
     * query returns `sorted` itself (never mutated by the caller). */
   def filterSorted(sorted: Array[Row], schema: StructType, q: StateQuery): Option[Seq[Row]] =
     compileFilters(schema, q).map { tests =>
       ArraySeq.unsafeWrapArray(if (tests.isEmpty) sorted else sorted.filter(passes(tests, _)))
     }
 
-  /** ASC NULLS FIRST over `cols`, compiled once; None when a resolved
-    * column is not a serving primitive. Unresolved columns order as a
-    * constant null (StateOps.keyCol's lit(null)), so they drop out. */
-  def ordering(schema: StructType, cols: Seq[String]): Option[Ordering[Row]] = {
-    val parts = cols.flatMap { c =>
+  /** Row order over `(column, ascending)` pairs, compiled once:
+    * ascending is ASC NULLS FIRST (the state-query order), descending is
+    * DESC NULLS LAST (`Views.compile`'s sort). The direction is resolved
+    * here, so a compare of two non-null values runs the same code either
+    * way. None when a resolved column is not a serving primitive.
+    * Unresolved columns order as a constant null (StateOps.keyCol's
+    * lit(null)), so they drop out. */
+  def ordering(schema: StructType, sort: Seq[(String, Boolean)]): Option[Ordering[Row]] = {
+    val parts = sort.flatMap { case (c, asc) =>
       QueryTranslator.resolveType(schema, c) match {
         case None => Nil
-        case Some(dt) if orderable(dt) => Seq((pathGetter(schema, c), valueCmp(dt)))
+        case Some(dt) if orderable(dt) =>
+          val cmp = valueCmp(dt)
+          // DESC NULLS LAST is ASC NULLS FIRST reversed: swapped values, nulls ranked last
+          if (asc) Seq((pathGetter(schema, c), cmp, -1))
+          else Seq((pathGetter(schema, c), (a: Any, b: Any) => cmp(b, a), 1))
         case Some(_) => return None
       }
     }.toArray
     val getters = parts.map(_._1)
     val cmps = parts.map(_._2)
+    val nullRank = parts.map(_._3)
     Some(new Ordering[Row] {
       def compare(x: Row, y: Row): Int = {
         var result = 0
@@ -81,8 +98,8 @@ object StateFastPath {
           val a = getters(i)(x)
           val b = getters(i)(y)
           result =
-            if (a == null) { if (b == null) 0 else -1 } // ASC NULLS FIRST
-            else if (b == null) 1
+            if (a == null) { if (b == null) 0 else nullRank(i) }
+            else if (b == null) -nullRank(i)
             else cmps(i)(a, b)
           i += 1
         }
@@ -90,6 +107,67 @@ object StateFastPath {
       }
     })
   }
+
+  /** A row's grouping key over `cols`, compiled once, as Spark's GROUP
+    * BY sees it: dotted paths resolved like [[pathGetter]], NaN one key
+    * and -0.0 the same key as 0.0. One column keys by its value, several
+    * by a list. Use it in a `java.util` map: Scala maps compare boxed
+    * numbers with `==`, under which NaN is not NaN. */
+  def groupKey(schema: StructType, cols: Seq[String]): Row => AnyRef = {
+    val getters = cols.map(pathGetter(schema, _)).toArray
+    if (getters.length == 1) { val g = getters(0); r => normalizeKey(g(r)) }
+    else r => java.util.Arrays.asList(getters.map(g => normalizeKey(g(r))): _*)
+  }
+
+  /** Spark groups NaN with NaN and -0.0 with 0.0; boxed `equals` treats
+    * -0.0 and 0.0 as different keys. */
+  private def normalizeKey(v: Any): AnyRef = v match {
+    case d: Double if d == 0.0 || d.isNaN => Double.box(if (d.isNaN) Double.NaN else 0.0)
+    case f: Float if f == 0.0f || f.isNaN => Float.box(if (f.isNaN) Float.NaN else 0.0f)
+    case other => other.asInstanceOf[AnyRef]
+  }
+
+  /** Compare a non-null value of a `colType` column with each of
+    * `literals` the way Catalyst does for `col <op> lit(v)` and
+    * `col.isin(...)`: both sides cast to the common type from Spark's
+    * own type-coercion rule (ANSI or legacy, as the session runs), then
+    * [[valueCmp]] in that type. So a float column meets a double
+    * literal as a double, never the literal as a float. Throws when a
+    * side needs more than a numeric widening to get there (string
+    * promotion, decimals, datetime casts); the caller then uses Spark. */
+  def literalCmps(ansi: Boolean, colType: DataType, literals: Seq[Any]): Seq[Any => Int] = {
+    val litTypes = literals.map(Literal(_).dataType)
+    val coercion = if (ansi) AnsiTypeCoercion else TypeCoercion
+    val common = coercion.findWiderCommonType(colType +: litTypes).filter(orderable)
+      .getOrElse(throw new IllegalArgumentException(
+        s"no driver-side comparison of ${colType.simpleString} with " +
+          litTypes.map(_.simpleString).mkString(", ")))
+    val toCommon = widen(colType, common)
+    val cmp = valueCmp(common)
+    literals.zip(litTypes).map { case (l, t) =>
+      val lit = widen(t, common)(l)
+      (v: Any) => cmp(toCommon(v), lit)
+    }
+  }
+
+  /** Catalyst's implicit cast of a non-null value from `from` to `to`,
+    * which the common type makes a widening between primitive numbers
+    * (or no cast); anything else throws. */
+  private def widen(from: DataType, to: DataType): Any => Any = {
+    require(from == to || (PrimitiveNumbers(from) && PrimitiveNumbers(to)),
+      s"no implicit cast ${from.simpleString} -> ${to.simpleString}")
+    to match {
+      case _ if from == to => identity
+      case ShortType   => v => Short.box(v.asInstanceOf[Number].shortValue)
+      case IntegerType => v => Int.box(v.asInstanceOf[Number].intValue)
+      case LongType    => v => Long.box(v.asInstanceOf[Number].longValue)
+      case FloatType   => v => Float.box(v.asInstanceOf[Number].floatValue)
+      case DoubleType  => v => Double.box(v.asInstanceOf[Number].doubleValue)
+    }
+  }
+
+  private val PrimitiveNumbers: Set[DataType] =
+    Set(ByteType, ShortType, IntegerType, LongType, FloatType, DoubleType)
 
   /** Dotted-path getter with the path resolved to field indices once;
     * null at any intermediate step (or an unresolved path) yields null. */
@@ -182,8 +260,10 @@ object StateFastPath {
     case t: java.sql.Timestamp => t
   }
 
-  private def opTest(where: String): Int => Boolean = where match {
-    case "==" => _ == 0
+  /** A comparison operator as a test on a compare result; the view
+    * filters' `=` spelling is `==`. */
+  def opTest(where: String): Int => Boolean = where match {
+    case "==" | "=" => _ == 0
     case "!=" => _ != 0
     case "<"  => _ < 0
     case "<=" => _ <= 0

@@ -477,15 +477,16 @@ object ChannelRuntime {
     * by the channel's foreachBatch thread; readers see [[rows]], an
     * immutable snapshot swapped in whole once per batch, so they never
     * observe a half-applied batch. Keys group like Spark's GROUP BY
-    * (dotted paths, NaN == NaN, -0.0 == 0.0). When the state-query
-    * order `orderCols` is compiled, the snapshot is kept in that order
-    * by merging each batch's sorted upserts into the previous snapshot:
-    * O(n + b log b) per batch for n keys and b upserts, no full re-sort.
+    * (`StateFastPath.groupKey`: dotted paths, NaN == NaN, -0.0 == 0.0).
+    * When the state-query order `orderCols` is compiled, the snapshot
+    * is kept in that order by merging each batch's sorted upserts into
+    * the previous snapshot: O(n + b log b) per batch for n keys and b
+    * upserts, no full re-sort.
     */
   private[streaming] final class Frontier(
       schema: StructType, keys: Seq[String], orderCols: Seq[String]) {
-    private val getters = keys.map(StateFastPath.pathGetter(schema, _)).toArray
-    private val order = StateFastPath.ordering(schema, orderCols)
+    private val keyOf = StateFastPath.groupKey(schema, keys)
+    private val order = StateFastPath.ordering(schema, orderCols.map(_ -> true))
     private val byKey = new java.util.HashMap[AnyRef, Row]
     @volatile private var snapshot: Array[Row] = Array.empty[Row]
 
@@ -514,10 +515,6 @@ object ChannelRuntime {
         case None      => byKey.values.toArray(new Array[Row](0))
       }
     }
-
-    private def keyOf(r: Row): AnyRef =
-      if (getters.length == 1) normalizeKey(getters(0)(r))
-      else java.util.Arrays.asList(getters.map(g => normalizeKey(g(r))): _*)
 
     /** `prev` minus `replaced`, plus `ups`, all in `ord` order. `_seq` is
       * unique per channel, so `ord` is total and binary search finds
@@ -550,13 +547,5 @@ object ChannelRuntime {
       System.arraycopy(prev, src, out, dst, prev.length - src)
       out
     }
-  }
-
-  /** Spark groups NaN with NaN and -0.0 with 0.0; boxed `equals` treats
-    * -0.0 and 0.0 as different keys. */
-  private def normalizeKey(v: Any): AnyRef = v match {
-    case d: Double if d == 0.0 || d.isNaN => Double.box(if (d.isNaN) Double.NaN else 0.0)
-    case f: Float if f == 0.0f || f.isNaN => Float.box(if (f.isNaN) Float.NaN else 0.0f)
-    case other => other.asInstanceOf[AnyRef]
   }
 }

@@ -63,6 +63,12 @@ object Probe {
     def reset(): Unit = { settle(); written.set(0); read.set(0) }
   }
 
+  /** The one timed action of every catalog measurement (Probe, Bench,
+    * ScaleSmoke): materialise the FULL output and return its row count.
+    * `count()` would let Catalyst prune unreferenced columns and the
+    * exchanges feeding them. */
+  def fullOutputRows(df: DataFrame): Long = df.queryExecution.toRdd.count()
+
   /** One pass of `fn`: build, plan and full-output execution, timed
     * separately; the returned frame is the one that ran. */
   def measure(spark: SparkSession, meter: ShuffleMeter,
@@ -73,7 +79,7 @@ object Probe {
     val t1 = System.nanoTime()
     df.queryExecution.executedPlan
     val t2 = System.nanoTime()
-    val rows = df.queryExecution.toRdd.count()
+    val rows = fullOutputRows(df)
     val t3 = System.nanoTime()
     meter.settle()
     (Pass(rows, (t1 - t0) / 1e9, (t2 - t1) / 1e9, (t3 - t2) / 1e9,

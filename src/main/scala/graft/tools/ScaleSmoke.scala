@@ -96,7 +96,7 @@ object ScaleSmoke {
 
     def time(dir: String, name: String): (Double, Long) = {
       val t0 = System.nanoTime()
-      val rows = graft.SparkEntry.queries(name)(spark, dir).count()
+      val rows = Probe.fullOutputRows(graft.SparkEntry.queries(name)(spark, dir))
       val dt = (System.nanoTime() - t0) / 1e9
       spark.catalog.clearCache()
       (dt, rows)

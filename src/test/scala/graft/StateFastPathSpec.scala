@@ -152,7 +152,7 @@ class StateFastPathSpec extends AnyFunSuite {
     def fastSide(keys: Seq[String], q: StateQuery): Seq[Long] = {
       val viaSort = StateFastPath.tryEval(dRows, dSchema, keys, q, Seq("_seq"))
         .getOrElse(fail(s"fast path refused $q"))
-      val ord = StateFastPath.ordering(dSchema, keys :+ "_seq").get
+      val ord = StateFastPath.ordering(dSchema, (keys :+ "_seq").map(_ -> true)).get
       val viaSnapshot = StateFastPath.filterSorted(dRows.sorted(ord).toArray, dSchema, q).get
       assert(viaSnapshot.map(_.getLong(2)) === viaSort.map(_.getLong(2)))
       viaSort.map(_.getLong(2))

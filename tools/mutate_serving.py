@@ -41,6 +41,7 @@ SFP = "src/main/scala/graft/state/StateFastPath.scala"
 RC = "src/main/scala/graft/server/RequestContract.scala"
 JC = "src/main/scala/graft/streaming/JsonCodec.scala"
 EL = "src/main/scala/graft/streaming/EngineLog.scala"
+SK = "src/main/scala/graft/sinks/Sinks.scala"
 
 # (id, file, old, new, note); `old` must occur EXACTLY once.
 MUTANTS = [
@@ -132,13 +133,13 @@ MUTANTS = [
      "      if (x == y) 0 else java.lang.Double.compare(x, y)",
      "      java.lang.Double.compare(x, y)",
      "fast path orders/filters doubles with Double.compare: -0.0 < 0.0, unlike Spark"),
-    ("s17_frontier_key_top_level", CR,
-     "    private val getters = keys.map(StateFastPath.pathGetter(schema, _)).toArray",
-     "    private val getters = keys.map { k =>\n"
+    ("s17_frontier_key_top_level", SFP,
+     "    val getters = cols.map(pathGetter(schema, _)).toArray",
+     "    val getters = cols.map { k =>\n"
      "      val i = schema.fieldNames.indexOf(k)\n"
      "      (r: Row) => if (i >= 0) r.get(i) else null\n"
      "    }.toArray",
-     "state frontier keys by top-level indexOf: a dotted keyby puts every row under null"),
+     "the shared group key resolves columns by top-level indexOf: a dotted keyby puts every frontier row under null"),
     ("s18_sse_unfiltered", GW,
      "      if (ch == name) contract.visible(name, schema, identity, rows)\n",
      "      if (ch == name) rows\n",
@@ -181,6 +182,18 @@ MUTANTS = [
      "      StandardCharsets.UTF_8.newEncoder()",
      "      java.nio.charset.Charset.defaultCharset().newEncoder()",
      "the engine log opener encodes with the platform charset instead of UTF-8"),
+    ("s27_view_filter_no_widening", SFP,
+     "    val common = coercion.findWiderCommonType(colType +: litTypes).filter(orderable)\n",
+     "    val common = Some(colType).filter(orderable)\n",
+     "view filters compare in the column's type: a double literal is narrowed to a float column instead of both widening"),
+    ("s28_delta_base_raw_key", SK,
+     "      val keyOf = StateFastPath.groupKey(schema, spec.stateKeyby)\n",
+     "      val keyOf = (r: Row) => (spec.stateKeyby.map(k => r.get(schema.fieldIndex(k))): AnyRef)\n",
+     "the delta view base keys by raw values: two NaN state keys are two rows"),
+    ("s29_view_desc_nulls_first", SFP,
+     "          else Seq((pathGetter(schema, c), (a: Any, b: Any) => cmp(b, a), 1))\n",
+     "          else Seq((pathGetter(schema, c), (a: Any, b: Any) => cmp(b, a), -1))\n",
+     "a descending sort puts nulls first instead of DESC NULLS LAST"),
 ]
 
 # Prefilter: serving-focused suites, most likely to see these bugs.
