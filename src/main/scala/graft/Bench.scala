@@ -280,7 +280,7 @@ object Bench {
       StructField("k", LongType), StructField("v", DoubleType)))
     def mkRuntime() = new graft.streaming.ChannelRuntime(spark,
       Map("bench" -> ChannelSpec("bench", schema, stateKeyby = Seq("k"))),
-      graft.StreamingQueries.gateCheckpointDir("bench-gw-ckpt"))
+      Some(graft.StreamingQueries.gateCheckpointDir("bench-gw-ckpt")))
     val rt = mkRuntime()
     val log = graft.core.Scratch.dir("bench-gw-log") + "/engine.jsonl"
     val writer = new graft.streaming.EngineLog.Writer(log, rt)

@@ -465,7 +465,7 @@ object StreamingQueries {
     val rt = new graft.streaming.ChannelRuntime(s,
       Map("events" -> graft.core.ChannelSpec("events", schema,
         stateKeyby = Seq("event_id"), omitFromLookup = true)),
-      graft.core.Scratch.dir("graft-k2b-ckpt"))
+      Some(graft.core.Scratch.dir("graft-k2b-ckpt")))
     rt.start()
     try {
       graft.streaming.EngineLog.replay(rt, path.toString, Seq("events"),

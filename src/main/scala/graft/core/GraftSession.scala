@@ -29,6 +29,8 @@ object GraftSession {
       .master(master)
       .appName(appName)
       .config("spark.sql.shuffle.partitions", parallelism.toString)
+      // checkpoint files without a `chmod`/`readlink` fork each
+      .config(s"spark.hadoop.${LocalFs.binding._1}", LocalFs.binding._2)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -29,6 +29,12 @@ object Scratch {
   def dir(prefix: String): String =
     track(java.nio.file.Files.createTempDirectory(prefix).toString)
 
+  /** Delete one tracked path now and stop tracking it. */
+  def release(path: String): Unit = {
+    tracked.remove(path)
+    try deleteRec(new java.io.File(path)) catch { case NonFatal(_) => () }
+  }
+
   /** Test isolation (advisor r12): ScratchSpec must not sweep paths
     * tracked by suites that ran earlier in the same forked test JVM
     * (stream checkpoints, index roots) — that would make suite order

@@ -365,8 +365,13 @@ final class Gateway(
             case None       => respond(ex, 404, """{"detail":"Not Found"}""")
           }
         case "controls" :: "heartbeat" :: Nil if ex.getRequestMethod == "GET" =>
-          respond(ex, 200,
-            s"""{"name":"heartbeat","status":"ok","timestamp":"${java.time.Instant.now()}"}""")
+          // degraded while any channel's query is down, naming each
+          val down = runtime.downChannels
+          respond(ex, 200, mapper.writeValueAsString(Map(
+            "name" -> "heartbeat",
+            "status" -> (if (down.isEmpty) "ok" else "degraded"),
+            "down" -> down.asJava,
+            "timestamp" -> java.time.Instant.now().toString).asJava))
         case "controls" :: "stats" :: Nil if ex.getRequestMethod == "GET" =>
           val rt = Runtime.getRuntime
           val data = Map(
@@ -523,7 +528,7 @@ final class Gateway(
         .put("summary", "Authenticated session's userinfo claims")
     }
     paths.withObjectProperty("/api/v1/controls/heartbeat").putObject("get")
-      .put("summary", "Liveness ping")
+      .put("summary", "Liveness ping: degraded, naming each channel whose query is down")
     paths.withObjectProperty("/api/v1/controls/stats").putObject("get")
       .put("summary", "Engine and system stats")
     paths.withObjectProperty("/api/v1/controls/shutdown").putObject("post")

@@ -87,7 +87,7 @@ object GatewayConfig {
 
   /** Build (but do not start) the runtime + gateway from a config
     * document. `checkpointDir` defaults to the runtime's own temp dir,
-    * like the reference's per-run output dir.
+    * like the reference's per-run output dir, deleted on `stop()`.
     */
   def load(spark: SparkSession, doc: String,
       checkpointDir: Option[String] = None,
@@ -108,10 +108,7 @@ object GatewayConfig {
       else Map.empty
     RequestContract.checkAuthFields(specs, auth)
     val distributedState = root.path("distributedState").asBoolean(false)
-    val runtime = checkpointDir match {
-      case Some(dir) => new ChannelRuntime(spark, specs, dir, distributedState)
-      case None => new ChannelRuntime(spark, specs, distributedState = distributedState)
-    }
+    val runtime = new ChannelRuntime(spark, specs, checkpointDir, distributedState)
     val apiKeys: Seq[String] =
       if (root.has("apiKeys"))
         root.get("apiKeys").elements().asScala.map(_.asText()).toSeq

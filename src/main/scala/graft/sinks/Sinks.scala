@@ -203,13 +203,20 @@ final class ViewServer(
     }
 
   /** Can this view be delta-maintained exactly? Aggregations need the
-    * whole frame; window-function expressions are not row-local;
-    * distributed-state mode must not mirror the frontier onto the
-    * driver (its whole point is driver-state-zero). */
-  private def deltaEligible(v: ViewConfig): Boolean =
+    * whole frame; window-function expressions are not row-local; an
+    * expression aliased to a state key or `_seq` would rewrite the
+    * column the delta base is keyed by, merging keys the full
+    * recompute keeps apart; distributed-state mode must not mirror the
+    * frontier onto the driver (its whole point is driver-state-zero). */
+  private def deltaEligible(channel: String, v: ViewConfig): Boolean = {
+    val resolver = runtime.spark.sessionState.conf.resolver
+    val baseKey = runtime.specs.get(channel).toSeq.flatMap(_.stateKeyby) :+ ChannelRuntime.SeqCol
     !runtime.distributedState &&
       v.groupBy.isEmpty && v.aggregates.isEmpty && v.splitBy.isEmpty &&
-      v.expressions.forall { case (_, e) => rowLocalExpression(e) }
+      v.expressions.forall { case (alias, e) =>
+        rowLocalExpression(e) && !baseKey.exists(resolver(_, alias))
+      }
+  }
 
   /** True iff the expression is evaluable row-by-row: parsed and the
     * Catalyst tree contains no window expression (a substring test on
@@ -230,7 +237,7 @@ final class ViewServer(
 
   def define(name: String, channel: String, config: ViewConfig): Unit = {
     views.put(name, ViewDef(channel, config))
-    if (deltaEligible(config)) {
+    if (deltaEligible(channel, config)) {
       deltaViews.put(name, new DeltaView)
       ensureListener()
     }

@@ -53,9 +53,11 @@ import graft.state.{StateFastPath, StateOps, StateQuery}
 final class ChannelRuntime(
     val spark: SparkSession,
     val specs: Map[String, ChannelSpec],
-    /** Default: a temp dir the end-of-run [[graft.core.Scratch]] sweep
-      * deletes; an explicit one is kept for restart and recovery. */
-    checkpointDir: String = graft.core.Scratch.dir("graft-ckpt"),
+    /** None (the default): the runtime takes a [[graft.core.Scratch]]
+      * dir and deletes it on [[stop]] (with `distributedState`, at the
+      * end-of-run sweep); an explicit one is kept for restart and
+      * recovery. */
+    checkpointDir: Option[String] = None,
     /** Cluster serving mode: keyed state accumulates in the Spark
       * state store (RocksDB, sharded across executors) via
       * [[StreamingState.lastByKeyStream]] instead of a driver map, and
@@ -68,6 +70,9 @@ final class ChannelRuntime(
     val distributedState: Boolean = false) {
 
   import ChannelRuntime._
+
+  private val checkpointRoot =
+    checkpointDir.getOrElse(graft.core.Scratch.dir("graft-ckpt"))
 
   private val seqGen = new AtomicLong(0L)
   private implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -186,7 +191,7 @@ final class ChannelRuntime(
     val effKeys = effectiveKeys(c.spec)
     c.query = c.stream.toDF().writeStream
       .queryName(s"graft_$name")
-      .option("checkpointLocation", s"$checkpointDir/$name")
+      .option("checkpointLocation", s"$checkpointRoot/$name")
       .trigger(Trigger.ProcessingTime("50 milliseconds"))
       .foreachBatch { (df: DataFrame, _: Long) =>
         // One engine cycle: rows in arrival order (seq assigned at send).
@@ -232,7 +237,7 @@ final class ChannelRuntime(
         .start()
   }
 
-  private def stateCheckpoint(name: String) = s"$checkpointDir/$name-state"
+  private def stateCheckpoint(name: String) = s"$checkpointRoot/$name-state"
 
   /** Block until every in-flight tick has been processed. */
   def processAllAvailable(): Unit =
@@ -241,8 +246,21 @@ final class ChannelRuntime(
       if (c.stateQuery != null) c.stateQuery.processAllAvailable()
     }
 
+  /** Channels whose query (or distributedState query) is not running:
+    * not started, stopped, or terminated by an exception. */
+  def downChannels: Seq[String] =
+    chans.collect {
+      case (n, c) if c.query == null || !c.query.isActive ||
+          (c.stateQuery != null && !c.stateQuery.isActive) => n
+    }.toSeq.sorted
+
   /** Stop all queries; dangling `next` futures resolve with None
-    * (reference futures/adapter.py:90-93 shutdown semantics).
+    * (reference futures/adapter.py:90-93 shutdown semantics). An owned
+    * checkpoint dir is deleted once its queries have stopped, except in
+    * `distributedState` mode: Spark keeps the state stream's RocksDB
+    * provider loaded after the query stops, and its maintenance task
+    * lists that dir, so the end-of-run sweep (after Spark's teardown)
+    * deletes it.
     */
   def stop(): Unit = {
     chans.values.foreach { c =>
@@ -251,6 +269,7 @@ final class ChannelRuntime(
       if (c.query != null) c.query.stop()
       if (c.stateQuery != null) c.stateQuery.stop()
     }
+    if (checkpointDir.isEmpty && !distributedState) graft.core.Scratch.release(checkpointRoot)
   }
 
   // ---- write path (S5/S6/S7) -------------------------------------------

@@ -27,7 +27,7 @@ object ClientDemo {
       StructField("price", DoubleType)))
     val rt = new ChannelRuntime(spark,
       Map("trades" -> ChannelSpec("trades", schema, stateKeyby = Seq("symbol"))),
-      Files.createTempDirectory("graft-client-demo").toString)
+      Some(Files.createTempDirectory("graft-client-demo").toString))
     rt.start()
     val gw = new Gateway(rt, 0).start()
     println(s"gateway on :${gw.boundPort} (ws :${gw.wsPort})")

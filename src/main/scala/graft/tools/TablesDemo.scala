@@ -28,7 +28,7 @@ object TablesDemo {
       StructField("price", DoubleType)))
     val rt = new ChannelRuntime(spark,
       Map("trades" -> ChannelSpec("trades", schema, stateKeyby = Seq("symbol"))),
-      Files.createTempDirectory("graft-tables-demo").toString)
+      Some(Files.createTempDirectory("graft-tables-demo").toString))
     rt.start()
     val syms = Seq("AAPL", "MSFT", "GOOG", "AMZN")
     val rnd = new scala.util.Random(11)

@@ -34,7 +34,7 @@ class ChannelRuntimeSpec extends AnyFunSuite with BeforeAndAfterAll {
         stateKeyby = Seq("y")),
       "out" -> ChannelSpec("out", exampleSchema))
     new ChannelRuntime(spark, specs,
-      Files.createTempDirectory("graft-test-ckpt").toString)
+      Some(Files.createTempDirectory("graft-test-ckpt").toString))
   }
 
   test("send assigns system fields and state accumulates last-per-key") {
@@ -83,7 +83,7 @@ class ChannelRuntimeSpec extends AnyFunSuite with BeforeAndAfterAll {
           if (r.getAs[String]("y") == null || r.getAs[String]("y").isEmpty)
             Left("y must be non-empty") else Right(r))))
     val rt = new ChannelRuntime(spark, specs,
-      Files.createTempDirectory("graft-test-ckpt").toString)
+      Some(Files.createTempDirectory("graft-test-ckpt").toString))
     rt.start()
     try {
       val sent = rt.send("hooked", Seq(
@@ -279,7 +279,7 @@ class ChannelRuntimeSpec extends AnyFunSuite with BeforeAndAfterAll {
     }, typedRuntime)))
     finally w.close()
     val rt4 = new ChannelRuntime(spark, Map("typed" -> ChannelSpec("typed", typed)),
-      Files.createTempDirectory("graft-test-ckpt").toString)
+      Some(Files.createTempDirectory("graft-test-ckpt").toString))
     val replayed = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.Row]
     rt4.addListener((_, rows) => rows.foreach(replayed.add))
     rt4.start()
@@ -296,26 +296,48 @@ class ChannelRuntimeSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("a runtime without a checkpoint dir takes a Scratch dir; an explicit one is left alone") {
-    val earlier = graft.core.Scratch.drain()
-    try {
-      val rt = new ChannelRuntime(spark, Map("scratch" -> ChannelSpec("scratch", exampleSchema)))
-      val tracked = graft.core.Scratch.drain()
-      assert(tracked.size === 1, tracked)
-      val dir = new java.io.File(tracked.head)
-      assert(dir.isDirectory && dir.getName.startsWith("graft-ckpt"), dir)
+    def run(rt: ChannelRuntime)(whileRunning: => Unit): Unit = {
       rt.start()
       try {
         rt.send("scratch", Seq(Map("x" -> 1L)))
         rt.processAllAvailable()
-        assert(new java.io.File(dir, "scratch").isDirectory)
+        whileRunning
       } finally rt.stop()
+    }
+    def owned(distributedState: Boolean): (ChannelRuntime, java.io.File) = {
+      val rt = new ChannelRuntime(spark,
+        Map("scratch" -> ChannelSpec("scratch", exampleSchema, stateKeyby = Seq("x"))),
+        distributedState = distributedState)
+      val tracked = graft.core.Scratch.drain()
+      assert(tracked.size === 1, tracked)
+      val dir = new java.io.File(tracked.head)
+      assert(dir.isDirectory && dir.getName.startsWith("graft-ckpt"), dir)
       graft.core.Scratch.restore(tracked)
-      graft.core.Scratch.sweep()
+      (rt, dir)
+    }
+    val earlier = graft.core.Scratch.drain()
+    try {
+      val (rt, dir) = owned(distributedState = false)
+      // the running query checkpoints into the owned dir ...
+      run(rt)(assert(new java.io.File(dir, "scratch/offsets").isDirectory))
+      // ... and stop() deletes it and drops it from the sweep
       assert(!dir.exists())
+      assert(graft.core.Scratch.drain().isEmpty)
+
+      // distributedState: the state store's provider outlives stop(), so
+      // its dir stays tracked for the end-of-run sweep
+      val (drt, ddir) = owned(distributedState = true)
+      run(drt)(assert(new java.io.File(ddir, "scratch-state/offsets").isDirectory))
+      assert(ddir.isDirectory)
+      val left = graft.core.Scratch.drain()
+      assert(left === List(ddir.getPath))
 
       val explicit = Files.createTempDirectory("graft-test-ckpt").toString
-      new ChannelRuntime(spark, Map("scratch" -> ChannelSpec("scratch", exampleSchema)), explicit)
+      run(new ChannelRuntime(spark, Map("scratch" -> ChannelSpec("scratch", exampleSchema)),
+        Some(explicit)))(())
       assert(graft.core.Scratch.drain().isEmpty)
+      assert(new java.io.File(explicit, "scratch/offsets").isDirectory)
+      graft.core.Scratch.restore(left)
     } finally graft.core.Scratch.restore(earlier)
   }
 
@@ -331,7 +353,7 @@ class ChannelRuntimeSpec extends AnyFunSuite with BeforeAndAfterAll {
       StructField("x", LongType)))
     val rt = new ChannelRuntime(spark,
       Map("kf" -> ChannelSpec("kf", keyFirst, stateKeyby = Seq("k"))),
-      Files.createTempDirectory("graft-test-ckpt").toString)
+      Some(Files.createTempDirectory("graft-test-ckpt").toString))
     rt.start()
     try {
       rt.send("kf", Seq(
@@ -355,7 +377,7 @@ class ChannelRuntimeSpec extends AnyFunSuite with BeforeAndAfterAll {
       StructField("x", LongType)))
     val rt = new ChannelRuntime(spark,
       Map("tsf" -> ChannelSpec("tsf", tsFirst)),
-      Files.createTempDirectory("graft-test-ckpt").toString)
+      Some(Files.createTempDirectory("graft-test-ckpt").toString))
     val log = Files.createTempFile("graft", ".jsonl").toString
     new java.io.File(log).delete()
     val writer = new EngineLog.Writer(log, rt)
@@ -416,7 +438,7 @@ class ChannelRuntimeSpec extends AnyFunSuite with BeforeAndAfterAll {
       "omitted" -> ChannelSpec("omitted", exampleSchema, omitFromLookup = true),
       "bounded" -> ChannelSpec("bounded", exampleSchema, lookupMaxEntries = 2))
     val rt = new ChannelRuntime(spark, specs,
-      Files.createTempDirectory("graft-lookup-ckpt").toString)
+      Some(Files.createTempDirectory("graft-lookup-ckpt").toString))
     rt.start()
     try {
       // opt-out: rows flow (last works) but the registry stays empty
@@ -449,7 +471,7 @@ class ChannelRuntimeSpec extends AnyFunSuite with BeforeAndAfterAll {
       "dotted" -> Seq("nested.inner"), "dbl" -> Seq("d"), "pair" -> Seq("d", "nested.inner"))
     val rt = new ChannelRuntime(spark,
       keyings.map { case (n, k) => n -> ChannelSpec(n, schema, stateKeyby = k) },
-      Files.createTempDirectory("graft-keys-ckpt").toString)
+      Some(Files.createTempDirectory("graft-keys-ckpt").toString))
     rt.start()
     try {
       val inner = Seq(10L, 20L, 30L, 10L, 20L, 10L, 20L, 30L)
@@ -480,7 +502,7 @@ class ChannelRuntimeSpec extends AnyFunSuite with BeforeAndAfterAll {
     val schema = StructType(Seq(StructField("k", LongType), StructField("m", LongType)))
     val rt = new ChannelRuntime(spark,
       Map("wide" -> ChannelSpec("wide", schema, stateKeyby = Seq("k"))),
-      Files.createTempDirectory("graft-torn-ckpt").toString)
+      Some(Files.createTempDirectory("graft-torn-ckpt").toString))
     val keys = 1000
     // one send = one MemoryStream add = never split across micro-batches,
     // so after any batch every key carries the same marker

@@ -26,7 +26,7 @@ class DistributedStateSpec extends AnyFunSuite {
 
   private def newRuntime() = new ChannelRuntime(spark,
     Map("dist" -> ChannelSpec("dist", schema, stateKeyby = Seq("k"))),
-    Files.createTempDirectory("graft-dist-ckpt").toString,
+    Some(Files.createTempDirectory("graft-dist-ckpt").toString),
     distributedState = true)
 
   test("state accumulates in the state store, not driver maps; queries answer distributed") {
@@ -63,7 +63,7 @@ class DistributedStateSpec extends AnyFunSuite {
     val rt = new ChannelRuntime(spark,
       Map("dist" -> ChannelSpec("dist", schema, stateKeyby = Seq("k"),
         omitFromLookup = true)),
-      Files.createTempDirectory("graft-dist-lkp").toString,
+      Some(Files.createTempDirectory("graft-dist-lkp").toString),
       distributedState = true)
     rt.start()
     try {

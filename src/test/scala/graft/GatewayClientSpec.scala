@@ -31,7 +31,7 @@ class GatewayClientSpec extends AnyFunSuite {
       f: (GatewayClientConfig => GatewayClient, ChannelRuntime) => Unit): Unit = {
     val rt = new ChannelRuntime(spark,
       Map("example" -> ChannelSpec("example", schema, stateKeyby = Seq("owner"))),
-      Files.createTempDirectory("graft-client-ckpt").toString)
+      Some(Files.createTempDirectory("graft-client-ckpt").toString))
     rt.start()
     val gw = new Gateway(rt, 0, authFilterFields,
       simpleAuthUsers = simpleAuthUsers).start()
@@ -48,7 +48,7 @@ class GatewayClientSpec extends AnyFunSuite {
       // test SparkSession — per-channel query names must not collide)
       val rtB = new ChannelRuntime(spark,
         Map("example_b" -> ChannelSpec("example_b", schema, stateKeyby = Seq("owner"))),
-        Files.createTempDirectory("graft-client-b-ckpt").toString)
+        Some(Files.createTempDirectory("graft-client-b-ckpt").toString))
       rtB.start()
       try {
         val client = mk(GatewayClientConfig())
@@ -148,7 +148,7 @@ class GatewayClientSpec extends AnyFunSuite {
       StructField("fs", ArrayType(FloatType)), StructField("bin", BinaryType)))
     val rt = new ChannelRuntime(spark,
       Map("typed" -> ChannelSpec("typed", typed, stateKeyby = Seq("owner"))),
-      Files.createTempDirectory("graft-client-typed-ckpt").toString)
+      Some(Files.createTempDirectory("graft-client-typed-ckpt").toString))
     rt.start()
     val gw = new Gateway(rt, 0).start()
     try {
@@ -244,7 +244,7 @@ class GatewayClientSpec extends AnyFunSuite {
     val rt = new ChannelRuntime(spark,
       Map("quotes" -> ChannelSpec("quotes", basketSchema, basketKey = Some("sym"),
         basketKeys = Some(Seq("AAPL", "MSFT")))),
-      Files.createTempDirectory("graft-client-basket-ckpt").toString)
+      Some(Files.createTempDirectory("graft-client-basket-ckpt").toString))
     rt.start()
     val gw = new Gateway(rt, 0).start()
     val client = new GatewayClient(GatewayClientConfig(
@@ -356,7 +356,7 @@ class GatewayClientSpec extends AnyFunSuite {
   test("controls shutdown through the client stops the gateway") {
     val rt = new ChannelRuntime(spark,
       Map("example" -> ChannelSpec("example", schema)),
-      Files.createTempDirectory("graft-client-shut-ckpt").toString)
+      Some(Files.createTempDirectory("graft-client-shut-ckpt").toString))
     rt.start()
     val stopped = new java.util.concurrent.CountDownLatch(1)
     val gw = new Gateway(rt, 0, onShutdown = () => stopped.countDown()).start()
@@ -376,7 +376,7 @@ class GatewayClientSpec extends AnyFunSuite {
   test("api-key auth: token query param authorizes, missing key rejected") {
     val rt = new ChannelRuntime(spark,
       Map("example" -> ChannelSpec("example", schema)),
-      Files.createTempDirectory("graft-client-key-ckpt").toString)
+      Some(Files.createTempDirectory("graft-client-key-ckpt").toString))
     rt.start()
     val gw = new Gateway(rt, 0, apiKeys = Seq("sekret")).start()
     try {

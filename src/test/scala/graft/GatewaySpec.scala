@@ -31,7 +31,7 @@ class GatewaySpec extends AnyFunSuite {
       channelSchema: StructType = schema)(f: (String, ChannelRuntime) => Unit): Unit = {
     val rt = new ChannelRuntime(spark,
       Map("example" -> ChannelSpec("example", channelSchema, stateKeyby = Seq("owner"))),
-      Files.createTempDirectory("graft-gw-ckpt").toString)
+      Some(Files.createTempDirectory("graft-gw-ckpt").toString))
     rt.start()
     val gw = new Gateway(rt, 0, auth).start()
     gatewayUnderTest = Some(gw)
@@ -183,7 +183,7 @@ class GatewaySpec extends AnyFunSuite {
     val rt = new ChannelRuntime(spark,
       Map("quotes" -> ChannelSpec("quotes", basketSchema, basketKey = Some("sym"),
         basketKeys = Some(Seq("AAPL", "MSFT", "TSLA")))),
-      Files.createTempDirectory("graft-gw-basket-ckpt").toString)
+      Some(Files.createTempDirectory("graft-gw-basket-ckpt").toString))
     rt.start()
     val gw = new Gateway(rt, 0).start()
     val base = s"http://127.0.0.1:${gw.boundPort}/api/v1"
@@ -267,6 +267,19 @@ class GatewaySpec extends AnyFunSuite {
       val data = st.get("data")
       assert(data.get("cpu").asInt() > 0 && data.get("memory-total").asLong() > 0)
       assert(data.get("host").asText().nonEmpty && data.get("now").asText().nonEmpty)
+    }
+  }
+
+  test("heartbeat is degraded and names the channel whose query stopped") {
+    withGateway() { (base, _) =>
+      val m = new com.fasterxml.jackson.databind.ObjectMapper()
+      def heartbeat() = m.readTree(get(s"$base/controls/heartbeat").body())
+      val up = heartbeat()
+      assert(up.get("status").asText() === "ok" && up.get("down").size() === 0, up)
+      spark.streams.active.filter(_.name == "graft_example").foreach(_.stop())
+      val down = heartbeat()
+      assert(down.get("status").asText() === "degraded", down)
+      assert(down.get("down").size() === 1 && down.get("down").get(0).asText() === "example", down)
     }
   }
 
@@ -394,7 +407,7 @@ class GatewaySpec extends AnyFunSuite {
     cg.finalizeGraph()
     val rt = new ChannelRuntime(spark,
       Map("example" -> ChannelSpec("example", schema)),
-      Files.createTempDirectory("graft-gw-ckpt").toString)
+      Some(Files.createTempDirectory("graft-gw-ckpt").toString))
     rt.start()
     val gw = new Gateway(rt, 0)
     gw.attachChannelsGraph(cg.connectionsGraph)
@@ -422,7 +435,7 @@ class GatewaySpec extends AnyFunSuite {
         s"$u:$p".getBytes(java.nio.charset.StandardCharsets.UTF_8))
     val rt = new ChannelRuntime(spark,
       Map("example" -> ChannelSpec("example", schema, stateKeyby = Seq("owner"))),
-      Files.createTempDirectory("graft-gw-ckpt").toString)
+      Some(Files.createTempDirectory("graft-gw-ckpt").toString))
     rt.start()
     val gw = new Gateway(rt, 0, Map("example" -> "owner"),
       simpleAuthUsers = Map("alice" -> "secret")).start()
@@ -485,7 +498,7 @@ class GatewaySpec extends AnyFunSuite {
         s"$u:$p".getBytes(java.nio.charset.StandardCharsets.UTF_8))
     val rt = new ChannelRuntime(spark,
       Map("example" -> ChannelSpec("example", schema, stateKeyby = Seq("owner"))),
-      Files.createTempDirectory("graft-gw-ckpt").toString)
+      Some(Files.createTempDirectory("graft-gw-ckpt").toString))
     rt.start()
     val gw = new Gateway(rt, 0, Map("example" -> "owner"),
       simpleAuthUsers = Map("alice" -> "secret"),
@@ -522,7 +535,7 @@ class GatewaySpec extends AnyFunSuite {
     // configuration; this pins it.
     val rt = new ChannelRuntime(spark,
       Map("example" -> ChannelSpec("example", schema, stateKeyby = Seq("owner"))),
-      Files.createTempDirectory("graft-gw-ckpt").toString)
+      Some(Files.createTempDirectory("graft-gw-ckpt").toString))
     rt.start()
     val gw = new Gateway(rt, 0,
       apiKeys = Seq("k123"),
@@ -565,7 +578,7 @@ class GatewaySpec extends AnyFunSuite {
     val rt = new ChannelRuntime(spark,
       Map("quotes" -> ChannelSpec("quotes", schema, basketKey = Some("owner"),
         basketKeys = Some(Seq("AAPL")))),
-      Files.createTempDirectory("graft-gw-detail-ckpt").toString)
+      Some(Files.createTempDirectory("graft-gw-detail-ckpt").toString))
     rt.start()
     val gw = new Gateway(rt, 0).start()
     try {
@@ -698,7 +711,7 @@ class GatewaySpec extends AnyFunSuite {
     // the live routes serve the same bytes
     val rt = new ChannelRuntime(spark,
       Map("matrix" -> ChannelSpec("matrix", mschema, stateKeyby = Seq("l"))),
-      Files.createTempDirectory("graft-gw-bytes-ckpt").toString)
+      Some(Files.createTempDirectory("graft-gw-bytes-ckpt").toString))
     rt.start()
     val gw = new Gateway(rt, 0).start()
     try {

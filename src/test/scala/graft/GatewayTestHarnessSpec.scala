@@ -18,7 +18,7 @@ class GatewayTestHarnessSpec extends AnyFunSuite {
 
   private def newRuntime() = new ChannelRuntime(spark,
     Map("ch" -> ChannelSpec("ch", schema, stateKeyby = Seq("k"))),
-    Files.createTempDirectory("graft-harness-ckpt").toString)
+    Some(Files.createTempDirectory("graft-harness-ckpt").toString))
 
   test("timeline of send/delay/assert events runs in order") {
     val rt = newRuntime()

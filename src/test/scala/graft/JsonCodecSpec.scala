@@ -77,7 +77,7 @@ class JsonCodecSpec extends AnyFunSuite {
         ArrayType(CalendarIntervalType), StructType(Seq(StructField("n", NullType))))) {
       val e = intercept[IllegalArgumentException](new ChannelRuntime(spark,
         Map("bad" -> ChannelSpec("bad", StructType(Seq(StructField("f", dt))))),
-        Files.createTempDirectory("graft-codec-ckpt").toString))
+        Some(Files.createTempDirectory("graft-codec-ckpt").toString)))
       assert(e.getMessage.contains("'f'") && e.getMessage.contains("no JSON form"), e.getMessage)
     }
   }

@@ -97,7 +97,7 @@ class ServerMiddlewareSpec extends AnyFunSuite {
   private def withRuntime(f: ChannelRuntime => Unit): Unit = {
     val rt = new ChannelRuntime(spark,
       Map("example" -> ChannelSpec("example", schema, stateKeyby = Seq("owner"))),
-      Files.createTempDirectory("graft-mw-ckpt").toString)
+      Some(Files.createTempDirectory("graft-mw-ckpt").toString))
     rt.start()
     try f(rt) finally rt.stop()
   }

@@ -245,7 +245,7 @@ class SourcesSinksSpec extends AnyFunSuite {
       StructField("k", StringType), StructField("x", LongType)))
     val rt = new graft.streaming.ChannelRuntime(spark,
       Map("ch" -> graft.core.ChannelSpec("ch", rtSchema, stateKeyby = Seq("k"))),
-      Files.createTempDirectory("graft-vs-ckpt").toString)
+      Some(Files.createTempDirectory("graft-vs-ckpt").toString))
     rt.start()
     try {
       val vs = new ViewServer(rt)
@@ -269,7 +269,7 @@ class SourcesSinksSpec extends AnyFunSuite {
     // channel an identity view would otherwise collect whole
     val rt = new graft.streaming.ChannelRuntime(spark,
       Map("ch" -> graft.core.ChannelSpec("ch", rtSchema, stateKeyby = Seq("id"))),
-      Files.createTempDirectory("graft-vscap-ckpt").toString)
+      Some(Files.createTempDirectory("graft-vscap-ckpt").toString))
     rt.start()
     try {
       val vs = new ViewServer(rt, defaultLimit = 5)
@@ -292,7 +292,7 @@ class SourcesSinksSpec extends AnyFunSuite {
     val rt = new graft.streaming.ChannelRuntime(spark,
       Map("a" -> graft.core.ChannelSpec("a", rtSchema),
         "b" -> graft.core.ChannelSpec("b", rtSchema)),
-      Files.createTempDirectory("graft-log-ckpt").toString)
+      Some(Files.createTempDirectory("graft-log-ckpt").toString))
     val logged = scala.collection.mutable.Buffer.empty[String]
     Sinks.logChannels(rt, Seq("a"), s => logged.synchronized { logged += s })
     rt.start()

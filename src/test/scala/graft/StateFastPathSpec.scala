@@ -193,7 +193,7 @@ class StateFastPathSpec extends AnyFunSuite {
       StructField("x", LongType)))
     val rt = new graft.streaming.ChannelRuntime(spark,
       Map("ch" -> graft.core.ChannelSpec("ch", rtSchema, stateKeyby = Seq("owner"))),
-      java.nio.file.Files.createTempDirectory("graft-fast-ckpt").toString)
+      Some(java.nio.file.Files.createTempDirectory("graft-fast-ckpt").toString))
     rt.start()
     try {
       rt.send("ch", Seq(

@@ -82,7 +82,7 @@ class WebSocketSpec extends AnyFunSuite {
       Map(
         "example" -> ChannelSpec("example", schema, stateKeyby = Seq("owner")),
         "basket" -> ChannelSpec("basket", basketSchema, basketKey = Some("sym"))),
-      Files.createTempDirectory("graft-ws-ckpt").toString)
+      Some(Files.createTempDirectory("graft-ws-ckpt").toString))
     rt.start()
     val gw = mkGateway(rt).start()
     try f(gw, rt)
@@ -235,7 +235,7 @@ class WebSocketSpec extends AnyFunSuite {
   test("session cookie authenticates the websocket handshake (ws cookie fix parity)") {
     val rt = new ChannelRuntime(spark,
       Map("example" -> ChannelSpec("example", schema, stateKeyby = Seq("owner"))),
-      Files.createTempDirectory("graft-ws-ckpt").toString)
+      Some(Files.createTempDirectory("graft-ws-ckpt").toString))
     rt.start()
     val gw = new Gateway(rt, 0, Map("example" -> "owner"),
       simpleAuthUsers = Map("alice" -> "pw")).start()

@@ -42,6 +42,8 @@ RC = "src/main/scala/graft/server/RequestContract.scala"
 JC = "src/main/scala/graft/streaming/JsonCodec.scala"
 EL = "src/main/scala/graft/streaming/EngineLog.scala"
 SK = "src/main/scala/graft/sinks/Sinks.scala"
+LFS = "src/main/scala/graft/core/LocalFs.scala"
+GS = "src/main/scala/graft/core/GraftSession.scala"
 
 # (id, file, old, new, note); `old` must occur EXACTLY once.
 MUTANTS = [
@@ -194,6 +196,31 @@ MUTANTS = [
      "          else Seq((pathGetter(schema, c), (a: Any, b: Any) => cmp(b, a), 1))\n",
      "          else Seq((pathGetter(schema, c), (a: Any, b: Any) => cmp(b, a), -1))\n",
      "a descending sort puts nulls first instead of DESC NULLS LAST"),
+    ("s30_local_fs_set_permission_noop", LFS,
+     "        try Files.setPosixFilePermissions(pathToFile(p).toPath, perms)\n",
+     "        try ()\n",
+     "the local filesystem's setPermission does nothing: created files keep the process umask"),
+    ("s31_local_fs_no_symlink_branch", LFS,
+     "      if (Files.isSymbolicLink(pathToFile(f).toPath)) super.getFileLinkStatus(f)\n"
+     "      else getFileStatus(f)\n",
+     "      getFileStatus(f)\n",
+     "the local filesystem's link status never reports a symlink: a dangling link reads as missing"),
+    ("s32_local_fs_unbound", GS,
+     "      .config(s\"spark.hadoop.${LocalFs.binding._1}\", LocalFs.binding._2)\n",
+     "",
+     "the session factory no longer binds file: to the fork-free local filesystem"),
+    ("s33_delta_view_aliased_state_key", SK,
+     "        rowLocalExpression(e) && !baseKey.exists(resolver(_, alias))\n",
+     "        rowLocalExpression(e)\n",
+     "a view expression aliased to a state key stays delta-maintained: keys a and A merge"),
+    ("s34_heartbeat_always_ok", GW,
+     '            "status" -> (if (down.isEmpty) "ok" else "degraded"),\n',
+     '            "status" -> "ok",\n',
+     "the heartbeat answers ok while a channel's query is down"),
+    ("s35_owned_checkpoint_kept", CR,
+     "    if (checkpointDir.isEmpty && !distributedState) graft.core.Scratch.release(checkpointRoot)\n",
+     "",
+     "stop() leaves the runtime's own checkpoint dir behind until the end-of-run sweep"),
 ]
 
 # Prefilter: serving-focused suites, most likely to see these bugs.
@@ -202,6 +229,7 @@ PREFILTER_SUITES = [
     "graft.GatewayClientSpec", "graft.GatewayTestHarnessSpec",
     "graft.ServerMiddlewareSpec", "graft.ChannelRuntimeSpec",
     "graft.ViewServerDeltaSpec", "graft.StateFastPathSpec", "graft.JsonCodecSpec",
+    "graft.LocalFsSpec",
 ]
 
 
