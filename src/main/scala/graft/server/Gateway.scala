@@ -218,13 +218,11 @@ final class Gateway(
     mapper.writeValueAsString(root)
   }
 
-  private def schemaOf(name: String): org.apache.spark.sql.types.StructType =
-    runtime.runtimeSchema(runtime.specs(name))
-
-  /** The caller's rows of channel `name` (X13) as a JSON array. */
+  /** The caller's rows of channel `name` (X13) as a JSON array; rows
+    * from the channel's frontier are served from their cached bytes. */
   private def respondRows(ex: HttpExchange, name: String, identity: Option[String],
       rows: Seq[org.apache.spark.sql.Row]): Unit = {
-    val schema = schemaOf(name)
+    val schema = runtime.schemaOf(name)
     respondJson(ex, 200, JsonCodec.rowsJson(contract.visible(name, schema, identity, rows), schema))
   }
 
@@ -287,7 +285,7 @@ final class Gateway(
             catch { case NonFatal(_) => Nil } // reference: errors → []
           respondRows(ex, name, identity, rows)
         case "lookup" :: name :: id :: Nil if known(name) =>
-          val schema = schemaOf(name)
+          val schema = runtime.schemaOf(name)
           contract.visible(name, schema, identity, runtime.lookup(name, id).toSeq) match {
             case Seq(row) => respondJson(ex, 200, JsonCodec.jsonBytes(JsonCodec.writeRow(_, row, schema)))
             case _ => respond(ex, 404, """{"detail":"id not found"}""")
@@ -407,7 +405,10 @@ final class Gateway(
     * websocket.py:183-225) plus 1s heartbeat pings (websocket.py:38).
     * Frames carry only the caller's rows (X13), like every egress.
     * Demand-driven: the listener exists only while the client is
-    * connected. `?max_events=N` closes after N data frames (testing).
+    * connected. A client that falls [[Gateway.EgressQueueFrames]] frames
+    * behind is dropped, as WebSocket drops a slow consumer: the listener
+    * detaches at once, and the stream closes once its pending write
+    * returns. `?max_events=N` closes after N data frames (testing).
     */
   private def handleStream(ex: HttpExchange, req: RequestView, name: String,
       identity: Option[String]): Unit = {
@@ -416,16 +417,22 @@ final class Gateway(
     ex.getResponseHeaders.set("Cache-Control", "no-cache")
     ex.sendResponseHeaders(200, 0)
     val os = ex.getResponseBody
-    val queue = new java.util.concurrent.LinkedBlockingQueue[Array[Byte]]
-    val schema = runtime.runtimeSchema(runtime.specs(name))
-    val listener: (String, Seq[org.apache.spark.sql.Row]) => Unit = (ch, rows) =>
-      if (ch == name) contract.visible(name, schema, identity, rows)
-        .foreach(r => queue.offer(Gateway.frameJson(name, None, r, schema)))
+    val queue = new java.util.concurrent.LinkedBlockingQueue[Array[Byte]](Gateway.EgressQueueFrames)
+    @volatile var dropped = false
+    val schema = runtime.schemaOf(name)
+    lazy val listener: (String, Seq[org.apache.spark.sql.Row]) => Unit = (ch, rows) =>
+      if (ch == name && !dropped) contract.visible(name, schema, identity, rows).foreach { r =>
+        if (!dropped && !queue.offer(Gateway.frameJson(name, None, r, schema))) {
+          dropped = true // slow consumer: stop buffering for it
+          runtime.removeListener(listener)
+          queue.clear()
+        }
+      }
     runtime.addListener(listener)
     try {
       var sent = 0L
       var open = true
-      while (open && sent < maxEvents) {
+      while (open && !dropped && sent < maxEvents) {
         val item = queue.poll(1, java.util.concurrent.TimeUnit.SECONDS)
         try {
           if (item == null) os.write(": ping\n\n".getBytes(StandardCharsets.UTF_8)) // K9
@@ -1129,6 +1136,10 @@ final class Gateway(
 object Gateway {
   /** Published library version (surfaced in the OpenAPI document). */
   val Version = "0.3.0"
+
+  /** Frames an SSE or WebSocket connection may fall behind before it is
+    * dropped as a slow consumer. */
+  private[server] val EgressQueueFrames = 1024
 
   private val detailMapper = new ObjectMapper()
 

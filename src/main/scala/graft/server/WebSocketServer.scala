@@ -85,7 +85,7 @@ final class WebSocketServer(
     val subs = ConcurrentHashMap.newKeySet[(String, Option[String])]()
     @volatile var identity: Option[String] = None
     private val outbox =
-      new java.util.concurrent.LinkedBlockingQueue[(Int, Array[Byte])](1024)
+      new java.util.concurrent.LinkedBlockingQueue[(Int, Array[Byte])](Gateway.EgressQueueFrames)
     private val writer = new Thread(() => {
       try {
         var open = true
@@ -117,7 +117,7 @@ final class WebSocketServer(
       runtime.specs.get(ch).foreach { spec =>
         val basket = spec.basketKey
         val wantAll = subs.contains((ch, None))
-        val schema = runtime.runtimeSchema(spec)
+        val schema = runtime.schemaOf(ch)
         val keyIdx = basket.map(schema.fieldNames.indexOf(_)).getOrElse(-1)
         contract.visible(ch, schema, identity, rows).foreach { r =>
           val rowKey = if (keyIdx >= 0 && !r.isNullAt(keyIdx)) Some(String.valueOf(r.get(keyIdx))) else None

@@ -396,8 +396,7 @@ final class ViewServer(
     }
 
   private def sparkDelta(rows: Seq[Row], channel: String): DataFrame = {
-    runtime.spark.createDataFrame(rows.asJava,
-      runtime.runtimeSchema(runtime.specs(channel)))
+    runtime.spark.createDataFrame(rows.asJava, runtime.schemaOf(channel))
   }
 
   def snapshot(name: String): Seq[Row] = {

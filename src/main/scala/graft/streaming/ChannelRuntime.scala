@@ -81,6 +81,11 @@ final class ChannelRuntime(
   def runtimeSchema(spec: ChannelSpec): StructType =
     StructType(spec.schema.fields :+ StructField(SeqCol, LongType, nullable = false))
 
+  /** The engine-side schema of channel `name`: the one object its rows
+    * are encoded under, so [[JsonCodec.rowsJson]] can serve the
+    * frontier's cached bytes for it. */
+  def schemaOf(name: String): StructType = chan(name).schema
+
   private final class Chan(val spec: ChannelSpec) {
     val schema: StructType = runtimeSchema(spec)
     val names: Set[String] = spec.schema.fieldNames.toSet
@@ -145,6 +150,9 @@ final class ChannelRuntime(
     * make_passive/make_active).
     */
   def removeListener(f: (String, Seq[Row]) => Unit): Unit = listeners.remove(f)
+
+  /** Listeners attached now (diagnostic: egress detaches slow clients). */
+  private[graft] def listenerCount: Int = listeners.size()
 
   /** Feedback edge (T8): rows of `from` re-injected into `to` on the
     * next micro-batch (one-cycle delay), optionally transformed.
@@ -458,12 +466,15 @@ final class ChannelRuntime(
     * snapshot already in query order, so a read filters that snapshot
     * in memory ([[graft.state.StateFastPath.filterSorted]]: no copy, no
     * sort) and sees whole batches only, at most one batch stale — the
-    * bound distributed mode documents. Measured on a 20,000-key
-    * frontier (perfbench `state_read` seed 11, 4 vCPU): ~0.4 ms for a
-    * 200-row filtered read and ~0.02 ms for a full read, against
-    * 6.0 ms and 85 ms when each read copied and sorted the frontier and
-    * ~140 ms for the Spark-job round trip (SCALE.md "Measured EXTERNAL
-    * ceiling"). Anything whose semantics the fast path cannot
+    * bound distributed mode documents. The rows returned are the
+    * snapshot's own [[JsonCodec.EncodedRow]]s, so a response splices
+    * their cached bytes. Measured on a 20,000-key frontier (perfbench
+    * `state_read` seed 1601, 4 vCPU): ~0.1 ms for a 200-row filtered
+    * read and ~0.003 ms for a full read, whose HTTP response then takes
+    * ~2.0 ms against ~7.9 ms when each read encoded every row; 6.0 ms
+    * and 85 ms when each read copied and sorted the frontier (seed 11),
+    * and ~140 ms for the Spark-job round trip (SCALE.md "Measured
+    * EXTERNAL ceiling"). Anything whose semantics the fast path cannot
     * reproduce exactly (distributed state, ANSI-sensitive casts,
     * coercing comparisons, key types without a driver-side order)
     * takes the Spark path below.
@@ -495,7 +506,8 @@ object ChannelRuntime {
   /** One channel's last-row-per-key frontier. [[upsert]] is called only
     * by the channel's foreachBatch thread; readers see [[rows]], an
     * immutable snapshot swapped in whole once per batch, so they never
-    * observe a half-applied batch. Keys group like Spark's GROUP BY
+    * observe a half-applied batch. Each row carries its JSON bytes under
+    * `schema`. Keys group like Spark's GROUP BY
     * (`StateFastPath.groupKey`: dotted paths, NaN == NaN, -0.0 == 0.0).
     * When the state-query order `orderCols` is compiled, the snapshot
     * is kept in that order by merging each batch's sorted upserts into
@@ -516,14 +528,16 @@ object ChannelRuntime {
     /** The latest published snapshot; callers must not mutate it. */
     def rows: Array[Row] = snapshot
 
-    /** Apply one micro-batch (rows in `_seq` order), then publish. */
+    /** Apply one micro-batch (rows in `_seq` order), then publish. Each
+      * winning row is encoded here, once, as a [[JsonCodec.EncodedRow]]. */
     def upsert(batch: Seq[Row]): Unit = {
       val latest = new java.util.HashMap[AnyRef, Row]
       batch.foreach(r => latest.put(keyOf(r), r))
       val ups = new Array[Row](latest.size)
       val replaced = new scala.collection.mutable.ArrayBuffer[Row]
       var n = 0
-      latest.forEach { (k, r) =>
+      latest.forEach { (k, collected) =>
+        val r = JsonCodec.encoded(collected, schema)
         val old = byKey.put(k, r)
         if (old != null) replaced += old
         ups(n) = r

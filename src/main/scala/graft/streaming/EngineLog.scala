@@ -47,7 +47,7 @@ object EngineLog {
         val allTs = buf.values.flatten.flatMap(tsOf).toSeq
         val engineTs = if (allTs.nonEmpty) allTs.min else System.currentTimeMillis()
         writeCycle(out, engineTs, buf.toSeq.map { case (ch, rows) =>
-          (ch, rows, runtime.runtimeSchema(runtime.specs(ch)))
+          (ch, rows, runtime.schemaOf(ch))
         })
         out.newLine(); out.flush()
         buf.clear()

@@ -42,3 +42,12 @@ object DatasetBridge {
     cd.sparkSession.internalCreateDataFrame(cd.queryExecution.toRdd, cd.schema)
   }
 }
+
+/** The values array behind a `GenericRow` (`private[sql]`), so a row
+  * built from it can share it instead of copying. */
+object RowBridge {
+  def values(r: org.apache.spark.sql.Row): Array[Any] = r match {
+    case g: org.apache.spark.sql.catalyst.expressions.GenericRow => g.values
+    case _ => r.toSeq.toArray
+  }
+}

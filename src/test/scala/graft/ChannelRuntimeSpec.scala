@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.ChannelSpec
 import graft.state.{FilterBy, StateFilter, StateOps, StateQuery}
-import graft.streaming.{ChannelRuntime, EngineLog}
+import graft.streaming.{ChannelRuntime, EngineLog, JsonCodec}
 
 /** End-to-end streaming gateway tests, mirroring the reference's
   * GatewayTestHarness flow: send events into the graph, let micro-
@@ -124,6 +124,28 @@ class ChannelRuntimeSpec extends AnyFunSuite with BeforeAndAfterAll {
       val dangling = rt.next("example")
       rt.stop()
       assert(scala.concurrent.Await.result(dangling, 10.seconds).isEmpty)
+    } finally rt.stop()
+  }
+
+  test("frontier rows carry writeRow's bytes for their current values after keys are replaced") {
+    val rt = newRuntime()
+    rt.start()
+    try {
+      val schema = rt.schemaOf("example")
+      for (round <- 0 until 4) {
+        // every round replaces each earlier key with new values and adds one
+        rt.send("example", (0 to round).map(k => Map("x" -> (round * 10L + k), "y" -> s"k$k")))
+        rt.processAllAvailable()
+        val st = rt.state("example")
+        assert(st.map(_.getAs[Long]("x")) === (0 to round).map(round * 10L + _))
+        st.foreach {
+          case e: JsonCodec.EncodedRow =>
+            assert(e.schema eq schema)
+            assert(e.utf8 === JsonCodec.jsonBytes(JsonCodec.writeRow(_, e, schema)), s"round $round: $e")
+          case r => fail(s"round $round: $r holds no encoding")
+        }
+        assert(JsonCodec.rowsJson(st, schema) === JsonCodec.rowsJson(st.map(r => Row.fromSeq(r.toSeq)), schema))
+      }
     } finally rt.stop()
   }
 

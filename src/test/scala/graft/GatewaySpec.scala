@@ -138,6 +138,33 @@ class GatewaySpec extends AnyFunSuite {
     }
   }
 
+  test("an SSE client that never reads is dropped once its queue is full") {
+    withGateway() { (base, rt) =>
+      val attached = rt.listenerCount
+      val sock = new java.net.Socket()
+      sock.setReceiveBufferSize(4096)
+      sock.connect(new java.net.InetSocketAddress("127.0.0.1", java.net.URI.create(base).getPort))
+      try {
+        sock.getOutputStream.write(
+          "GET /api/v1/stream/example HTTP/1.1\r\nHost: localhost\r\n\r\n"
+            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        sock.getOutputStream.flush()
+        val deadline = System.nanoTime() + 30L * 1000000000L
+        while (rt.listenerCount == attached && System.nanoTime() < deadline) Thread.sleep(20)
+        assert(rt.listenerCount === attached + 1, "the stream's listener attaches")
+        // ~16 MB of frames: more than the socket buffers and the queue hold
+        val payload = "p" * 4096
+        var batches = 0
+        while (rt.listenerCount > attached && batches < 8 && System.nanoTime() < deadline) {
+          rt.send("example", (0 until 500).map(i => Map[String, Any]("x" -> i.toLong, "owner" -> payload)))
+          rt.processAllAvailable()
+          batches += 1
+        }
+        assert(rt.listenerCount === attached, s"the listener stays attached after $batches batches")
+      } finally sock.close()
+    }
+  }
+
   test("SSE frames carry only the caller's rows (X13)") {
     withGateway(Map("example" -> "owner")) { (base, rt) =>
       // one subscriber per caller; each collects its `data:` lines
@@ -718,7 +745,7 @@ class GatewaySpec extends AnyFunSuite {
       rt.send("matrix", rows.filter(!_.isNullAt(1)).map(r =>
         mschema.fieldNames.zipWithIndex.map { case (n, i) => n -> r.get(i) }.toMap))
       rt.processAllAvailable()
-      val rtSchema = rt.runtimeSchema(rt.specs("matrix"))
+      val rtSchema = rt.schemaOf("matrix")
       def tree(rs: Seq[Row]): Array[Byte] = {
         val arr = m.createArrayNode()
         rs.foreach(r => arr.add(treeRow(m, r, rtSchema)))
@@ -728,6 +755,11 @@ class GatewaySpec extends AnyFunSuite {
         HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${gw.boundPort}/api/v1/$path")).build(),
         HttpResponse.BodyHandlers.ofByteArray()).body()
       assert(rt.state("matrix").size === 4)
+      // the state route splices the frontier's cached bytes
+      assert(rt.state("matrix").forall {
+        case e: JsonCodec.EncodedRow => e.schema eq rtSchema
+        case _ => false
+      })
       assert(body("state/matrix") === tree(rt.state("matrix")))
       assert(body("last/matrix") === tree(rt.last("matrix").toSeq))
     } finally { gw.stop(); rt.stop() }

@@ -37,6 +37,44 @@ class JsonCodecSpec extends AnyFunSuite {
     assert(res.passed, res)
   }
 
+  test("property: rowsJson splices frontier-encoded rows to the generator's bytes, 1,000 cases") {
+    val gen = for {
+      schema <- structType(2)
+      n <- Gen.choose(0, 5)
+      rows <- Gen.listOfN(n, rowOf(schema, anyString))
+      plain <- Gen.listOfN(n, Gen.oneOf(true, false))
+    } yield (schema, rows, plain)
+    val prop = Prop.forAllNoShrink(gen) { case (schema, rows, plain) =>
+      val want = JsonCodec.rowsJson(rows, schema)
+      val enc = rows.map(JsonCodec.encoded(_, schema))
+      // mixed inputs and structurally equal schemas take the generator
+      val mixed = enc.zip(plain).zip(rows).map { case ((e, p), r) => if (p) r else e }
+      val equalCopy = StructType(schema.fields.clone())
+      // bytes encoded under other field names must not be spliced
+      val renamed = StructType(schema.fields.map(f => f.copy(name = f.name + "_r")))
+      Prop.all(
+        Prop(enc.forall(e => e.utf8 sameElements JsonCodec.jsonBytes(JsonCodec.writeRow(_, e, schema)))),
+        Prop(JsonCodec.rowsJson(enc, schema) sameElements want) :| "spliced",
+        Prop(JsonCodec.rowsJson(mixed, schema) sameElements want) :| "mixed",
+        Prop(JsonCodec.rowsJson(enc, equalCopy) sameElements want) :| "equal schema copy",
+        Prop(JsonCodec.rowsJson(enc, renamed) sameElements JsonCodec.rowsJson(rows, renamed)) :|
+          "other schema") :| s"$schema\n${new String(want, StandardCharsets.UTF_8)}"
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(1000), prop)
+    assert(res.passed, res)
+  }
+
+  test("rowsJson splices cached bytes only under the schema object they were encoded under") {
+    val schema = StructType(Seq(StructField("a", LongType)))
+    val marked = new JsonCodec.EncodedRow(Array[Any](1L), schema,
+      "{\"cached\":true}".getBytes(StandardCharsets.UTF_8))
+    def text(rows: Seq[Row], s: StructType) = new String(JsonCodec.rowsJson(rows, s), StandardCharsets.UTF_8)
+    assert(text(Seq(marked, marked), schema) === """[{"cached":true},{"cached":true}]""")
+    assert(text(Seq(marked, Row(2L)), schema) === """[{"a":1},{"a":2}]""")
+    assert(text(Seq(marked), StructType(schema.fields.clone())) === """[{"a":1}]""")
+    assert(text(Nil, schema) === "[]")
+  }
+
   test("Spark's JSON reader (EngineLog.demux) reads a written cycle back to the rows written") {
     val schema = StructType(Seq(StructField("k", LongType, nullable = false)) ++
       Seq(StringType, LongType, IntegerType, DoubleType, FloatType, BooleanType, TimestampType,

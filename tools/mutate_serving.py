@@ -221,6 +221,21 @@ MUTANTS = [
      "    if (checkpointDir.isEmpty && !distributedState) graft.core.Scratch.release(checkpointRoot)\n",
      "",
      "stop() leaves the runtime's own checkpoint dir behind until the end-of-run sweep"),
+    ("s36_frontier_replaced_key_old_bytes", CR,
+     "        val r = JsonCodec.encoded(collected, schema)\n",
+     "        val prior = byKey.get(k)\n"
+     "        val r = if (prior == null) JsonCodec.encoded(collected, schema)\n"
+     "          else new JsonCodec.EncodedRow(collected.toSeq.toArray, schema,\n"
+     "            prior.asInstanceOf[JsonCodec.EncodedRow].utf8)\n",
+     "a replaced frontier key keeps its old bytes: state reads serve the previous row"),
+    ("s37_splice_schema_guard_dropped", JC,
+     "    if (rows.forall { case e: EncodedRow => e.schema eq schema; case _ => false }) spliced(rows)\n",
+     "    if (rows.forall { case _: EncodedRow => true; case _ => false }) spliced(rows)\n",
+     "rowsJson splices cached row bytes under any schema: a response keeps the field names they were encoded with"),
+    ("s38_sse_queue_unbounded", GW,
+     "    val queue = new java.util.concurrent.LinkedBlockingQueue[Array[Byte]](Gateway.EgressQueueFrames)\n",
+     "    val queue = new java.util.concurrent.LinkedBlockingQueue[Array[Byte]]\n",
+     "the SSE queue has no bound: a client that never reads buffers frames without limit"),
 ]
 
 # Prefilter: serving-focused suites, most likely to see these bugs.
